@@ -1,50 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // Shuffle/spill accounting: wall-clock on a shared host is noisy
     // (round-7 cost a full forensics pass on one 16.88s outlier that
     // was pure cache pollution); bytes moved are noise-immune and the
-    // metric that actually predicts 100 TB behavior. One listener
-    // accumulates task metrics; the bus is drained before each
-    // per-query snapshot so attribution windows don't leak.
-    object M extends org.apache.spark.scheduler.SparkListener {
-      val sr = new java.util.concurrent.atomic.AtomicLong
-      val sw = new java.util.concurrent.atomic.AtomicLong
-      val spd = new java.util.concurrent.atomic.AtomicLong
-      val spm = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spd.addAndGet(m.diskBytesSpilled)
-          spm.addAndGet(m.memoryBytesSpilled)
-        }
-      }
-      def snap(): Seq[Long] = {
-        org.apache.spark.sql.GraftBridge.flushListenerBus(spark)
-        Seq(sr.get, sw.get, spd.get, spm.get)
-      }
-    }
-    spark.sparkContext.addSparkListener(M)
-    // warmup: touch every table once so parquet footer reads, codegen
-    // and executor spin-up don't land on whichever query runs first
-    Tables.names.foreach { n =>
-      try Tables.t(spark, sfDir, n).limit(1).count()
-      catch { case _: Throwable => () }
-    }
+    // metric that actually predicts 100 TB behavior. Each run is
+    // recorded by QueryRun, which drains the listener bus around it so
+    // attribution windows don't leak.
+    Tables.warm(spark, sfDir)
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     // two timed repetitions per query, report the MIN: a single-shot
     // timing is hostage to GC pauses / host noise (observed 10x swings
@@ -54,8 +19,7 @@ object Bench {
     val REPS = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(2)
     // iteration aid: SPARK_GRAFT_ONLY=q1,q2 times just those queries
     // (same convention as Verify); unset = the full registry
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.select(_).toSet)
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None        => SparkEntry.queries
@@ -72,10 +36,9 @@ object Bench {
       try s.filter(p => p.getFileName.toString.startsWith("graft-staged")).count()
       finally s.close()
     }
-    val metrics = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
+    val metrics = scala.collection.mutable.LinkedHashMap.empty[String, QueryRun]
     val stagedIn = scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
     val results = selected.map { case (name, fn) =>
-      var m0 = M.snap()
       val stagedBefore = stagedDirCount()
       // in-memory memo builds (trained centers, codebooks, collected
       // query vectors) are one-time costs exactly like disk-staged
@@ -83,7 +46,7 @@ object Bench {
       // counter makes them set the same staged_rep1 flag (round-18
       // verdict: memo hits must be visible to staging attribution)
       val memoBefore = Memo.misses
-      def runOnce(): Double = {
+      def runOnce(): (Double, QueryRun) = QueryRun.record(spark) {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() }
         catch { case e: Throwable =>
@@ -102,12 +65,8 @@ object Bench {
       val first = runOnce()
       val staged = stagedDirCount() > stagedBefore || Memo.misses > memoBefore
       val steadyReps = if (staged) REPS else REPS - 1
-      val times = first +: (1 to steadyReps).map { rep =>
-        // snapshot before the LAST rep only — the final rep is the
-        // steady-state bytes the artifact should carry
-        if (rep == steadyReps) m0 = M.snap()
-        runOnce()
-      }
+      val runs = first +: (1 to steadyReps).map(_ => runOnce())
+      val times = runs.map(_._1)
       val timed = if (staged && times.size > 1) times.tail else times
       // leftover cached frames from a query that errored mid-flight (or
       // a future query that forgets to release) would tax every LATER
@@ -117,15 +76,17 @@ object Bench {
       // reps nothing is cleared, and the disk-staged index tables are
       // untouched (they are parquet reads, not cache entries).
       spark.catalog.clearCache()
-      metrics(name) = M.snap().zip(m0).map { case (a, b) => a - b }
+      // the LAST rep's bytes are the steady-state bytes the artifact carries
+      metrics(name) = runs.last._2
       stagedIn(name) = staged
       name -> timed.min
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val ms = metrics.map { case (k, Seq(r, w, d, m)) =>
-      s"\"$k\":{\"shuffle_read\":$r,\"shuffle_write\":$w,\"spill_disk\":$d," +
-        s"\"spill_mem\":$m,\"staged_rep1\":${stagedIn.getOrElse(k, false)}}"
+    val ms = metrics.map { case (k, r) =>
+      s"\"$k\":{\"shuffle_read\":${r.shuffleRead},\"shuffle_write\":${r.shuffleWrite}," +
+        s"\"spill_disk\":${r.spillDisk},\"spill_mem\":${r.spillMem}," +
+        s"\"staged_rep1\":${stagedIn.getOrElse(k, false)}}"
     }.mkString("{", ",", "}")
     val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -144,9 +105,9 @@ object Bench {
     // total, errors, the 10 slowest queries, and the full-file pointer.
     val top = results.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
-    val topShuffle = metrics.toSeq.sortBy(-_._2.take(2).sum).take(5)
-      .map { case (k, Seq(r, w, _, _)) =>
-        s"\"$k\":\"${(r + w) / 1024}KB\"" }.mkString("{", ",", "}")
+    val topShuffle = metrics.toSeq.sortBy(r => -(r._2.shuffleRead + r._2.shuffleWrite)).take(5)
+      .map { case (k, r) =>
+        s"\"$k\":\"${(r.shuffleRead + r.shuffleWrite) / 1024}KB\"" }.mkString("{", ",", "}")
     val summary =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"slowest":$top,"top_shufflers":$topShuffle,"errors":$errs,"reps":$REPS,"sf":"$sfDir","full":"$outFile"}"""
     // The compact summary must survive ANY harness capture policy:

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 import graft.clustering.{GKA, KMeans, PSO, Points}
@@ -49,16 +48,7 @@ object Main {
       System.err.println(usage); sys.exit(2)
     }
     val algo = args(0)
-    val spark = SparkSession.builder()
-      .config(new SparkConf().setIfMissing("spark.master", "local[*]")
-        .setIfMissing("spark.sql.shuffle.partitions",
-          Runtime.getRuntime.availableProcessors().toString)
-        // instant-preserving events reads (Tables.t NTZ cast) require UTC
-        .setIfMissing("spark.sql.session.timeZone", "UTC")
-        .setIfMissing("spark.sql.extensions", "graft.functions.GraftExtensions"))
-      .appName(s"graft-$algo")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     try {
       if (algo == "clean") cleanRun(spark, args(1), args(2))
       else if (algo == "report") reportRun(spark, args(1), args(2))

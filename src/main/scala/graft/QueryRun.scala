@@ -1,0 +1,102 @@
+package graft
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd, StageInfo}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+
+/** The jobs and stages one piece of driver code ran; see [[QueryRun.record]]. */
+final case class QueryRun(jobs: Seq[QueryRun.Job], stages: Seq[QueryRun.Stage]) {
+  def shuffleRead: Long = stages.map(_.shuffleRead).sum
+  def shuffleWrite: Long = stages.map(_.shuffleWrite).sum
+  def spillDisk: Long = stages.map(_.spillDisk).sum
+  def spillMem: Long = stages.map(_.spillMem).sum
+}
+
+object QueryRun {
+
+  /** One job. `end` is 0 if the job had not ended; `callSite` is the
+    * innermost graft frame outside the tools and this recorder, else the
+    * name of the job's last stage. */
+  final case class Job(id: Int, group: Option[String], start: Long, end: Long,
+                       stageIds: Seq[Int], callSite: String) {
+    def durationMs: Long = if (end > 0) end - start else -1L
+  }
+
+  /** One stage, in submission order. `durationMs` runs from submission
+    * to completion (-1 if it did not complete); the byte counts are sums
+    * over the stage's ended tasks. */
+  final case class Stage(id: Int, name: String, durationMs: Long, tasks: Int,
+                         shuffleRead: Long, shuffleWrite: Long,
+                         spillDisk: Long, spillMem: Long)
+
+  /** Run `body` with one listener attached and return what it recorded.
+    * The listener bus is drained before the listener is added, so earlier
+    * work cannot leak in, and again before it is removed, so every event
+    * of `body`'s own jobs has arrived. */
+  def record[T](spark: SparkSession)(body: => T): (T, QueryRun) = {
+    val l = new Recorder
+    GraftBridge.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val v = body
+      GraftBridge.flushListenerBus(spark)
+      (v, l.result())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def callSite(infos: Seq[StageInfo]): String = infos.lastOption.fold("") { s =>
+    s.details.linesIterator.find(l => l.contains("graft.") &&
+      !l.contains("graft.tools.") && !l.contains("graft.QueryRun")).getOrElse(s.name)
+  }
+
+  private final class StageAcc {
+    var info: Option[StageInfo] = None
+    var read, write, disk, mem = 0L
+  }
+
+  private final class Recorder extends SparkListener {
+    private val jobs = mutable.LinkedHashMap.empty[Int, Job]
+    private val stages = mutable.LinkedHashMap.empty[Int, StageAcc]
+
+    private def stage(id: Int): StageAcc = stages.getOrElseUpdate(id, new StageAcc)
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      val group = Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      jobs(j.jobId) = Job(j.jobId, group, j.time, 0L, j.stageIds, callSite(j.stageInfos))
+    }
+
+    override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
+      jobs.get(j.jobId).foreach(job => jobs(j.jobId) = job.copy(end = j.time))
+    }
+
+    override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = synchronized {
+      stage(s.stageInfo.stageId).info = Some(s.stageInfo)
+    }
+
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = synchronized {
+      stage(s.stageInfo.stageId).info = Some(s.stageInfo)
+    }
+
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
+      val m = t.taskMetrics
+      if (m != null) {
+        val s = stage(t.stageId)
+        s.read += m.shuffleReadMetrics.totalBytesRead
+        s.write += m.shuffleWriteMetrics.bytesWritten
+        s.disk += m.diskBytesSpilled
+        s.mem += m.memoryBytesSpilled
+      }
+    }
+
+    def result(): QueryRun = synchronized {
+      QueryRun(jobs.values.toSeq, stages.toSeq.map { case (id, s) =>
+        val dur = (for (i <- s.info; a <- i.submissionTime; b <- i.completionTime)
+          yield b - a).getOrElse(-1L)
+        Stage(id, s.info.fold("")(_.name), dur, s.info.fold(0)(_.numTasks),
+          s.read, s.write, s.disk, s.mem)
+      })
+    }
+  }
+}

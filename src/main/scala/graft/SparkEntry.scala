@@ -2,10 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Aggregates every operator module's `queries` / `oracleSql` maps into
-  * the single registry the driver's correctness + bench machinery runs.
+/** One operator module's share of the registry. */
+trait Registry {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  def oracleSql: Map[String, String]
+}
+
+/** The query registry (SURVEY.md §7): every operator module's `queries`
+  * / `oracleSql` maps folded into the one registry that Verify, Bench
+  * and the tools run.
   */
 object SparkEntry {
 
@@ -13,171 +21,116 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     relational.Relational.q1Agg(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    relational.Relational.queries ++
-      relational.TpchClosure.queries ++
-      relational.Did.queries ++
-      relational.Benford.queries ++
-      relational.Hll.queries ++
-      relational.Inequality.queries ++
-      relational.Survival.queries ++
-      relational.Growth.queries ++
-      relational.Sequencing.queries ++
-      relational.Anova.queries ++
-      relational.SlidingUniques.queries ++
-      relational.Ivm.queries ++
-      relational.Audit.queries ++
-      relational.Cuped.queries ++
-      relational.Power.queries ++
-      relational.KsTest.queries ++
-      relational.AttributionCompare.queries ++
-      relational.FunnelAb.queries ++
-      relational.Analytics.queries ++
-      relational.UserHhi.queries ++
-      relational.MarkovBacktest.queries ++
-      relational.ChapmanKolmogorov.queries ++
-      relational.BasketRules.queries ++
-      relational.Stickiness.queries ++
-      relational.Graph.queries ++
-      relational.CountMin.queries ++
-      clustering.KMeans.queries ++
-      clustering.MiniBatch.queries ++
-      clustering.MLlibBridge.queries ++
-      clustering.GKA.queries ++
-      clustering.PSO.queries ++
-      clustering.Density.queries ++
-      dedup.Dedup.queries ++
-      dedup.Bloom.queries ++
-      dedup.Incremental.queries ++
-      dedup.PrefixJoin.queries ++
-      dedup.Cdc.queries ++
-      dedup.LongestSpan.queries ++
-      dedup.DecontaminateMatrix.queries ++
-      dedup.ReleaseGate.queries ++
-      search.SimSearch.queries ++
-      search.RandomProjection.queries ++
-      search.Quantized.queries ++
-      search.PQ.queries ++
-      search.IvfPq.queries ++
-      search.Spectrum.queries ++
-      search.Whiten.queries ++
-      search.IvfIncremental.queries ++
-      search.KnnEval.queries ++
-      search.RankEval.queries ++
-      search.Outliers.queries ++
-      search.Prf.queries ++
-      search.PcaScatter.queries ++
-      search.Drift.queries ++
-      search.Isotropy.queries ++
-      text.TextAnalysis.queries ++
-      text.Encoding.queries ++
-      text.LengthStats.queries ++
-      text.Winnowing.queries ++
-      text.Rake.queries ++
-      text.Burstiness.queries ++
-      text.Heaps.queries ++
-      text.Watermark.queries ++
-      text.Coverage.queries ++
-      text.Bpe.queries ++
-      text.C4Rules.queries ++
-      text.Pii.queries ++
-      text.QualityClf.queries ++
-      text.Repetition.queries ++
-      text.CorpusStats.queries ++
-      text.SourceOverlap.queries ++
-      multimodal.Multimodal.queries ++
-      pipeline.CleanCorpus.queries ++
-      pipeline.Splits.queries ++
-      pipeline.Mix.queries ++
-      pipeline.Assembly.queries ++
-      pipeline.Upsert.queries ++
-      pipeline.Forget.queries ++
-      pipeline.ReleaseDiff.queries ++
-      pipeline.Interleave.queries ++
-      pipeline.DataChecks.queries
+  /** One entry per operator module from SURVEY.md §2. */
+  val modules: Seq[Registry] = Seq(
+    relational.Relational,
+    relational.TpchClosure,
+    relational.Did,
+    relational.Benford,
+    relational.Hll,
+    relational.Inequality,
+    relational.Survival,
+    relational.Growth,
+    relational.Sequencing,
+    relational.Anova,
+    relational.SlidingUniques,
+    relational.Ivm,
+    relational.Audit,
+    relational.Cuped,
+    relational.Power,
+    relational.KsTest,
+    relational.AttributionCompare,
+    relational.FunnelAb,
+    relational.Analytics,
+    relational.UserHhi,
+    relational.MarkovBacktest,
+    relational.ChapmanKolmogorov,
+    relational.BasketRules,
+    relational.Stickiness,
+    relational.Graph,
+    relational.CountMin,
+    clustering.KMeans,
+    clustering.MiniBatch,
+    clustering.MLlibBridge,
+    clustering.GKA,
+    clustering.PSO,
+    clustering.Density,
+    dedup.Dedup,
+    dedup.Bloom,
+    dedup.Incremental,
+    dedup.PrefixJoin,
+    dedup.Cdc,
+    dedup.LongestSpan,
+    dedup.DecontaminateMatrix,
+    dedup.ReleaseGate,
+    search.SimSearch,
+    search.RandomProjection,
+    search.Quantized,
+    search.PQ,
+    search.IvfPq,
+    search.Spectrum,
+    search.Whiten,
+    search.IvfIncremental,
+    search.KnnEval,
+    search.RankEval,
+    search.Outliers,
+    search.Prf,
+    search.PcaScatter,
+    search.Drift,
+    search.Isotropy,
+    text.TextAnalysis,
+    text.Encoding,
+    text.LengthStats,
+    text.Winnowing,
+    text.Rake,
+    text.Burstiness,
+    text.Heaps,
+    text.Watermark,
+    text.Coverage,
+    text.Bpe,
+    text.C4Rules,
+    text.Pii,
+    text.QualityClf,
+    text.Repetition,
+    text.CorpusStats,
+    text.SourceOverlap,
+    multimodal.Multimodal,
+    pipeline.CleanCorpus,
+    pipeline.Splits,
+    pipeline.Mix,
+    pipeline.Assembly,
+    pipeline.Upsert,
+    pipeline.Forget,
+    pipeline.ReleaseDiff,
+    pipeline.Interleave,
+    pipeline.DataChecks)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    relational.Relational.oracleSql ++
-      relational.TpchClosure.oracleSql ++
-      relational.Did.oracleSql ++
-      relational.Benford.oracleSql ++
-      relational.Hll.oracleSql ++
-      relational.Inequality.oracleSql ++
-      relational.Survival.oracleSql ++
-      relational.Growth.oracleSql ++
-      relational.Sequencing.oracleSql ++
-      relational.Anova.oracleSql ++
-      relational.SlidingUniques.oracleSql ++
-      relational.Ivm.oracleSql ++
-      relational.Audit.oracleSql ++
-      relational.Cuped.oracleSql ++
-      relational.Power.oracleSql ++
-      relational.KsTest.oracleSql ++
-      relational.AttributionCompare.oracleSql ++
-      relational.FunnelAb.oracleSql ++
-      relational.Analytics.oracleSql ++
-      relational.UserHhi.oracleSql ++
-      relational.MarkovBacktest.oracleSql ++
-      relational.ChapmanKolmogorov.oracleSql ++
-      relational.BasketRules.oracleSql ++
-      relational.Stickiness.oracleSql ++
-      relational.Graph.oracleSql ++
-      relational.CountMin.oracleSql ++
-      clustering.KMeans.oracleSql ++
-      clustering.MiniBatch.oracleSql ++
-      clustering.GKA.oracleSql ++
-      clustering.PSO.oracleSql ++
-      clustering.Density.oracleSql ++
-      dedup.Dedup.oracleSql ++
-      dedup.Bloom.oracleSql ++
-      dedup.Incremental.oracleSql ++
-      dedup.PrefixJoin.oracleSql ++
-      dedup.Cdc.oracleSql ++
-      dedup.LongestSpan.oracleSql ++
-      dedup.DecontaminateMatrix.oracleSql ++
-      dedup.ReleaseGate.oracleSql ++
-      search.SimSearch.oracleSql ++
-      search.RandomProjection.oracleSql ++
-      search.Quantized.oracleSql ++
-      search.PQ.oracleSql ++
-      search.IvfPq.oracleSql ++
-      search.Spectrum.oracleSql ++
-      search.Whiten.oracleSql ++
-      search.IvfIncremental.oracleSql ++
-      search.KnnEval.oracleSql ++
-      search.RankEval.oracleSql ++
-      search.Outliers.oracleSql ++
-      search.Prf.oracleSql ++
-      search.PcaScatter.oracleSql ++
-      search.Drift.oracleSql ++
-      search.Isotropy.oracleSql ++
-      text.TextAnalysis.oracleSql ++
-      text.Encoding.oracleSql ++
-      text.LengthStats.oracleSql ++
-      text.Winnowing.oracleSql ++
-      text.Rake.oracleSql ++
-      text.Burstiness.oracleSql ++
-      text.Heaps.oracleSql ++
-      text.Watermark.oracleSql ++
-      text.Coverage.oracleSql ++
-      text.Bpe.oracleSql ++
-      text.C4Rules.oracleSql ++
-      text.Pii.oracleSql ++
-      text.QualityClf.oracleSql ++
-      text.Repetition.oracleSql ++
-      text.CorpusStats.oracleSql ++
-      text.SourceOverlap.oracleSql ++
-      multimodal.Multimodal.oracleSql ++
-      pipeline.CleanCorpus.oracleSql ++
-      pipeline.Splits.oracleSql ++
-      pipeline.Mix.oracleSql ++
-      pipeline.Assembly.oracleSql ++
-      pipeline.Upsert.oracleSql ++
-      pipeline.Forget.oracleSql ++
-      pipeline.ReleaseDiff.oracleSql ++
-      pipeline.Interleave.oracleSql ++
-      pipeline.DataChecks.oracleSql
+  /** A module object's name, e.g. `relational.Growth`. */
+  def name(m: Registry): String =
+    m.getClass.getName.stripPrefix("graft.").stripSuffix("$")
+
+  /** The modules' maps as one map; a key two modules register fails. */
+  private def fold[V](part: Registry => Map[String, V]): Map[String, V] =
+    modules.foldLeft(Map.empty[String, (Registry, V)]) { (acc, m) =>
+      part(m).foldLeft(acc) { case (a, (k, v)) =>
+        a.get(k).foreach { case (first, _) =>
+          throw new IllegalStateException(
+            s"registry key $k is registered by both ${name(first)} and ${name(m)}")
+        }
+        a.updated(k, (m, v))
+      }
+    }.map { case (k, (_, v)) => k -> v }
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = fold(_.queries)
+
+  lazy val oracleSql: Map[String, String] = fold(_.oracleSql)
+
+  /** The registry keys in a comma-separated list, trimmed, blanks
+    * dropped; an unknown name fails loudly. */
+  def select(list: String): Seq[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    names
+  }
 }

@@ -25,8 +25,8 @@ object Tables {
     * making the conversions instant-preserving):
     *  - TIMESTAMP(NANOS) parquet, which Spark's vectorized reader only
     *    accepts as a raw long under
-    *    spark.sql.legacy.parquet.nanosAsLong=true (Verify/Bench set
-    *    it); integer `div` converts to micros with full precision
+    *    spark.sql.legacy.parquet.nanosAsLong=true (graft.Session
+    *    sets it); integer `div` converts to micros with full precision
     *    (nanos ~1.7e18 exceed a double's 2^53);
     *  - TIMESTAMP(MICROS) with isAdjustedToUTC=false, which Spark
     *    reads natively as TIMESTAMP_NTZ — cast to TimestampType so
@@ -127,6 +127,15 @@ object Tables {
   def docsSpread(spark: SparkSession, dir: String): DataFrame =
     spreadIfNeeded(spark, dir, "documents",
       t(spark, dir, "documents"), Some("doc_id"))
+
+  /** Read one row of every table, so parquet footer reads, codegen and
+    * executor start-up do not land on whichever query runs first. A
+    * table the dir lacks is skipped. */
+  def warm(spark: SparkSession, dir: String): Unit =
+    names.foreach { n =>
+      try t(spark, dir, n).limit(1).count()
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val read = spark.read.parquet(s"$dir/$name.parquet")

@@ -1,21 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     // Freshness handshake (round-14): one run id, stamped into the
     // output root AND into every query dir this run (re)writes, so a
@@ -27,7 +17,7 @@ object Verify {
         .replaceAll("[^A-Za-z0-9]", "")
     // optional comma-separated allowlist for fast targeted reruns
     // (builder-side tool; the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.select(_).toSet)
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.contains(name))
     }

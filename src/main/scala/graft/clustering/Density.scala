@@ -24,7 +24,7 @@ import graft.Tables.t
   * under-merge long cell chains), with data never leaving executors.
   * The oracle mirrors the exact components with a recursive CTE.
   */
-object Density {
+object Density extends graft.Registry {
 
   private val QTY_W = 5.0 // cell width in l_quantity
   private val PRICE_W = 5000.0 // cell width in l_extendedprice

@@ -23,7 +23,7 @@ import org.apache.spark.sql.expressions.Window
   *    Roulette.pickByPrefix (no single-partition window) — and flip
   *    it to a random class.
   */
-object GKA {
+object GKA extends graft.Registry {
   import Points.{dims, distTo}
 
   val K = 4

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * and the oracle side, so cross-engine float summation order cannot
   * drift the trajectories apart (SURVEY.md §4).
   */
-object KMeans {
+object KMeans extends graft.Registry {
   import Points.{dims, distTo, ptsSql}
 
   /** Add `k` (nearest-center index, ties -> lowest k, matching the
@@ -864,48 +864,20 @@ object KMeans {
     * iteration: the SSE term is folded into the centroid groupBy so
     * the K-distance projection is evaluated once.
     *
-    * map/reduce wall times come from a per-run SparkListener over
+    * map/reduce wall times come from each iteration's QueryRun over
     * completed stages — the assign + partial-aggregate stage WRITES
     * shuffle (the reference's map phase, kmeans.java map_t), the
-    * final-merge stage READS it (reduce_t); the bus is flushed before
-    * each per-iteration snapshot so windows don't leak (the Bench
-    * listener discipline). Tuple: (iter, sse, best, map_ms,
-    * reduce_ms, iter_ms). */
+    * final-merge stage READS it (reduce_t). Tuple: (iter, sse, best,
+    * map_ms, reduce_ms, iter_ms). */
   def metricsRun(points: DataFrame, k: Int, iters: Int,
                  ds: Seq[String] = dims,
                  init: DataFrame => Array[Array[Double]] = null)
       : Seq[(Int, Double, Double, Long, Long, Long)] = {
     val spark = points.sparkSession
     // stages are attributed via a job group: anything ELSE running on
-    // the shared SparkContext between snapshots (concurrent suites,
+    // the shared SparkContext during an iteration (concurrent suites,
     // harness bookkeeping) must not land in this run's map/reduce time
     val jobGroup = s"graft-kmeans-metrics-${System.nanoTime()}"
-    object L extends org.apache.spark.scheduler.SparkListener {
-      val mapMs = new java.util.concurrent.atomic.AtomicLong
-      val redMs = new java.util.concurrent.atomic.AtomicLong
-      private val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-          jobGroup == j.properties.getProperty("spark.jobGroup.id"))
-          j.stageIds.foreach(id => { ours.add(id); () })
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val info = s.stageInfo
-        if (ours.contains(info.stageId)) {
-          val dur = (for (a <- info.submissionTime; b <- info.completionTime)
-            yield b - a).getOrElse(0L)
-          val reads = info.taskMetrics != null &&
-            info.taskMetrics.shuffleReadMetrics.totalBytesRead > 0
-          (if (reads) redMs else mapMs).addAndGet(dur)
-        }
-      }
-      def snap(): (Long, Long) = {
-        org.apache.spark.sql.GraftBridge.flushListenerBus(spark)
-        (mapMs.get, redMs.get)
-      }
-    }
-    spark.sparkContext.addSparkListener(L)
     spark.sparkContext.setJobGroup(jobGroup,
       "kmeans metricsRun per-iteration stage timing", interruptOnCancel = false)
     val pts = points.cache()
@@ -917,28 +889,30 @@ object KMeans {
         .empty[(Int, Double, Double, Long, Long, Long)]
       for (iter <- 1 to iters) {
         val t0 = System.nanoTime()
-        val (m0, r0) = L.snap()
-        val rows = assign(pts, centers, ds)
-          .groupBy("k")
-          .agg(count(lit(1)).as("n"),
-            ds.zipWithIndex.map { case (d, i) =>
-              round(avg(col(d)), 6).as(s"c${i + 1}")
-            } :+ sum(col("dist")).as("sse_part"): _*)
-          .collect()
+        val (rows, run) = graft.QueryRun.record(spark) {
+          assign(pts, centers, ds)
+            .groupBy("k")
+            .agg(count(lit(1)).as("n"),
+              ds.zipWithIndex.map { case (d, i) =>
+                round(avg(col(d)), 6).as(s"c${i + 1}")
+              } :+ sum(col("dist")).as("sse_part"): _*)
+            .collect()
+        }
+        val ours = run.jobs.filter(_.group.contains(jobGroup)).flatMap(_.stageIds).toSet
+        val (reduce, map) = run.stages.filter(s => ours(s.id)).partition(_.shuffleRead > 0)
         val sse = rows.map(_.getAs[Double]("sse_part")).sum
         if (sse < best) best = sse
         val byK = rows.map(r => r.getAs[Int]("k") ->
           ds.indices.map(i => r.getDouble(2 + i)).toArray).toMap
         centers = Array.tabulate(k)(i => byK.getOrElse(i, centers(i)))
-        val (m1, r1) = L.snap()
-        out += ((iter, sse, best, m1 - m0, r1 - r0,
+        out += ((iter, sse, best, map.map(_.durationMs max 0L).sum,
+          reduce.map(_.durationMs max 0L).sum,
           (System.nanoTime() - t0) / 1000000L))
       }
       out.toSeq
     } finally {
       points.unpersist()
       spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(L)
     }
   }
 

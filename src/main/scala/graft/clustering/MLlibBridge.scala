@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * library surface interoperates with spark.ml pipelines. Seeded but
   * init is k-means|| (randomized), so registered rows-only.
   */
-object MLlibBridge {
+object MLlibBridge extends graft.Registry {
 
   def qKmeansMllib(spark: SparkSession, dir: String): DataFrame = {
     // spread the point set across the session's cores before the fit:

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *
   * Reference: vkmouse/Spark_clustering kmeans.java full-pass loop —
   * this is the published mini-batch variant of the same objective. */
-object MiniBatch {
+object MiniBatch extends graft.Registry {
   import Points.{dims, ptsSql}
 
   private val K = 4

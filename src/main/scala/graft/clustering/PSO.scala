@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * implement the standard w*v + c1*r1*(pbest-x) + c2*r2*(gbest-x)
   * with the same velocity clamp.
   */
-object PSO {
+object PSO extends graft.Registry {
   import Points.{dims, distTo}
 
   val K = 4

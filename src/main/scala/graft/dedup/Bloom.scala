@@ -29,7 +29,7 @@ import Dedup.grams
   * that power its runtime join filtering), driven through the same
   * Column bridge as the library's native expressions.
   */
-object Bloom {
+object Bloom extends graft.Registry {
 
   private def xx(c: Column): XxHash64 = new XxHash64(Seq(GraftBridge.expression(c)))
 

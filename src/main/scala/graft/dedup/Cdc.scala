@@ -27,7 +27,7 @@ import graft.Tables.t
   * hash array — the Winnowing O(n^2) guard), one explode to
   * corpus-linear chunk instances, one groupBy on the chunk key + one
   * broadcast-size source rollup. */
-object Cdc {
+object Cdc extends graft.Registry {
 
   private val W = 8    // rolling window (chars)
   private val DIV = 32 // boundary divisor -> expected chunk ~32 chars

@@ -43,7 +43,7 @@ import graft.pipeline.Splits.nibbleHashSql
   * the embed leg broadcasts the bounded bench vectors, the sampled
   * exact leg explodes 1/4 of the corpus; the matrix itself is
   * bench-bounded rollups joined on a |bench|-row spine. */
-object DecontaminateMatrix {
+object DecontaminateMatrix extends graft.Registry {
 
   /** The decontamination family's shared bench delineation — ONE val
     * interpolated into both engines (advice r16: the oracle used to

@@ -13,7 +13,7 @@ import graft.functions.VectorOps
   * come ONLY from LSH band buckets or sign buckets (equi-joins on
   * bucket keys); there is no all-pairs CartesianProduct anywhere.
   */
-object Dedup {
+object Dedup extends graft.Registry {
 
   /** The Unicode-normalized text fragment every shingle path hashes —
     * Spark-SQL form (for the expr-string HOFs; evaluated once per row,

@@ -23,7 +23,7 @@ import graft.Tables.t
   * on the hash key so tomorrow's batch joins without a corpus-side
   * shuffle; the batch-internal window shuffles just the batch.
   */
-object Incremental {
+object Incremental extends graft.Registry {
 
   /** Same 0..4095 md5-nibble row hash as Splits (inlined SQL so the
     * oracle mirrors it verbatim). */

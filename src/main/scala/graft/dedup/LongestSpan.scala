@@ -57,7 +57,7 @@ import graft.Tables.t
   * (zero shuffle), hash-key census, CAP-bounded match join, then
   * bounded window passes partitioned by (doc, partner, offset) or
   * (doc); never a global window. */
-object LongestSpan {
+object LongestSpan extends graft.Registry {
 
   private val WIDTH = 64
   private val STRIDE = 8

@@ -26,7 +26,7 @@ import graft.Tables.t
   * prefix token; verification joins the (small) candidate set back to
   * the word sets by id. No CartesianProduct anywhere.
   */
-object PrefixJoin {
+object PrefixJoin extends graft.Registry {
 
   // tau as a RATIONAL (4/5 = 0.8) so the prefix-length ceiling is
   // exact integer arithmetic on both engines

@@ -30,7 +30,7 @@ import graft.Tables.t
   * bench-vector leg, the staged span match frame); the drop set anti-join
   * moves only (doc_id, source, subtok) rows and lets AQE broadcast
   * the (sparse-in-practice) flagged side. */
-object ReleaseGate {
+object ReleaseGate extends graft.Registry {
 
   /** Subtoken estimate shared with the Mix family: ceil(word/4). */
   private val SUBTOK =

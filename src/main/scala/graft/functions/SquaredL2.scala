@@ -307,6 +307,9 @@ case class SquaredL2Prefix(first: Expression, second: Expression, third: Express
 case class L2DistArr(child: Expression, centers: Array[Array[Double]])
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with Serializable {
 
+  require(centers.nonEmpty && centers.forall(_.length == centers.head.length),
+    "l2_dist_arr needs at least one center, all of one dimension")
+
   private val kk = centers.length
   private val nd = centers.head.length
 
@@ -393,6 +396,16 @@ case class L2DistArr(child: Expression, centers: Array[Array[Double]])
          |}
        """.stripMargin
     })
+
+  /** Equality over the flattened centers, not the arrays' identity, so
+    * two instances built from equal centers are semantically equal
+    * (subexpression elimination, exchange reuse). */
+  override def equals(other: Any): Boolean = other match {
+    case o: L2DistArr => child == o.child && kk == o.kk && java.util.Arrays.equals(flat, o.flat)
+    case _ => false
+  }
+
+  override def hashCode(): Int = 31 * child.hashCode() + java.util.Arrays.hashCode(flat)
 
   override protected def withNewChildInternal(newChild: Expression): L2DistArr =
     copy(child = newChild)

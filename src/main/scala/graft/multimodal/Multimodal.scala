@@ -16,7 +16,7 @@ import graft.Tables.t
   * codecs (JPEG audio/video) would slot into the same mapPartitions
   * batch shape with a per-partition codec context.
   */
-object Multimodal {
+object Multimodal extends graft.Registry {
 
   /** A media object: opaque bytes + declared container format. */
   case class MediaRecord(doc_id: Long, format: String, payload: Array[Byte])

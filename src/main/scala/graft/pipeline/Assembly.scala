@@ -19,7 +19,7 @@ import graft.Tables.t
   *   At 100 TB both sides bucket on that id and the join is
   *   shuffle-free; here Catalyst picks the join strategy.
   */
-object Assembly {
+object Assembly extends graft.Registry {
 
   def qEventSequences(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "events")

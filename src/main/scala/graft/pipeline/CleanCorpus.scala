@@ -17,7 +17,7 @@ import graft.dedup.Dedup
   *
   * Fully deterministic, so the whole composition is oracled in SQL.
   */
-object CleanCorpus {
+object CleanCorpus extends graft.Registry {
 
   /** DataFrame-parametric core over ANY (doc_id, text) corpus — the
     * same chain runs on the testdata documents table or a JSONL ingest

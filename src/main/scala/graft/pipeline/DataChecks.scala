@@ -19,7 +19,7 @@ import graft.Tables.t
   * long reshape explodes a literal struct array over the 1-row
   * aggregate.
   */
-object DataChecks {
+object DataChecks extends graft.Registry {
 
   private val MIN_QTY = 1.0
 

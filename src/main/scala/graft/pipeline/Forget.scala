@@ -25,7 +25,7 @@ import graft.Tables.t
   * corpus (no full-table rewrite); the index propagation is one
   * groupBy over the content-hash key with conditional min aggregates —
   * the same shuffle the standing index build already pays. */
-object Forget {
+object Forget extends graft.Registry {
 
   private[pipeline] def forgetOf(docs: DataFrame): DataFrame = {
     val hashed = docs.select(col("doc_id"), col("source"),

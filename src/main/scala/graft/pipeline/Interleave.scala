@@ -22,7 +22,7 @@ import graft.Tables.t
   * Scale shape: one source-PARTITIONED rank window (distributed),
   * position arithmetic per row, a (10 x sources)-bounded census, and
   * cumulative sums over that bounded frame. */
-object Interleave {
+object Interleave extends graft.Registry {
 
   def qInterleave(spark: SparkSession, dir: String): DataFrame =
     interleaveOf(t(spark, dir, "documents").select("doc_id", "source"))

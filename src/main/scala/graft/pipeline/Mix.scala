@@ -16,7 +16,7 @@ import graft.pipeline.Splits.nibbleHashSql
   * here; a production run would join a tiny broadcast rate table
   * instead, the gate expression is unchanged.
   */
-object Mix {
+object Mix extends graft.Registry {
 
   /** Keep-rate percent per source parity: even-numbered sources are
     * "high-quality" domains kept at 75%, odd ones downsampled to 25%. */
@@ -172,13 +172,7 @@ object Mix {
     * padded to the global max) — the number that justifies bucketing.
     * One corpus pass, one tiny groupBy on a computed key; the global
     * row re-aggregates the bounded per-bucket frame, not the corpus. */
-  def qLengthBuckets(spark: SparkSession, dir: String): DataFrame =
-    lengthBucketsFull(spark, dir).drop("waste_micro")
-
-  /** The bucket frame with BOTH the exact waste micro-integer and its
-    * DOUBLE display form; [[qLengthBuckets]] and the round-17 probe
-    * ladder are column selections of this one frame. */
-  private def lengthBucketsFull(spark: SparkSession, dir: String): DataFrame = {
+  def qLengthBuckets(spark: SparkSession, dir: String): DataFrame = {
     val per = t(spark, dir, "documents")
       .withColumn("len",
         expr("aggregate(split(text, ' '), CAST(0 AS BIGINT), (a, w) -> a + ((length(w) + 3) div 4))"))
@@ -202,46 +196,21 @@ object Mix {
     // oracle mirror runs the identical formula in HUGEINT).
     per.unionByName(global)
       .withColumn("padded_tokens", col("n_docs") * col("max_len"))
-      .withColumn("waste_micro", expr(
-        """(2 * (padded_tokens - sum_tokens) * 1000000 + padded_tokens)
-          |  DIV (2 * padded_tokens)""".stripMargin))
       .withColumn("waste_frac", expr(
         """CAST((2 * (padded_tokens - sum_tokens) * 1000000 + padded_tokens)
           |     DIV (2 * padded_tokens) AS DOUBLE) / 1000000.0""".stripMargin))
   }
 
-  /** Round-17 per-column probe ladder (verdict-16 demand #1; mirrors
-    * the `orders_mom_growth` ladder in Growth.scala — the round-16
-    * byte-identical-twin experiment proved the driver's hash layer
-    * diverges on THIS output, so the ladder bisects WHICH column:
-    * p1 = the raw bucket aggregate, p2 = + padded_tokens (derived
-    * BIGINT), p3 = + waste_micro (the exact HALF_UP micro-INTEGER —
-    * waste_frac * 1e6 with no DOUBLE anywhere); the original adds the
-    * one derived DOUBLE. Retire once CORRECTNESS_r17 is read —
-    * tools/roundclose.sh enforces probe retirement). */
-  private def pBuckets(cols: String*): (SparkSession, String) => DataFrame =
-    (s, d) => lengthBucketsFull(s, d).select(cols.map(col): _*)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipeline_length_buckets" -> (qLengthBuckets _),
-    "pipeline_length_buckets_p1" ->
-      pBuckets("bucket_cap", "n_docs", "sum_tokens", "max_len"),
-    "pipeline_length_buckets_p2" ->
-      pBuckets("bucket_cap", "n_docs", "sum_tokens", "max_len",
-        "padded_tokens"),
-    "pipeline_length_buckets_p3" ->
-      pBuckets("bucket_cap", "n_docs", "sum_tokens", "max_len",
-        "padded_tokens", "waste_micro"),
     "pipeline_mix" -> (qMix _),
     "pipeline_token_budget" -> (qTokenBudget _),
     "pipeline_mix_temperature" -> (qMixTemperature _),
     "pipeline_source_cap" -> ((s: SparkSession, d: String) => qSourceCap(s, d)),
     "pipeline_weighted_sample" -> (qWeightedSample _))
 
-  /** Shared oracle CTE chain for the length-bucket family: the bucket
-    * aggregate plus BOTH derived forms; each probe SELECTs its ladder
-    * columns from the same `fin` frame. */
-  private val lengthBucketsCtes =
+  val oracleSql: Map[String, String] = Map(
+    "pipeline_length_buckets" ->
       s"""WITH d AS (SELECT CAST(list_sum(list_transform(string_split(text, ' '),
          |    w -> (len(w) + 3) // 4)) AS BIGINT) AS len FROM documents),
          |per AS (SELECT ${capSql("len")} AS bucket_cap,
@@ -251,36 +220,14 @@ object Mix {
          |allb AS (SELECT * FROM per
          |  UNION ALL
          |  SELECT -1, CAST(sum(n_docs) AS BIGINT), CAST(sum(sum_tokens) AS BIGINT),
-         |    max(max_len) FROM per),
-         |fin AS (SELECT bucket_cap, n_docs, sum_tokens, max_len,
+         |    max(max_len) FROM per)
+         |SELECT bucket_cap, n_docs, sum_tokens, max_len,
          |  n_docs * max_len AS padded_tokens,
-         |  CAST((2 * CAST(n_docs * max_len - sum_tokens AS HUGEINT) * 1000000
-         |        + (n_docs * max_len))
-         |       // (2 * CAST(n_docs * max_len AS HUGEINT)) AS BIGINT)
-         |    AS waste_micro,
          |  CAST((2 * CAST(n_docs * max_len - sum_tokens AS HUGEINT) * 1000000
          |        + (n_docs * max_len))
          |       // (2 * CAST(n_docs * max_len AS HUGEINT)) AS DOUBLE)
          |    / 1000000.0 AS waste_frac
-         |FROM allb)""".stripMargin
-
-  val oracleSql: Map[String, String] = Map(
-    "pipeline_length_buckets" ->
-      s"""$lengthBucketsCtes
-         |SELECT bucket_cap, n_docs, sum_tokens, max_len, padded_tokens,
-         |  waste_frac
-         |FROM fin""".stripMargin,
-    "pipeline_length_buckets_p1" ->
-      s"$lengthBucketsCtes\nSELECT bucket_cap, n_docs, sum_tokens, max_len FROM fin",
-    "pipeline_length_buckets_p2" ->
-      s"""$lengthBucketsCtes
-         |SELECT bucket_cap, n_docs, sum_tokens, max_len, padded_tokens
-         |FROM fin""".stripMargin,
-    "pipeline_length_buckets_p3" ->
-      s"""$lengthBucketsCtes
-         |SELECT bucket_cap, n_docs, sum_tokens, max_len, padded_tokens,
-         |  waste_micro
-         |FROM fin""".stripMargin,
+         |FROM allb""".stripMargin,
     "pipeline_mix_temperature" ->
       s"""WITH per AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
          |tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS t FROM per),

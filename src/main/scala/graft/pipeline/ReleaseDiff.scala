@@ -19,7 +19,7 @@ import graft.Tables.t
   *
   * Scale shape: one full-outer equi-join on doc_id (co-partitioned
   * hash shuffle both sides), then a source-bounded rollup. */
-object ReleaseDiff {
+object ReleaseDiff extends graft.Registry {
 
   def qReleaseDiff(spark: SparkSession, dir: String): DataFrame =
     releaseDiffOf(t(spark, dir, "documents").select("doc_id", "text", "source"))

@@ -14,7 +14,7 @@ import graft.Tables.t
   * computable identically in Spark and DuckDB (both have md5/instr/
   * substr; neither needs a hex-parse builtin).
   */
-object Splits {
+object Splits extends graft.Registry {
 
   /** 0..4095 from the first 3 hex nibbles of `hexExpr` (SQL string
     * already holding a lowercase hex digest column/expression). */

@@ -16,7 +16,7 @@ import graft.Tables.t
   * plan shows the history collapsing map-side); a window would instead
   * shuffle and sort EVERY version of every key.
   */
-object Upsert {
+object Upsert extends graft.Registry {
 
   /** Merge `updates` into `standing`: per key, the row with the
     * greatest version wins. Payload columns are everything except the

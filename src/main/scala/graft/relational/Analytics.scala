@@ -9,7 +9,7 @@ import graft.Tables.t
   * aggregates a training-data warehouse runs daily, each in its
   * scale-correct Spark shape and each oracled exactly against DuckDB.
   */
-object Analytics {
+object Analytics extends graft.Registry {
 
   /** Median/MAD anomaly gate per event type — the robust twin of the
     * z-score flagging (events_anomaly): a single wild value moves a

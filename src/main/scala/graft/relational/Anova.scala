@@ -22,7 +22,7 @@ import graft.Tables.t
   *
   * Scale shape: one scan into a k-row aggregate; everything after is
   * k-bounded arithmetic. */
-object Anova {
+object Anova extends graft.Registry {
 
   def qAnova(spark: SparkSession, dir: String): DataFrame =
     anovaOf(t(spark, dir, "lineitem")

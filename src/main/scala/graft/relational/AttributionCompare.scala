@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the two upstream reductions (each one corpus pass),
   * then joins/windows over the <=|channels| frame. */
-object AttributionCompare {
+object AttributionCompare extends graft.Registry {
 
   def qAttributionCompare(spark: SparkSession, dir: String): DataFrame = {
     // the last-touch reduction is one full events window+groupBy pass;

@@ -18,7 +18,7 @@ import graft.Tables.t
   * Scale shape: one hash shuffle on (custkey, band); per-key fanout
   * bounded by orders-per-customer-per-band squared (single digits),
   * not order-count squared. */
-object Audit {
+object Audit extends graft.Registry {
 
   private val BAND = 100000L // $1k in cents
   private val DAYS = 90

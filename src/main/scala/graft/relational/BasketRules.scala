@@ -27,7 +27,7 @@ import graft.functions.Exact
   * index, BasketStage), marginals ride a shuffle join keyed on the
   * part, and only the bounded top-50 survives (TopK over the pair
   * frame). */
-object BasketRules {
+object BasketRules extends graft.Registry {
 
   private val MIN_SUPPORT = 2L
   private val TOPK = 50

@@ -22,7 +22,7 @@ import graft.Tables.t
   *
   * Scale shape: one scan into a 9-row aggregate; the total is carried
   * by a window-free cross join of the 1-row census. */
-object Benford {
+object Benford extends graft.Registry {
 
   def qBenford(spark: SparkSession, dir: String): DataFrame = {
     val digits = t(spark, dir, "orders")

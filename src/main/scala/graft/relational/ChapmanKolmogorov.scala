@@ -30,7 +30,7 @@ import graft.functions.Exact
   * cost class), two bounded |states|² aggregates, and a |states|³
   * join — states are a configuration-bounded vocabulary (single
   * digits here), never data-sized. */
-object ChapmanKolmogorov {
+object ChapmanKolmogorov extends graft.Registry {
 
   def qCkTest(spark: SparkSession, dir: String): DataFrame =
     ckOf(t(spark, dir, "events")

@@ -22,7 +22,7 @@ import graft.Tables.t
   * collisions) is asserted both here (the `overestimate` column is
   * non-negative by construction of min-over-rows) and in NewOpsSpec.
   */
-object CountMin {
+object CountMin extends graft.Registry {
 
   private val D = 4 // hash rows
   private val W = 32 // buckets per row

@@ -27,7 +27,7 @@ import graft.Tables.t
   *
   * Scale shape: one corpus pass into a per-user aggregate (hash
   * partition on user), then a 2-group + 1-row reduce. */
-object Cuped {
+object Cuped extends graft.Registry {
 
   private val CUT = "2024-01-16 00:00:00"
 

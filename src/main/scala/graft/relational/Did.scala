@@ -22,7 +22,7 @@ import graft.Tables.t
   * Scale shape: ONE corpus pass into a (event_type x 2 x 2)-bounded
   * partial aggregate, then driver-free integer projection — nothing
   * grows with the corpus. */
-object Did {
+object Did extends graft.Registry {
 
   private val CUT = "2024-01-16 00:00:00"
 

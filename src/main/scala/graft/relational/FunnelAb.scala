@@ -19,7 +19,7 @@ import graft.Tables.t
   * Scale shape: the funnel derivation's per-step min-aggregates (no
   * windows, co-partitioned joins on user), then a (steps x 2)-bounded
   * reduce. */
-object FunnelAb {
+object FunnelAb extends graft.Registry {
 
   def qFunnelAb(spark: SparkSession, dir: String): DataFrame =
     funnelAbOf(t(spark, dir, "events"))

@@ -19,7 +19,7 @@ import graft.dedup.Dedup
   * expressible as unrolled SQL (like the kmeans/label-propagation
   * oracles).
   */
-object Graph {
+object Graph extends graft.Registry {
 
   /** The candidate edge list MATERIALIZED once per (JVM, table dir) —
     * the graph family's input table. A lazily re-derived chain is

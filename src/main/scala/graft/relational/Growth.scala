@@ -28,7 +28,7 @@ import graft.Tables.t
   *
   * Scale shape: one scan into a month-bounded aggregate; windows only
   * over the bounded month frame. */
-object Growth {
+object Growth extends graft.Registry {
 
   def qMomGrowth(spark: SparkSession, dir: String): DataFrame =
     momGrowthOf(monthlyCents(spark, dir))
@@ -38,36 +38,16 @@ object Growth {
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
         expr("CAST(round(o_totalprice * 100.0) AS BIGINT)").as("cents"))
 
-  /** The signed exact HALF_UP micro-integer: growth_pct * 1e6 with no
-    * floating step at all — the quantity the `growth_pct` DOUBLE is a
-    * pure display scaling of (round-17 probe ladder column). */
-  private val growthMicroExpr =
-    """CASE WHEN prev_rev_cents IS NULL THEN CAST(NULL AS BIGINT)
-      |WHEN rev_cents >= prev_rev_cents THEN
-      |  CAST((2 * (CAST(rev_cents AS DECIMAL(38,0)) - prev_rev_cents)
-      |          * 100000000 + prev_rev_cents)
-      |       DIV (2 * CAST(prev_rev_cents AS DECIMAL(38,0))) AS BIGINT)
-      |ELSE
-      |  -CAST((2 * (CAST(prev_rev_cents AS DECIMAL(38,0)) - rev_cents)
-      |            * 100000000 + prev_rev_cents)
-      |         DIV (2 * CAST(prev_rev_cents AS DECIMAL(38,0))) AS BIGINT)
-      |END""".stripMargin
-
-  /** The full month frame with BOTH the exact micro-integer and the
-    * DOUBLE display form; [[qMomGrowth]] and the probe ladder are
-    * column selections of this one frame. `growth_pct` keeps the
-    * EXACT pre-round-17 expression (negation OUTSIDE the division, so
-    * a sub-1e-6 decline still yields the same -0.0 it always did)
-    * rather than scaling `growth_micro`, whose integer negation would
-    * flip that one sign bit. */
-  private[relational] def momGrowthFull(rows: DataFrame): DataFrame = {
+  /** [[qMomGrowth]] over any (month: 'yyyy-MM', cents) frame.
+    * `growth_pct` negates OUTSIDE the division, so a sub-1e-6 decline
+    * yields -0.0 exactly as the oracle does. */
+  private[relational] def momGrowthOf(rows: DataFrame): DataFrame = {
     val monthly = rows.groupBy("month").agg(sum("cents").as("rev_cents"))
     val byMonth = Window.orderBy("month")
     val rolling = Window.orderBy("month").rowsBetween(-2, 0)
     monthly
       .withColumn("prev_rev_cents", lag("rev_cents", 1).over(byMonth))
       .withColumn("rev_3m_cents", sum("rev_cents").over(rolling))
-      .withColumn("growth_micro", expr(growthMicroExpr))
       .withColumn("growth_pct", expr(
         """CASE WHEN prev_rev_cents IS NULL THEN CAST(NULL AS DOUBLE)
           |WHEN rev_cents >= prev_rev_cents THEN
@@ -81,49 +61,14 @@ object Growth {
           |         DIV (2 * CAST(prev_rev_cents AS DECIMAL(38,0))) AS DOUBLE)
           |      / 1000000.0)
           |END""".stripMargin))
+      .select("month", "rev_cents", "prev_rev_cents", "growth_pct", "rev_3m_cents")
   }
 
-  /** [[qMomGrowth]] over any (month: 'yyyy-MM', cents) frame. */
-  private[relational] def momGrowthOf(rows: DataFrame): DataFrame =
-    momGrowthFull(rows).select(
-      "month", "rev_cents", "prev_rev_cents", "growth_pct", "rev_3m_cents")
-
-  /** Round-17 per-column probe ladder (verdict-16 demand #1). The
-    * round-16 twin experiment was CONCLUSIVE: byte-identical twins
-    * under fresh registry keys failed the driver's hash compare
-    * exactly like the originals while every sandbox-reachable path
-    * (fresh Verify + DuckDB, canonical sha256, the judge's own run)
-    * is exact — so the driver's hash layer genuinely diverges on THIS
-    * output, and the ladder bisects WHICH column:
-    *
-    *   p1: month + rev_cents                       (pure BIGINT agg)
-    *   p2: + prev_rev_cents + rev_3m_cents         (window BIGINTs)
-    *   p3: + growth_micro                          (the exact signed
-    *       micro-INTEGER — growth_pct * 1e6 with no DOUBLE anywhere)
-    *   original: + growth_pct = micro / 1e6 AS DOUBLE
-    *
-    * If p3 is green and the original stays red, the divergence is the
-    * driver environment's hashing of that one derived DOUBLE column
-    * and the operator can ship the micro-integer with a documented
-    * display scale. ONE-ROUND experiment: retire the ladder once
-    * CORRECTNESS_r17 is read (tools/roundclose.sh now enforces probe
-    * retirement). */
-  private def pMom(cols: String*): (SparkSession, String) => DataFrame =
-    (s, d) => momGrowthFull(monthlyCents(s, d)).select(cols.map(col): _*)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "orders_mom_growth" -> (qMomGrowth _),
-    "orders_mom_growth_p1" -> pMom("month", "rev_cents"),
-    "orders_mom_growth_p2" ->
-      pMom("month", "rev_cents", "prev_rev_cents", "rev_3m_cents"),
-    "orders_mom_growth_p3" ->
-      pMom("month", "rev_cents", "prev_rev_cents", "growth_micro",
-        "rev_3m_cents"))
+    "orders_mom_growth" -> (qMomGrowth _))
 
-  /** Shared oracle CTE chain: monthly cents -> lag/rolling windows ->
-    * the exact HUGEINT micro-integer; each registered query SELECTs
-    * its probe-ladder columns from the same `g2` frame. */
-  private val momCtes =
+  val oracleSql: Map[String, String] = Map(
+    "orders_mom_growth" ->
       """WITH m AS (
         |  SELECT strftime(o_orderdate, '%Y-%m') AS month,
         |    CAST(sum(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS BIGINT)
@@ -135,44 +80,20 @@ object Growth {
         |    CAST(sum(rev_cents) OVER (ORDER BY month
         |      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS BIGINT)
         |      AS rev_3m_cents
-        |  FROM m),
-        |g2 AS (
-        |  SELECT month, rev_cents, prev_rev_cents, rev_3m_cents,
-        |    CASE WHEN prev_rev_cents IS NULL THEN CAST(NULL AS BIGINT)
-        |    WHEN rev_cents >= prev_rev_cents THEN
-        |      CAST((2 * CAST(rev_cents - prev_rev_cents AS HUGEINT)
-        |              * 100000000 + prev_rev_cents)
-        |           // (2 * CAST(prev_rev_cents AS HUGEINT)) AS BIGINT)
-        |    ELSE
-        |      -CAST((2 * CAST(prev_rev_cents - rev_cents AS HUGEINT)
-        |                * 100000000 + prev_rev_cents)
-        |             // (2 * CAST(prev_rev_cents AS HUGEINT)) AS BIGINT)
-        |    END AS growth_micro,
-        |    CASE WHEN prev_rev_cents IS NULL THEN CAST(NULL AS DOUBLE)
-        |    WHEN rev_cents >= prev_rev_cents THEN
-        |      CAST((2 * CAST(rev_cents - prev_rev_cents AS HUGEINT)
+        |  FROM m)
+        |SELECT month, rev_cents, prev_rev_cents,
+        |  CASE WHEN prev_rev_cents IS NULL THEN CAST(NULL AS DOUBLE)
+        |  WHEN rev_cents >= prev_rev_cents THEN
+        |    CAST((2 * CAST(rev_cents - prev_rev_cents AS HUGEINT)
+        |            * 100000000 + prev_rev_cents)
+        |         // (2 * CAST(prev_rev_cents AS HUGEINT)) AS DOUBLE)
+        |      / 1000000.0
+        |  ELSE
+        |    -(CAST((2 * CAST(prev_rev_cents - rev_cents AS HUGEINT)
         |              * 100000000 + prev_rev_cents)
         |           // (2 * CAST(prev_rev_cents AS HUGEINT)) AS DOUBLE)
-        |        / 1000000.0
-        |    ELSE
-        |      -(CAST((2 * CAST(prev_rev_cents - rev_cents AS HUGEINT)
-        |                * 100000000 + prev_rev_cents)
-        |             // (2 * CAST(prev_rev_cents AS HUGEINT)) AS DOUBLE)
-        |          / 1000000.0)
-        |    END AS growth_pct
-        |  FROM g)""".stripMargin
-
-  val oracleSql: Map[String, String] = Map(
-    "orders_mom_growth" ->
-      s"""$momCtes
-         |SELECT month, rev_cents, prev_rev_cents, growth_pct, rev_3m_cents
-         |FROM g2""".stripMargin,
-    "orders_mom_growth_p1" ->
-      s"$momCtes\nSELECT month, rev_cents FROM g2",
-    "orders_mom_growth_p2" ->
-      s"$momCtes\nSELECT month, rev_cents, prev_rev_cents, rev_3m_cents FROM g2",
-    "orders_mom_growth_p3" ->
-      s"""$momCtes
-         |SELECT month, rev_cents, prev_rev_cents, growth_micro, rev_3m_cents
-         |FROM g2""".stripMargin)
+        |        / 1000000.0)
+        |  END AS growth_pct,
+        |  rev_3m_cents
+        |FROM g""".stripMargin)
 }

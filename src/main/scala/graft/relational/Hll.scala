@@ -40,7 +40,7 @@ import graft.Tables.t
   * type for the error report; nothing grows with the corpus. At
   * 100 TB the exact-count companion column is the expensive side —
   * the sketch itself stays 256 registers per group. */
-object Hll {
+object Hll extends graft.Registry {
 
   private val M = 256 // registers (p = 8)
   /** alpha_m * m^2 * 2^25 — the scaled-harmonic numerator, one Scala

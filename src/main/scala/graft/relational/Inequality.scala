@@ -32,7 +32,7 @@ import graft.Tables.t
   *
   * Output: 10 Lorenz deciles (n, revenue, cumulative share) with the
   * corpus Gini carried on every row. */
-object Inequality {
+object Inequality extends graft.Registry {
 
   private val STRIPE = 10000000L // $100k in cents
 

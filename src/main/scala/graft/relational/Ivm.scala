@@ -24,7 +24,7 @@ import graft.Tables.t
   * Scale shape: each arm is one co-partitioned equi-join on the
   * custkey; the three delta arms scan delta-sized inputs only — the
   * full-join arm exists here only as the verification oracle. */
-object Ivm {
+object Ivm extends graft.Registry {
 
   def qJoinIncremental(spark: SparkSession, dir: String): DataFrame = {
     val orders = t(spark, dir, "orders")

@@ -25,7 +25,7 @@ import graft.Tables.t
   * (1e9-row samples pass 2^63), its max order-free; D and the
   * critical value are identical IEEE expressions rounded 6, and the
   * reject flag compares the same unrounded doubles in both engines. */
-object KsTest {
+object KsTest extends graft.Registry {
 
   private val STRIPE = 10000000L // $100k in cents
   /** Smirnov c(0.05) = sqrt(-ln(0.025)/2). */

@@ -30,7 +30,7 @@ import graft.functions.Exact
   * class), one bounded (state x state) train aggregate, the argmax
   * over state-bounded partitions, and a bounded per-state test
   * rollup. Nothing after the lead grows past |states|². */
-object MarkovBacktest {
+object MarkovBacktest extends graft.Registry {
 
   private val SPLIT = "2024-01-21 00:00:00" // ~2/3 train on the corpus
 

@@ -22,7 +22,7 @@ import graft.Tables.t
   *
   * Scale shape: one corpus pass into a (type x user) aggregate, then
   * a type-bounded moment reduce. */
-object Power {
+object Power extends graft.Registry {
 
   /** 2 * (z_0.975 + z_0.80)^2 */
   private val ZC: Double = {

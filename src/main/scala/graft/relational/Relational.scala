@@ -14,7 +14,7 @@ import graft.Tables.t
   * explicitly `broadcast()` so the 100 TB plan has no shuffle on the
   * dimension side.
   */
-object Relational {
+object Relational extends graft.Registry {
 
   /** TPC-H Q1-style aggregate: map-side partial agg then 6-group final. */
   def q1Agg(spark: SparkSession, dir: String): DataFrame =

@@ -21,7 +21,7 @@ import graft.Tables.t
   * Scale shape: one row_number window PARTITIONED BY (user, day);
   * path census bounded by distinct paths (8-hop type strings);
   * transition census bounded by |types|^2. */
-object Sequencing {
+object Sequencing extends graft.Registry {
 
   private val HOPS = 8
   private val TOPP = 20

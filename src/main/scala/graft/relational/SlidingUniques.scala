@@ -25,7 +25,7 @@ import graft.Tables.t
   * Scale shape: the only corpus-sized shuffles are the first distinct
   * and the 6x-replicated count-distinct aggregate; the hour frame
   * rides along as a broadcast hash semi join. */
-object SlidingUniques {
+object SlidingUniques extends graft.Registry {
 
   private val TRAIL = 6 // trailing window, hours
 

@@ -23,7 +23,7 @@ import graft.functions.Exact
   * no range join), semi-joins the observed-day frame (broadcast hash,
   * calendar-bounded), and one count-distinct aggregate produces DAU
   * (day == serving day) and WAU together. */
-object Stickiness {
+object Stickiness extends graft.Registry {
 
   private val TRAIL = 7 // trailing window, days
 

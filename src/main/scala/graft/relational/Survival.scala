@@ -32,7 +32,7 @@ import graft.Tables.t
   * global), a per-customer 1-row reduce, two tiny week censuses, and
   * the W-row frame. Nothing after the per-customer reduce grows with
   * the corpus. */
-object Survival {
+object Survival extends graft.Registry {
 
   private val W = 26 // study horizon, weeks
   private val HORIZON = "2001-08-01" // max order date in the corpus

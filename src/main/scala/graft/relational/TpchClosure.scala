@@ -42,7 +42,7 @@ import graft.Tables.t
   * Reference: vkmouse/Spark_clustering has no decision-support surface
   * (clustering only) — this closes the engine's own §2 row 148m.
   */
-object TpchClosure {
+object TpchClosure extends graft.Registry {
 
   private val staged =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -23,7 +23,7 @@ import graft.functions.Exact
   * per-user rollup riding the same user hash — the `events_sessionize`
   * cost class. Output is per-user, linear like every per-user feature
   * frame. */
-object UserHhi {
+object UserHhi extends graft.Registry {
 
   def qUserHhi(spark: SparkSession, dir: String): DataFrame =
     hhiOf(t(spark, dir, "events"))

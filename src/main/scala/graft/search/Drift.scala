@@ -24,7 +24,7 @@ import graft.functions.MicroGrid
   * Scale shape: ONE corpus pass with 2K bounded groups (labels x 2)
   * and 64 integer aggregates each (the embed_standardize shape); all
   * centroid math is driver-side on the K x 2 x 64 literal frame. */
-object Drift {
+object Drift extends graft.Registry {
 
   private val D = 64
 

@@ -33,7 +33,7 @@ import graft.functions.Exact
   * Scale shape: one per-row quantize projection, one 64-row per-dim
   * aggregate (map-side combinable), one 1-row rollup. |S_d| ≤ N·1e6,
   * so |S|² stays inside DECIMAL(38,0) to ~1e13 vectors. */
-object Isotropy {
+object Isotropy extends graft.Registry {
 
   /** Signed micro-quantize of x/nrm (scale-0 floor(y+0.5) mirrored on
     * sign — round-half-away, the MicroGrid decision), as a SQL

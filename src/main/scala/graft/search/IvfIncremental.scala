@@ -29,7 +29,7 @@ import graft.clustering.{ClusterSql, KMeans, Points}
   * 100 TB the batch is the day's ingest, not the corpus — and the
   * report aggregates CELLS rows. No shuffle beyond the per-cell
   * count. */
-object IvfIncremental {
+object IvfIncremental extends graft.Registry {
 
   private val CELLS = SimSearch.CELLS
 

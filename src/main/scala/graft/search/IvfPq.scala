@@ -19,7 +19,7 @@ import graft.clustering.{KMeans, Points}
   * id per vector. Entirely deterministic, so training, encoding,
   * probing and scoring are all one generated SQL oracle.
   */
-object IvfPq {
+object IvfPq extends graft.Registry {
 
   private val TOPK = 5
 

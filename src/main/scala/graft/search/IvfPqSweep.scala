@@ -109,13 +109,7 @@ object IvfPqSweep {
         val Array(k, p) = s.split("x"); (k.toInt, p.toInt)
       }
       else Seq((16, 2), (64, 4), (64, 8), (256, 8))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     configs.foreach { case (k, p) =>
       val (plain, res) = recallAt(spark, dir, k, p)
       println(f"IVFPQSWEEP kprime=$k%d nprobe=$p%d plain=$plain%.4f residual=$res%.4f " +

@@ -33,7 +33,7 @@ import graft.Tables.t
   * cut runs through the TopKPerKey physical operator (bounded k-row
   * heap per eval id, map-side combinable) instead of a full-sort
   * row_number window over the corpus x eval join. */
-object KnnEval {
+object KnnEval extends graft.Registry {
 
   private val D = 64
   private val K = 5

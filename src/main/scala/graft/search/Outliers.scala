@@ -22,7 +22,7 @@ import graft.Tables.t
   * vec_id < 10*EN — the KnnEval cap) broadcasts against one corpus
   * pass; the k-NN cut rides the bounded-heap TopKPerKey exec; the
   * top-20 report is a total order over the EN-bounded score frame. */
-object Outliers {
+object Outliers extends graft.Registry {
 
   private val K = 5
   private val EN = 1000

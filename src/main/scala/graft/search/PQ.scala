@@ -30,7 +30,7 @@ import graft.clustering.{ClusterSql, KMeans, Points}
   * (NaN sorts above any real distance in array_min; the oracle
   * coalesces NULL distances to +infinity), so the two engines agree.
   */
-object PQ {
+object PQ extends graft.Registry {
 
   private val QN = 5 // query vectors: vec_id <= QN (the simsearch set)
   private val M = 8 // subspaces

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: rides the staged Gram sums (no new covariance pass);
   * both projections are per-row codegen HOF folds against 64 broadcast
   * literals; the only shuffle is the bounded grid-cell rollup. */
-object PcaScatter {
+object PcaScatter extends graft.Registry {
 
   private def d6(x: Double): BigDecimal =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)

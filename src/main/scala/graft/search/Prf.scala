@@ -22,7 +22,7 @@ import graft.Tables.t
   * Scale shape: two broadcast corpus passes (original + expanded
   * query sets, each QN-bounded) with TopKPerKey cuts; the blend
   * itself touches QN x F rows. */
-object Prf {
+object Prf extends graft.Registry {
 
   private val F = 3   // feedback depth
   private val K = 10  // report depth

@@ -22,7 +22,7 @@ import graft.Tables.t
   * set, rank per query — the row_number idiom the TopKRewriteRule
   * turns into the bounded-heap TopKPerKey exec.
   */
-object Quantized {
+object Quantized extends graft.Registry {
 
   private val QN = 5 // query vectors: vec_id <= QN, like SimSearch
   private val TOPK = 10

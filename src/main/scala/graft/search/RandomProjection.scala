@@ -19,7 +19,7 @@ import graft.Tables.t
   * no UDF, no train step. Left-to-right addition order is identical in
   * both engines, so projected values match bitwise.
   */
-object RandomProjection {
+object RandomProjection extends graft.Registry {
 
   private val R = 16 // projected dims
   private val D = 64 // input dims

@@ -21,7 +21,7 @@ import graft.functions.VectorOps
   * <= k-row per-query window). RRF uses the same trick: each vote is
   * the exact integer 1e12 DIV (60 + rank) (fixed-point Cormack RRF
   * with K = 60), summed in BIGINT; ranking ties break on vec_id. */
-object RankEval {
+object RankEval extends graft.Registry {
 
   private val K = 5 // AP/fusion depth (= SimSearch.ANN_TOPK)
   private val LCM = 60 // lcm(1..K): exact common denominator for 1/r

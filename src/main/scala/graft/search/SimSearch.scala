@@ -15,7 +15,7 @@ import graft.functions.VectorOps
   * candidates to sign-LSH buckets — an equi-join on the bucket key —
   * trading recall for a candidate set ~N/2^bits per query.
   */
-object SimSearch {
+object SimSearch extends graft.Registry {
 
   private[search] val QN = 5 // query vectors: vec_id <= QN
   private[search] val TOPK = 10

@@ -37,7 +37,7 @@ import graft.functions.MicroGrid
   * rounded. Long per-partition partials are overflow-checked
   * (Math.addExact) and merge into BigInt, so no data scale can
   * silently wrap. */
-object Spectrum {
+object Spectrum extends graft.Registry {
 
   private val D = 64
   private val P = D * (D + 1) / 2

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * p·(1-s), s = Σv_i² the exact-decimal norm) to integer micro-units
   * (exact scale-0 decision) and sums in DECIMAL — variance along the
   * removed direction reports ≈ 0 on every host and layout. */
-object Whiten {
+object Whiten extends graft.Registry {
 
   private def r6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble

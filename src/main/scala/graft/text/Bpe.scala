@@ -34,7 +34,7 @@ import graft.Tables.t
   * alphabet) for the rest of its pass so it cannot re-merge, then the
   * tags strip. The DuckDB oracle mirrors the fold with list_reduce.
   */
-object Bpe {
+object Bpe extends graft.Registry {
 
   val ROUNDS = 5
 

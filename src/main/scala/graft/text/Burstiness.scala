@@ -22,7 +22,7 @@ import graft.Tables.t
   *
   * Scale shape: one explode + one vocabulary-bounded groupBy; the doc
   * count is a 1-row broadcast. */
-object Burstiness {
+object Burstiness extends graft.Registry {
 
   private val TOPK = 20
 

@@ -23,7 +23,7 @@ import graft.Tables.t
   * Scale shape: page build + rule evaluation are per-row codegen HOFs
   * (one corpus pass); the only shuffle is the per-source rollup. All
   * outputs are INT-EXACT counters. */
-object C4Rules {
+object C4Rules extends graft.Registry {
 
   /** Builds the deterministic page, applies the rule bundle, rolls up
     * per source. */

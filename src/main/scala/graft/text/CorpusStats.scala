@@ -16,7 +16,7 @@ import graft.Tables.t
   * an equi-join that co-partitions both sides by word, no broadcast
   * needed, so it holds when the vocabulary itself is huge.
   */
-object CorpusStats {
+object CorpusStats extends graft.Registry {
 
   private val TOPK = 20
 
@@ -233,8 +233,7 @@ object CorpusStats {
       .filter(size(col("ws")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(ws) - 1), i -> named_struct(" +
-          "'w1', element_at(ws, i), 'w2', element_at(ws, i + 1), " +
-          "'bg', concat(element_at(ws, i), ' ', element_at(ws, i + 1))))")).as("e"))
+          "'w1', element_at(ws, i), 'w2', element_at(ws, i + 1)))")).as("e"))
       .select(col("doc_id"), col("e.w1").as("w1"), col("e.w2").as("w2"))
     val bgCounts = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
     // one row of bgCounts per bigram TYPE: head token totals and

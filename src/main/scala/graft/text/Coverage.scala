@@ -23,7 +23,7 @@ import graft.Tables.t
   * shuffled object — bounded by distinct vocabulary squared in theory
   * but by corpus token mass in practice, the same envelope as the
   * BPE/TF-IDF family. */
-object Coverage {
+object Coverage extends graft.Registry {
 
   private def split3(df: DataFrame): DataFrame =
     df.withColumn("bucket",

@@ -25,7 +25,7 @@ import graft.Tables.t
   * Scale shape: injection + detection are per-row codegen string ops
   * (one corpus pass); the only shuffle is the bounded per-source
   * rollup. */
-object Encoding {
+object Encoding extends graft.Registry {
 
   private val FFFD = "\uFFFD" // replacement character
   private val MOJI = "\u00C3\u00A9" // 'Ã©' = UTF-8 'é' read as Latin-1

@@ -23,7 +23,7 @@ import graft.Tables.t
   * accumulation, identical in both engines at this frame size — the
   * KM convention), and beta/k are closed-form expressions of the
   * final sums rounded 6. */
-object Heaps {
+object Heaps extends graft.Registry {
 
   def qHeaps(spark: SparkSession, dir: String): DataFrame =
     heapsOf(t(spark, dir, "documents").select("doc_id", "text"))

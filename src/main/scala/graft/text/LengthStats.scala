@@ -15,7 +15,7 @@ import graft.Tables.t
   * interpolated values, bitwise-equal to DuckDB's quantile_cont on
   * integer inputs (the percentile_qty precedent). Counts are
   * INT-EXACT; one extra bounded per-source count pass. */
-object LengthStats {
+object LengthStats extends graft.Registry {
 
   def qLengthQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -27,7 +27,7 @@ import graft.functions.Exact
   * extraction, Luhn folds over <=16-element digit lists) inside
   * whole-stage codegen HOFs; the report is a single groupBy(source).
   * No shuffle besides the final per-source aggregate. */
-object Pii {
+object Pii extends graft.Registry {
 
   // RE2 (DuckDB) and java.util.regex read these identically: no
   // lookaround, no backrefs, \b over digit/word boundaries only.

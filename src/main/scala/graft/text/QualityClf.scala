@@ -39,7 +39,7 @@ import graft.Tables.t
   * full corpus, which is exactly the one-pass scoring step here);
   * weights live driver-side (33 doubles, the lloyd literal-frame
   * pattern). */
-object QualityClf {
+object QualityClf extends graft.Registry {
 
   private val F = 32 // hashed unigram buckets; index F is the bias
   private val ITERS = 10

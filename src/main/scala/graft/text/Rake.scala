@@ -23,7 +23,7 @@ import graft.Tables.t
   * groupBy (vocabulary-bounded), one word-keyed join back (both sides
   * hash on the word), one phrase-grain aggregate — the TF-IDF family's
   * exact envelope; the top-15 is TakeOrderedAndProject. */
-object Rake {
+object Rake extends graft.Registry {
 
   private val STOP = Seq("the", "and", "of", "to", "in", "is", "a")
   private val TOPK = 15

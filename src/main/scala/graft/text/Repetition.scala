@@ -16,7 +16,7 @@ import graft.functions.Exact
   * ROUNDED ratios so the threshold decision is bit-identical across
   * engines.
   */
-object Repetition {
+object Repetition extends graft.Registry {
 
   // gate thresholds (C4/Gopher-style magnitudes, bound as literals so
   // the oracle is reproducible)

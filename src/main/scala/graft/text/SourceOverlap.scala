@@ -23,7 +23,7 @@ import graft.functions.Exact
   * sources (S is configuration-bounded, ~tens, never data-sized), and
   * the output is the S x S pair frame. Per-source sizes ride back on a
   * broadcast of the S-row frame. */
-object SourceOverlap {
+object SourceOverlap extends graft.Registry {
 
   def qSourceOverlap(spark: SparkSession, dir: String): DataFrame =
     overlapOf(t(spark, dir, "documents"))

@@ -14,7 +14,7 @@ import graft.functions.Exact
   * array — no shuffle until an explicit corpus-level aggregation
   * (TF-IDF's document-frequency join).
   */
-object TextAnalysis {
+object TextAnalysis extends graft.Registry {
 
   private val STOP = Seq("the", "and", "of", "to", "in", "is")
 

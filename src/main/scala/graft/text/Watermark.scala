@@ -25,7 +25,7 @@ import graft.Tables.t
   * Scale shape: one HOF projection per document (count green among
   * split tokens), zero joins, zero shuffle before the per-doc output
   * — embarrassingly parallel, the 100 TB shape. */
-object Watermark {
+object Watermark extends graft.Registry {
 
   /** SQL green test for one token expression (Spark + DuckDB share
     * md5/instr/substr semantics — the Splits nibble convention). */

@@ -26,7 +26,7 @@ import graft.Tables.t
   *
   * Scale shape: one HOF projection per document, zero shuffle before
   * the per-doc output (embarrassingly parallel — the 100 TB shape). */
-object Winnowing {
+object Winnowing extends graft.Registry {
 
   private val K = 5  // k-gram length
   private val W = 4  // window of consecutive k-gram hashes

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+
+import graft.{QueryRun, Session, SparkEntry, Tables}
 
 /** Per-job wall-clock breakdown of a named registry query — the
   * measurement companion to PlanDump (guide §1: decide whether a
@@ -12,101 +13,50 @@ import org.apache.spark.sql.SparkSession
   * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_GRAFT_REPS
   * (Bench conventions). Runs each query REPS times (default 2) with
   * the same `.count()` action Bench times; prints, for the LAST rep,
-  * one line per job (job id, duration, #stages, #tasks, first stage's
-  * callsite) plus the rep totals, so steady-state cost attribution is
-  * read straight off the output. */
+  * one line per job (job id, duration, #stages, call site) and per
+  * stage, plus the rep totals and its whole-stage-codegen compile
+  * count, so steady-state cost attribution is read straight off the
+  * output. */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: JobProfile <q1,q2,...>")
+    val names = SparkEntry.select(args(0))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
+    Tables.warm(spark, sfDir)
 
-    case class Job(id: Int, start: Long, var end: Long = 0L,
-                   var stages: Int = 0, var tasks: Int = 0,
-                   var site: String = "")
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
-    val order = java.util.Collections.synchronizedList(new java.util.ArrayList[Int]())
-    val stageLines = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val job = Job(j.jobId, j.time)
-        job.stages = j.stageInfos.size
-        job.site = j.stageInfos.lastOption.map(_.details.linesIterator
-          .find(l => l.contains("graft") && !l.contains("JobProfile"))
-          .getOrElse(j.stageInfos.last.name)).getOrElse("")
-        jobs.put(j.jobId, job)
-        order.add(j.jobId)
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      val (wall, compiles, run) = (1 to reps).map { _ =>
+        // compiled-source count delta across the rep: driver time
+        // invisible to job durations (the "gap" suspect)
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val (wall, run) = QueryRun.record(spark) {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        }
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        // SPARK_GRAFT_PROFILE_KEEPCACHE=1 keeps cached frames across
+        // reps — matches Bench, which clears only AFTER a query's
+        // reps, so memo-staged cached state survives into rep 2+ and
+        // the last rep profiles the STEADY state, not a rebuild
+        if (!sys.env.get("SPARK_GRAFT_PROFILE_KEEPCACHE").contains("1"))
+          spark.catalog.clearCache()
+        (wall, compiles, run)
+      }.last
+      def secs(ms: Long): Double = if (ms < 0) -1.0 else ms / 1e3
+      println(f"== $name: last-rep wall $wall%.3f s, ${run.jobs.size} jobs ==")
+      run.jobs.foreach { j =>
+        println(f"  job ${j.id}%3d  ${secs(j.durationMs)}%7.3f s  stages=${j.stageIds.size}  ${j.callSite.take(110)}")
       }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        val job = jobs.get(j.jobId); if (job != null) job.end = j.time
+      run.stages.foreach { s =>
+        println(f"    stage ${s.id}%3d ${secs(s.durationMs)}%7.3f s tasks=${s.tasks}%3d  ${s.name.take(90)}")
       }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val i = s.stageInfo
-        val dur = (for (a <- i.submissionTime; b <- i.completionTime)
-          yield (b - a) / 1e3).getOrElse(-1.0)
-        stageLines.add(f"    stage ${i.stageId}%3d ${dur}%7.3f s tasks=${i.numTasks}%3d  ${i.name.take(90)}")
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    // warm the tables like Bench does
-    graft.Tables.names.foreach { n =>
-      try graft.Tables.t(spark, sfDir, n).limit(1).count()
-      catch { case _: Throwable => () }
-    }
-
-    args(0).split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
-      graft.SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[jobprofile] unknown query: $name")
-        case Some(fn) =>
-          var lastJobs: Seq[Job] = Nil
-          var lastStages: Seq[String] = Nil
-          var lastWall = 0.0
-          var cgMs = 0L; var cgN = 0L
-          (1 to reps).foreach { rep =>
-            jobs.clear(); order.clear(); stageLines.clear()
-            // whole-stage-codegen compile attribution: Janino compile
-            // wall + compiled-source count delta across the rep (driver
-            // time invisible to job durations — the "gap" suspect)
-            val cgT = org.apache.spark.metrics.source.CodegenMetrics
-              .METRIC_COMPILATION_TIME
-            val cg0 = (cgT.getCount, cgT.getSnapshot.getValues.sum)
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).count()
-            lastWall = (System.nanoTime() - t0) / 1e9
-            cgN = cgT.getCount - cg0._1
-            cgMs = cgT.getSnapshot.getValues.sum - cg0._2
-            org.apache.spark.sql.GraftBridge.flushListenerBus(spark)
-            import scala.jdk.CollectionConverters._
-            lastJobs = order.asScala.toSeq.flatMap(id => Option(jobs.get(id)))
-            lastStages = stageLines.asScala.toSeq
-            // SPARK_GRAFT_PROFILE_KEEPCACHE=1 keeps cached frames across
-            // reps — matches Bench, which clears only AFTER a query's
-            // reps, so memo-staged cached state survives into rep 2+ and
-            // the last rep profiles the STEADY state, not a rebuild
-            if (!sys.env.get("SPARK_GRAFT_PROFILE_KEEPCACHE").contains("1"))
-              spark.catalog.clearCache()
-          }
-          println(f"== $name: last-rep wall ${lastWall}%.3f s, ${lastJobs.size} jobs ==")
-          lastJobs.foreach { j =>
-            val dur = if (j.end > 0) (j.end - j.start) / 1e3 else -1.0
-            println(f"  job ${j.id}%3d  ${dur}%7.3f s  stages=${j.stages}  ${j.site.take(110)}")
-          }
-          lastStages.foreach(println)
-          val sum = lastJobs.filter(_.end > 0).map(j => (j.end - j.start) / 1e3).sum
-          println(f"  [sum of job durations ${sum}%.3f s; gaps = driver/planning time]")
-          println(f"  [last-rep codegen: $cgN compiles, ~${cgMs}%d ms compile wall]")
-      }
+      val sum = run.jobs.filter(_.end > 0).map(j => secs(j.durationMs)).sum
+      println(f"  [sum of job durations $sum%.3f s; gaps = driver/planning time]")
+      println(s"  [last-rep codegen: $compiles compiles]")
     }
     spark.stop()
   }

@@ -1,41 +1,38 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Dumps `.explain("formatted")` of named registry queries to files —
-  * the plan evidence the optimization rounds commit under plans/rNN/.
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.{Session, SparkEntry}
+
+/** Dumps the executed plan of named registry queries to files — the
+  * plan evidence the optimization rounds commit under plans/rNN/.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...>
   * Writes <outDir>/<query>_<suffix>.txt per query. Reads the data dir
-  * from SPARK_GRAFT_SF_DIR and cores from SPARK_GRAFT_CPUS (the Bench
-  * conventions) so plans reflect the benched configuration. */
+  * from SPARK_GRAFT_SF_DIR and cores from SPARK_GRAFT_CPUS
+  * (graft.Session), so plans reflect the benched configuration.
+  *
+  * Each query's own DataFrame is collected first, so the formatted plan
+  * is the final adaptive plan (`isFinalPlan=true`): exchange reuse,
+  * join strategy switches and coalesced partitions as they actually
+  * ran, not the pre-execution guess. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: PlanDump <outDir> <suffix> <q1,q2,...>")
     val Array(outDir, suffix, qcsv) = args
+    val names = SparkEntry.select(qcsv)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    qcsv.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
-      graft.SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[plandump] unknown query: $name")
-        case Some(fn) =>
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")
-          java.nio.file.Files.writeString(p, plan)
-          println(s"[plandump] wrote $p")
-      }
+    val spark = Session()
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.collect()
+      val plan = df.queryExecution.explainString(FormattedMode)
+      val p = Paths.get(outDir, s"${name}_$suffix.txt")
+      Files.writeString(p, plan)
+      println(s"[plandump] wrote $p")
     }
     spark.stop()
   }

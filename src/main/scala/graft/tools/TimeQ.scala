@@ -1,30 +1,26 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+
+import graft.{Session, SparkEntry, Tables}
 
 /** Single-JVM query timer for scaling checkpoints: times each named
   * query (or the ENTIRE registry with `ALL`) once at the given SF dir
   * and appends machine-readable TIMEQ lines; tools/sf1_sweep.py runs
   * it at sf0.1 and bench_sf1 and reduces the pairs to growth factors
   * in BENCH_SF1.json. Min-of-1 by design — the sweep wants relative
-  * growth across two SFs timed identically, not absolute best-case. */
+  * growth across two SFs timed identically, not absolute best-case.
+  * Cores come from SPARK_GRAFT_CPUS (graft.Session). */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names =
-      if (args.drop(1).toSeq == Seq("ALL")) graft.SparkEntry.queries.keys.toSeq.sorted
-      else args.drop(1).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Tables.names.foreach { n => try graft.Tables.t(spark, sfDir, n).limit(1).count() catch { case _: Throwable => () } }
+      if (args.drop(1).toSeq == Seq("ALL")) SparkEntry.queries.keys.toSeq.sorted
+      else SparkEntry.select(args.drop(1).mkString(","))
+    val spark = Session()
+    Tables.warm(spark, sfDir)
     val out = sys.env.get("TIMEQ_OUT").map(new java.io.PrintWriter(_))
     names.foreach { n =>
       val t0 = System.nanoTime()
-      val c = graft.SparkEntry.queries(n)(spark, sfDir).count()
+      val c = SparkEntry.queries(n)(spark, sfDir).count()
       val line = f"TIMEQ $n%s rows=$c%d sec=${(System.nanoTime() - t0) / 1e9}%.3f"
       println(line)
       out.foreach { w => w.println(line); w.flush() }

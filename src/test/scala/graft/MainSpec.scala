@@ -3,8 +3,9 @@ package graft
 import graft.clustering.SparkTestSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** End-to-end CLI runs on the reference's own dataset files — a
-  * reference user's exact workflow (dataset csv in, metrics csv out). */
+/** End-to-end CLI runs on files in the reference's dataset format and
+  * shapes (ReferenceData) — a reference user's exact workflow (dataset
+  * csv in, metrics csv out). */
 class MainSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
 
@@ -13,7 +14,7 @@ class MainSpec extends AnyFunSuite {
 
   test("kmeans CLI on iris.txt writes run,iter,sse,best,map,reduce,ms per iteration") {
     val out = java.io.File.createTempFile("iris_kmeans", ".csv").getPath
-    Main.run(spark, "kmeans", "/root/reference/dataset/iris.txt",
+    Main.run(spark, "kmeans", ReferenceData.iris.path,
       numIter = 2, numK = 3, out, numRun = 2, rest = Array.empty)
     val ls = lines(out)
     assert(ls.length == 2 * 2 + 1, s"2 runs x 2 iters + total line: $ls")
@@ -35,7 +36,7 @@ class MainSpec extends AnyFunSuite {
 
   test("gka CLI on iris.txt honors the reference's extra args") {
     val out = java.io.File.createTempFile("iris_gka", ".csv").getPath
-    Main.run(spark, "gka", "/root/reference/dataset/iris.txt",
+    Main.run(spark, "gka", ReferenceData.iris.path,
       numIter = 2, numK = 3, out, numRun = 1,
       rest = Array("3", "0.5", "2.0"))
     val ls = lines(out)
@@ -45,7 +46,7 @@ class MainSpec extends AnyFunSuite {
 
   test("pso CLI on iris.txt honors the reference's extra args") {
     val out = java.io.File.createTempFile("iris_pso", ".csv").getPath
-    Main.run(spark, "pso", "/root/reference/dataset/iris.txt",
+    Main.run(spark, "pso", ReferenceData.iris.path,
       numIter = 2, numK = 3, out, numRun = 1,
       rest = Array("3", "2.0", "2.0", "0.9", "0.4"))
     val ls = lines(out)
@@ -59,7 +60,7 @@ class MainSpec extends AnyFunSuite {
     // point set; this closes the fidelity gap on the reference's own
     // largest file
     val out = java.io.File.createTempFile("shuttle_kmeans", ".csv").getPath
-    Main.run(spark, "kmeans", "/root/reference/dataset/shuttle.txt",
+    Main.run(spark, "kmeans", ReferenceData.shuttle.path,
       numIter = 2, numK = 5, out, numRun = 1, rest = Array.empty)
     val ls = lines(out)
     assert(ls.length == 2 + 1, s"2 iters + total line: $ls")
@@ -72,7 +73,7 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("gka + pso CLI on User-locations-Finland (2-dim, 13467 points)") {
-    val fin = "/root/reference/dataset/User-locations-Finland_N13467-D2.txt"
+    val fin = ReferenceData.finland.path
     val outG = java.io.File.createTempFile("fin_gka", ".csv").getPath
     Main.run(spark, "gka", fin, numIter = 2, numK = 4, outG, numRun = 1,
       rest = Array("3", "0.5", "2.0"))
@@ -87,7 +88,7 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("gka + pso CLI on shuttle.txt (all three algorithms on the reference's biggest file)") {
-    val sh = "/root/reference/dataset/shuttle.txt"
+    val sh = ReferenceData.shuttle.path
     val outG = java.io.File.createTempFile("shuttle_gka", ".csv").getPath
     Main.run(spark, "gka", sh, numIter = 2, numK = 5, outG, numRun = 1,
       rest = Array("3", "0.5", "2.0"))
@@ -103,7 +104,7 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("kmeans CLI multi-run best-of on User-locations-Finland (all three algorithms on both files)") {
-    val fin = "/root/reference/dataset/User-locations-Finland_N13467-D2.txt"
+    val fin = ReferenceData.finland.path
     val out = java.io.File.createTempFile("fin_kmeans", ".csv").getPath
     Main.run(spark, "kmeans", fin, numIter = 2, numK = 4, out, numRun = 2,
       rest = Array.empty)
@@ -190,7 +191,7 @@ class MainSpec extends AnyFunSuite {
   test("unknown algorithm fails loudly") {
     val out = java.io.File.createTempFile("bad", ".csv").getPath
     val e = intercept[RuntimeException] {
-      Main.run(spark, "dbscan", "/root/reference/dataset/iris.txt",
+      Main.run(spark, "dbscan", ReferenceData.iris.path,
         1, 2, out, 1, Array.empty)
     }
     assert(e.getMessage.contains("unknown algorithm"))

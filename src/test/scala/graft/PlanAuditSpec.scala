@@ -142,9 +142,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "orders_gini",                  // stripe census cumulative (rows = max revenue / $100k, value-bounded) + 10-row Lorenz deciles
     "orders_churn_km",              // at-risk/KM cumulatives over the 26-row week frame
     "orders_mom_growth",            // lag/rolling over the calendar-month frame (~80 rows)
-    "orders_mom_growth_p1",         // round-17 per-column probe ladder of the above
-    "orders_mom_growth_p2",         // (retire once CORRECTNESS_r17 is read)
-    "orders_mom_growth_p3",
     "orders_repeat_rate",           // (no global window; listed defensively with the cohort family) -- calendar-month frame
     "text_heaps",                   // OLS moment cumulatives over the 10-row checkpoint frame
     "events_markov_entropy",        // entropy-rate cumulative over the <=|event types| state frame

@@ -1,0 +1,48 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Registry drift fails here, at `sbt test`, not only after a full
+  * Verify run: one owner per key, an oracle only for a registered query,
+  * and a SURVEY §2 row for every key (the regex tools/roundclose.sh
+  * uses). */
+class RegistrySpec extends AnyFunSuite {
+
+  private def owners(part: Registry => Iterable[String]): Map[String, Seq[String]] =
+    SparkEntry.modules.flatMap(m => part(m).map(_ -> SparkEntry.name(m)))
+      .groupBy(_._1).map { case (k, kms) => k -> kms.map(_._2) }
+
+  test("no key is registered by two modules") {
+    for (part <- Seq[Registry => Iterable[String]](_.queries.keys, _.oracleSql.keys)) {
+      val twice = owners(part).collect { case (k, ms) if ms.size > 1 =>
+        s"$k (${ms.mkString(" and ")})" }
+      assert(twice.isEmpty, s"keys registered by two modules: ${twice.mkString(", ")}")
+    }
+    assert(SparkEntry.queries.keySet == owners(_.queries.keys).keySet)
+    assert(SparkEntry.oracleSql.keySet == owners(_.oracleSql.keys).keySet)
+  }
+
+  test("every oracleSql key is a queries key") {
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracle SQL without a query: ${orphans.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("every key appears backticked in SURVEY §2") {
+    val survey = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("SURVEY.md")), "UTF-8")
+    val start = survey.indexOf("## §2 ")
+    assert(start >= 0, "SURVEY.md has no §2")
+    val end = survey.indexOf("\n## ", start + 1)
+    val s2 = if (end < 0) survey.substring(start) else survey.substring(start, end)
+    val listed = "`([a-z0-9_]+)`".r.findAllMatchIn(s2).map(_.group(1)).toSet
+    val unlisted = SparkEntry.queries.keySet -- listed
+    assert(unlisted.isEmpty, s"registered queries with no SURVEY §2 row: ${unlisted.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("select trims names and rejects unknown ones") {
+    val some = SparkEntry.queries.keys.toSeq.sorted.take(2)
+    assert(SparkEntry.select(s" ${some(0)} ,,${some(1)},") == some)
+    val e = intercept[IllegalArgumentException](SparkEntry.select(s"${some(0)},no_such_query"))
+    assert(e.getMessage.contains("no_such_query"))
+  }
+}

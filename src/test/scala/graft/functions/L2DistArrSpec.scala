@@ -71,4 +71,25 @@ class L2DistArrSpec extends AnyFunSuite {
     assert(out(2L) == Seq(null, null))
     assert(out(3L) == null)
   }
+
+  test("two instances built from equal centers are semanticEquals") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val xs = BoundReference(0, ArrayType(DoubleType), nullable = true)
+    val a = L2DistArr(xs, Array(Array(1.0, 2.0), Array(3.0, 4.0)))
+    val b = L2DistArr(xs, Array(Array(1.0, 2.0), Array(3.0, 4.0)))
+    assert(a.semanticEquals(b))
+    assert(a.semanticHash() == b.semanticHash())
+    assert(!a.semanticEquals(L2DistArr(xs, Array(Array(1.0, 2.0), Array(3.0, 5.0)))))
+    // the same flattened values split into different centers differ
+    assert(!a.semanticEquals(L2DistArr(xs, Array(Array(1.0, 2.0, 3.0, 4.0)))))
+  }
+
+  test("empty centers throw IllegalArgumentException") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val xs = BoundReference(0, ArrayType(DoubleType), nullable = true)
+    intercept[IllegalArgumentException](L2DistArr(xs, Array.empty[Array[Double]]))
+    intercept[IllegalArgumentException](L2DistArr(xs, Array(Array(1.0), Array(1.0, 2.0))))
+  }
 }

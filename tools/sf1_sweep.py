@@ -6,6 +6,9 @@ BENCH_SF1.json: per-query seconds at both SFs and the growth factor at
   TIMEQ_OUT=/tmp/timeq_sf01.txt  sbt "runMain graft.tools.TimeQ /root/testdata/sf0.1 ALL"
   TIMEQ_OUT=/tmp/timeq_sf1.txt   sbt "runMain graft.tools.TimeQ <repo>/bench_sf1 ALL"
   python3 tools/sf1_sweep.py /tmp/timeq_sf01.txt /tmp/timeq_sf1.txt
+
+TimeQ runs on SPARK_GRAFT_CPUS cores (every core when unset); set
+SPARK_GRAFT_CPUS=32 to reproduce BENCH_SF1.json's local[32] sweeps.
 """
 import json, re, sys, datetime, os
 
