@@ -24,27 +24,15 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None        => SparkEntry.queries
     }
-    // Cold/warm attribution (round-9 ask): every derived index stages
-    // through a Files.createTempDirectory("graft-staged") parquet dir,
-    // so a dir-count delta across a query's reps means ITS rep 1 paid
-    // a one-time index build — the flag that lets a future 5x rep-1
-    // outlier in a single-shot artifact be dismissed from the JSON
-    // alone (min-of-reps timings are already steady-state).
-    def stagedDirCount(): Long = {
-      val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      val s = java.nio.file.Files.list(tmp)
-      try s.filter(p => p.getFileName.toString.startsWith("graft-staged")).count()
-      finally s.close()
-    }
     val metrics = scala.collection.mutable.LinkedHashMap.empty[String, QueryRun]
     val stagedIn = scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
     val results = selected.map { case (name, fn) =>
-      val stagedBefore = stagedDirCount()
-      // in-memory memo builds (trained centers, codebooks, collected
-      // query vectors) are one-time costs exactly like disk-staged
-      // index builds, but invisible to the dir count — the Memo
-      // counter makes them set the same staged_rep1 flag (round-18
-      // verdict: memo hits must be visible to staging attribution)
+      // Cold/warm attribution (round-9 ask): every derived index and
+      // every trained state builds through graft.Memo, so a Memo.misses
+      // delta across a query's first rep means THAT rep paid a one-time
+      // build — the flag that lets a future 5x rep-1 outlier in a
+      // single-shot artifact be dismissed from the JSON alone
+      // (min-of-reps timings are already steady-state).
       val memoBefore = Memo.misses
       def runOnce(): (Double, QueryRun) = QueryRun.record(spark) {
         val t0 = System.nanoTime()
@@ -57,13 +45,13 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }
       // Pre-staging (round-14, acting on the staged_rep1 flag): if the
-      // first run built a one-time staged index (detected by a staged-
-      // dir delta), it was the BUILD run — exclude it from timing and
+      // first run built a one-time staged index (detected by a Memo
+      // delta), it was the BUILD run — exclude it from timing and
       // take the min over REPS clean steady-state reps instead, so a
       // staged query's artifact row never carries build cost (the
       // round-13 dedup_prefix_join oscillation attribution).
       val first = runOnce()
-      val staged = stagedDirCount() > stagedBefore || Memo.misses > memoBefore
+      val staged = Memo.misses > memoBefore
       val steadyReps = if (staged) REPS else REPS - 1
       val runs = first +: (1 to steadyReps).map(_ => runOnce())
       val times = runs.map(_._1)

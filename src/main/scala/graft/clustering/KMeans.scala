@@ -148,11 +148,8 @@ object KMeans extends graft.Registry {
     * evaluate the same deterministic trajectories, so re-running
     * ELBOW_KS full Lloyd loops per metric buys nothing. Driver
     * memory: sum(k) x dims doubles. */
-  private val elbowCentersStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[Int, Array[Array[Double]]]]()
   private def stagedElbowCenters(pts: DataFrame, dir: String): Map[Int, Array[Array[Double]]] =
-    elbowCentersStaged.computeIfAbsent(dir, { _ =>
-      graft.Memo.miss()
+    graft.Memo.value(dir, "kmeans-elbow-centers") {
       ELBOW_KS.map { k =>
         var centers = Points.firstKCenters(pts, k)
         for (_ <- 1 to ELBOW_ITERS) {
@@ -163,7 +160,7 @@ object KMeans extends graft.Registry {
         }
         k -> centers
       }.toMap
-    })
+    }
 
   def qElbow(spark: SparkSession, dir: String): DataFrame = {
     val pts = Points.lineitem4dSpread(spark, dir).cache()
@@ -249,11 +246,8 @@ object KMeans extends graft.Registry {
     * cluster-quality metrics evaluate the same deterministic
     * solution, so re-running the 5-sweep driver loop per metric buys
     * nothing. K x dims doubles of driver memory. */
-  private val finalCentersStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
   private def stagedFinalCenters(pts: DataFrame, dir: String): Array[Array[Double]] =
-    finalCentersStaged.computeIfAbsent(dir, { _ =>
-      graft.Memo.miss()
+    graft.Memo.value(dir, "kmeans-final-centers") {
       var centers = Points.firstKCenters(pts, K)
       for (_ <- 1 to ITERS) {
         val byK = update(assign(pts, centers)).collect()
@@ -262,7 +256,7 @@ object KMeans extends graft.Registry {
         centers = Array.tabulate(K)(i => byK.getOrElse(i, centers(i)))
       }
       centers
-    })
+    }
 
   def qSilhouette(spark: SparkSession, dir: String): DataFrame = {
     val pts = Points.lineitem4d(spark, dir).cache()
@@ -662,13 +656,7 @@ object KMeans extends graft.Registry {
       "sqrt(" + dims.zipWithIndex.map { case (d, j) =>
         s"($p.$d - $c.k${j + 1}) * ($p.$d - $c.k${j + 1})"
       }.mkString(" + ") + ")"
-    val u = (r: Int) => {
-      val off = (r - 1) * 6
-      val v = (1 to 6).map(i =>
-        s"(instr('0123456789abcdef', substr(md5(CAST(d$r.pid AS VARCHAR)), ${off + i}, 1)) - 1) * ${math.pow(16, 6 - i).toLong}")
-        .mkString("(", " + ", ")")
-      s"(($v) + 0.5) / 16777216.0"
-    }
+    val u = (r: Int) => graft.pipeline.Mix.u24SliceSql(s"md5(CAST(d$r.pid AS VARCHAR))", (r - 1) * 6)
     val rounds = (1 to SCAL_ROUNDS).map { r =>
       s"""d$r AS (SELECT p.pid, ${dims.map(d => s"p.$d").mkString(", ")},
          |    count(*) AS cnt, min(${dist("p", "c")}) AS dmin
@@ -771,7 +759,7 @@ object KMeans extends graft.Registry {
       .withColumn("__h", expr("md5(cast(pid AS string))"))
       .select((col("pid") +: dims.map(col)) ++
         (1 to SCAL_ROUNDS).map(r =>
-          expr(u24SliceSql("__h", (r - 1) * 6)).as(s"__u$r")): _*)
+          expr(graft.pipeline.Mix.u24SliceSql("__h", (r - 1) * 6)).as(s"__u$r")): _*)
       .localCheckpoint(eager = true)
     var cands: Seq[(Long, Array[Double])] =
       base.orderBy(col("pid") +: dims.map(col): _*).limit(1)
@@ -821,17 +809,6 @@ object KMeans extends graft.Registry {
     cands.zipWithIndex.map { case ((pid, _), i) =>
       (pid, byIdx.getOrElse(i, 0L))
     }.toDF("cand_pid", "weight")
-  }
-
-  /** 24-bit uniform in (0,1) from nibbles off+1..off+6 of an ALREADY
-    * COMPUTED md5 hex column — the per-round slice of the row's one
-    * digest (portable: DuckDB mirrors it verbatim over the same
-    * md5). */
-  private def u24SliceSql(hCol: String, off: Int): String = {
-    val v = (1 to 6).map(i =>
-      s"(instr('0123456789abcdef', substr($hCol, ${off + i}, 1)) - 1) * ${math.pow(16, 6 - i).toLong}")
-      .mkString("(", " + ", ")")
-    s"(($v) + 0.5) / 16777216.0"
   }
 
   /** Decile rank-transform: bucketize each dim into 0..9 by its own

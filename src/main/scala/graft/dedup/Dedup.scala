@@ -561,34 +561,18 @@ object Dedup extends graft.Registry {
     * independently inside each consumer (clusters, keepers, savings)
     * computes the same index three times. NOT a cache() — nothing pins
     * executor memory; the staging is re-read from disk like any table.
-    * The JVM-scoped temp dir (deleted on exit) is the local-mode
-    * stand-in for the DFS staging path. */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stagedFrame(spark: SparkSession, key: String)
-                         (derive: => DataFrame): DataFrame = {
-    val path = staged.computeIfAbsent(key, { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft-staged")
-      p.toFile.deleteOnExit()
-      derive.write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
-    spark.read.parquet(path)
-  }
-
-  /** The LSH candidate edge list, staged (shared with the graph
+    * The JVM-scoped temp dir ([[graft.Memo.frame]]) is the local-mode
+    * stand-in for the DFS staging path.
+    *
+    * The LSH candidate edge list, staged (shared with the graph
     * family, which reads the same edges for PageRank/degrees). */
   private[graft] def stagedCandidates(spark: SparkSession, dir: String): DataFrame =
-    stagedFrame(spark, s"cand:$dir")(candidates(spark, dir))
+    graft.Memo.frame(spark, dir, "cand")(candidates(spark, dir))
 
   /** Converged duplicate-cluster labels, staged — derived from the
-    * staged edges so the MinHash/LSH chain itself also runs once.
-    * The edge staging is resolved BEFORE the label mapping function
-    * runs: a nested computeIfAbsent on the same map is a recursive
-    * update and throws. */
-  private[graft] def stagedClusters(spark: SparkSession, dir: String): DataFrame = {
-    val edges = stagedCandidates(spark, dir)
-    stagedFrame(spark, s"lbl:$dir")(labelPropagateConverged(edges))
-  }
+    * staged edges so the MinHash/LSH chain itself also runs once. */
+  private[graft] def stagedClusters(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.frame(spark, dir, "lbl")(labelPropagateConverged(stagedCandidates(spark, dir)))
 
   /** Converged clusters over the VERIFIED near-dup pairs (word-set
     * Jaccard >= 0.8, not raw band collisions), staged — the family
@@ -603,19 +587,14 @@ object Dedup extends graft.Registry {
     * corpora; the sf1 sweep caught exactly that in the link-prediction
     * operator). Shared by the verified cluster labels and the graph
     * family's common-neighbor scores. */
-  private[graft] def stagedVerifiedPairs(spark: SparkSession, dir: String): DataFrame = {
-    // resolve the candidate staging BEFORE entering computeIfAbsent —
-    // a nested computeIfAbsent on the same map is a recursive update
-    // and throws (same discipline as stagedVerifiedClusters)
-    val cands = stagedCandidates(spark, dir)
-    stagedFrame(spark, s"vpair:$dir")(
-      minhashLshFrom(t(spark, dir, "documents"), cands).select(col("ia"), col("ib")))
-  }
+  private[graft] def stagedVerifiedPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.frame(spark, dir, "vpair") {
+      minhashLshFrom(t(spark, dir, "documents"), stagedCandidates(spark, dir))
+        .select(col("ia"), col("ib"))
+    }
 
-  private[graft] def stagedVerifiedClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = stagedVerifiedPairs(spark, dir)
-    stagedFrame(spark, s"vlbl:$dir")(labelPropagateConverged(pairs))
-  }
+  private[graft] def stagedVerifiedClusters(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.frame(spark, dir, "vlbl")(labelPropagateConverged(stagedVerifiedPairs(spark, dir)))
 
   /** The SimHash fingerprint table, staged — the fingerprint index a
     * production dedup pipeline computes once at ingest and stores.
@@ -624,8 +603,7 @@ object Dedup extends graft.Registry {
     * over staged candidates has no exchange to reuse, so the fold ran
     * TWICE per query — measured 2x on dedup_simhash_pairs). */
   private[graft] def stagedSimhash(spark: SparkSession, dir: String): DataFrame =
-    stagedFrame(spark, s"simhash:$dir")(
-      simhashOf(t(spark, dir, "documents")))
+    graft.Memo.frame(spark, dir, "simhash")(simhashOf(t(spark, dir, "documents")))
 
   /** The char-5-gram shingle table, staged — same stored-index
     * rationale as the fingerprints (MinHash pipelines store their
@@ -638,12 +616,12 @@ object Dedup extends graft.Registry {
     * the full H-hash fold over every document's word set per
     * invocation before this. */
   private[graft] def stagedSignatures(spark: SparkSession, dir: String): DataFrame =
-    stagedFrame(spark, s"sig:$dir")(
-      signatures(t(spark, dir, "documents")))
+    graft.Memo.frame(spark, dir, "sig")(signatures(t(spark, dir, "documents")))
 
   private[graft] def stagedGrams5(spark: SparkSession, dir: String): DataFrame =
-    stagedFrame(spark, s"grams5:$dir")(
-      normDocs(t(spark, dir, "documents")).select(col("doc_id"), grams(5).as("gs")))
+    graft.Memo.frame(spark, dir, "grams5") {
+      normDocs(t(spark, dir, "documents")).select(col("doc_id"), grams(5).as("gs"))
+    }
 
   /** Semantic duplicate clusters (the SemDeDup shape, from its public
     * description: group vectors whose embeddings are near-identical,
@@ -1063,7 +1041,7 @@ object Dedup extends graft.Registry {
       |  string_agg(CASE WHEN cnt > 0 THEN '1' ELSE '0' END, '' ORDER BY b) AS simhash
       |FROM (
       |  SELECT doc_id, b,
-      |    sum(((instr('0123456789abcdef', substr(hx, CAST(b // 4 AS INT) + 1, 1)) - 1
+      |    sum(((${graft.pipeline.Splits.nibbleSql("hx", "CAST(b // 4 AS INT) + 1")}
       |          >> CAST(3 - (b % 4) AS INT)) & 1) * 2 - 1) AS cnt
       |  FROM (SELECT doc_id, md5(w) AS hx FROM (
       |          SELECT doc_id, unnest(list_distinct(string_split($NT, ' '))) AS w FROM documents)),
@@ -1479,7 +1457,7 @@ object Dedup extends graft.Registry {
         |h AS (SELECT doc_id, md5(w) AS hx FROM wd),
         |bits AS (
         |  SELECT doc_id, b,
-        |    sum(((instr('0123456789abcdef', substr(hx, CAST(b // 4 AS INT) + 1, 1)) - 1
+        |    sum(((${graft.pipeline.Splits.nibbleSql("hx", "CAST(b // 4 AS INT) + 1")}
         |          >> CAST(3 - (b % 4) AS INT)) & 1) * 2 - 1) AS cnt
         |  FROM h, (SELECT unnest(range(64)) AS b) GROUP BY doc_id, b)
         |SELECT doc_id,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables.t
+import graft.pipeline.Splits.nibbleHashSql
 
 /** Incremental (batch-vs-corpus) deduplication — the daily-ingest
   * shape: a new batch of documents arrives and must be deduplicated
@@ -24,13 +25,6 @@ import graft.Tables.t
   * shuffle; the batch-internal window shuffles just the batch.
   */
 object Incremental extends graft.Registry {
-
-  /** Same 0..4095 md5-nibble row hash as Splits (inlined SQL so the
-    * oracle mirrors it verbatim). */
-  private def nibbleHashSql(keyExpr: String): String =
-    (1 to 3).map(i =>
-      s"(instr('0123456789abcdef', substr(md5($keyExpr), $i, 1)) - 1) * ${math.pow(16, 3 - i).toInt}")
-      .mkString("(", " + ", ")")
 
   private val BATCH_BUCKET = 7 // gate % 10 == 7 -> ~10% "new batch"
 

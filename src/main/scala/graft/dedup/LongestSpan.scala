@@ -94,7 +94,7 @@ object LongestSpan extends graft.Registry {
   }
 
   private def stagedMatches(spark: SparkSession, dir: String): DataFrame =
-    graft.StagedCache.parquet(spark, dir, "span-matches") {
+    graft.Memo.frame(spark, dir, "span-matches") {
       matchesOf(t(spark, dir, "documents"))
     }
 
@@ -357,7 +357,7 @@ object LongestSpan extends graft.Registry {
     * through the census + self-join, so materializing the match frame
     * once is the ingest-time index a deployment would store. */
   private def stagedWinnowedMatches(spark: SparkSession, dir: String): DataFrame =
-    graft.StagedCache.parquet(spark, dir, "span-winnowed-matches") {
+    graft.Memo.frame(spark, dir, "span-winnowed-matches") {
       winnowedMatchesOf(t(spark, dir, "documents"))
     }
 

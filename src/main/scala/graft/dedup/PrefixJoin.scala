@@ -99,23 +99,9 @@ object PrefixJoin extends graft.Registry {
   /** Word sets and the prefix index staged once per (JVM, dir) at the
     * default tau — the dir-based query reads the stored index instead
     * of re-deriving the global-frequency sort per invocation. */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stagedFrame(spark: SparkSession, key: String)
-                         (derive: => DataFrame): DataFrame = {
-    val path = staged.computeIfAbsent(key, { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft-staged")
-      p.toFile.deleteOnExit()
-      derive.write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
-    spark.read.parquet(path)
-  }
-
   def qPrefixJoin(spark: SparkSession, dir: String): DataFrame = {
-    val w = stagedFrame(spark, s"prews:$dir")(
-      wordSets(t(spark, dir, "documents")))
-    val pre = stagedFrame(spark, s"prefix:$dir")(
-      prefixIndex(w, TAU_NUM, TAU_DEN))
+    val w = graft.Memo.frame(spark, dir, "prews")(wordSets(t(spark, dir, "documents")))
+    val pre = graft.Memo.frame(spark, dir, "prefix")(prefixIndex(w, TAU_NUM, TAU_DEN))
     prefixJoinFrom(w, pre, col("doc_id") <= BATCH_MAX_ID, TAU)
   }
 

@@ -648,28 +648,15 @@ object Multimodal extends graft.Registry {
   // ---- staged perceptual-hash indexes (once per JVM+dir) ---------------
 
   /** The staged-index discipline (SURVEY #112, same shape as
-    * Dedup.stagedFrame): a production pipeline computes perceptual
+    * Dedup's staged frames): a production pipeline computes perceptual
     * hashes AT INGEST and stores them beside the media; the gate and
     * its recall report run on the stored fingerprints, not on a fresh
     * codec decode of the whole corpus per query. Deterministic
     * derivations only, so staging cannot change results; the dirs are
-    * JVM-scoped temp parquet (deleted on exit), the local stand-in for
-    * the DFS index path. */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stagedFrame(spark: SparkSession, key: String)
-                         (derive: => DataFrame): DataFrame = {
-    val path = staged.computeIfAbsent(key, { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft-staged")
-      p.toFile.deleteOnExit()
-      derive.write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
-    spark.read.parquet(path)
-  }
-
-  /** The corpus aHash fingerprints, staged. */
+    * JVM-scoped temp parquet ([[graft.Memo.frame]]), the local stand-in
+    * for the DFS index path. */
   private def stagedPhashes(spark: SparkSession, dir: String): DataFrame =
-    stagedFrame(spark, s"phash:$dir")(phashes(spark, dir))
+    graft.Memo.frame(spark, dir, "phash")(phashes(spark, dir))
 
   /** Per-hash 8x8-bit band entries: band index 0..7 plus that byte of
     * the fingerprint — two near-dup images (hamming <= 8 over 64
@@ -791,7 +778,7 @@ object Multimodal extends graft.Registry {
     // deterministic derived indexes: staged once per (JVM, dir) like
     // the fingerprint table itself — truth, the combined table and the
     // final agg then read parquet instead of re-decoding the corpus
-    val hpStaged = stagedFrame(spark, s"phashtruth:$dir")(hp)
+    val hpStaged = graft.Memo.frame(spark, dir, "phashtruth")(hp)
     val truth = hpStaged
       .withColumn("hd", bit_count(col("pa").bitwiseXOR(col("pb"))))
       .filter(col("hd") <= maxHamming)
@@ -804,7 +791,7 @@ object Multimodal extends graft.Registry {
     // verified edges; a truth pair is caught when both variants share
     // a family label. The converged labels are themselves a
     // deterministic derived index — staged.
-    val fams = stagedFrame(spark, s"phashfam:$dir:$maxHamming") {
+    val fams = graft.Memo.frame(spark, dir, s"phashfam:$maxHamming") {
       val combined = hpStaged
         .select((col("doc_id") * 2).as("doc_id"), col("pa").as("phash"))
         .union(hpStaged.select((col("doc_id") * 2 + 1).as("doc_id"),

@@ -100,15 +100,16 @@ object Mix extends graft.Registry {
         round(col("w") / col("__z") / col("share"), 6).as("boost"))
   }
 
-  /** 24-bit uniform in (0,1) from a doc's id hash: 6 md5 nibbles via
-    * the Splits instr() parse (portable to DuckDB verbatim), +0.5 so
-    * u is never 0 (ln(0) = -inf). */
-  private[graft] def u24Sql(keyExpr: String): String = {
-    val v = (1 to 6).map(i =>
-      s"(instr('0123456789abcdef', substr(md5($keyExpr), $i, 1)) - 1) * ${math.pow(16, 6 - i).toLong}")
-      .mkString("(", " + ", ")")
-    s"(($v) + 0.5) / 16777216.0"
-  }
+  /** 24-bit uniform in (0,1) from a doc's id hash: the first 6 md5
+    * nibbles of `keyExpr`. */
+  private[graft] def u24Sql(keyExpr: String): String = u24SliceSql(s"md5($keyExpr)", 0)
+
+  /** 24-bit uniform in (0,1) from nibbles off+1..off+6 of a hex digest
+    * expression via the Splits instr() parse (portable to DuckDB
+    * verbatim), +0.5 so u is never 0 (ln(0) = -inf). KMeans draws one
+    * such slice per round from a row's one digest. */
+  private[graft] def u24SliceSql(hexExpr: String, off: Int): String =
+    s"((${Splits.nibblesSql(hexExpr, off + 1, 6)}) + 0.5) / 16777216.0"
 
   /** Weighted sampling WITHOUT replacement (Efraimidis-Spirakis, from
     * the public paper): each doc draws priority u^(1/w) from a

@@ -16,11 +16,18 @@ import graft.Tables.t
   */
 object Splits extends graft.Registry {
 
-  /** 0..4095 from the first 3 hex nibbles of `hexExpr` (SQL string
-    * already holding a lowercase hex digest column/expression). */
-  private[graft] def nibblesSql(hexExpr: String): String =
-    (1 to 3).map(i =>
-      s"(instr('0123456789abcdef', substr($hexExpr, $i, 1)) - 1) * ${math.pow(16, 3 - i).toInt}")
+  /** 0..15 from the hex nibble at (1-based) SQL position `pos` of
+    * `hexExpr` (SQL string holding a lowercase hex digest) — the one
+    * spelling of the instr() hex parse, which Spark and DuckDB read
+    * identically (neither needs a hex-parse builtin). */
+  private[graft] def nibbleSql(hexExpr: String, pos: String): String =
+    s"(instr('0123456789abcdef', substr($hexExpr, $pos, 1)) - 1)"
+
+  /** 0..16^n-1 from the `n` hex nibbles of `hexExpr` starting at
+    * position `from`, most significant first. */
+  private[graft] def nibblesSql(hexExpr: String, from: Int = 1, n: Int = 3): String =
+    (0 until n).map(i =>
+      s"${nibbleSql(hexExpr, (from + i).toString)} * ${BigInt(16).pow(n - 1 - i)}")
       .mkString("(", " + ", ")")
 
   /** 0..4095 from the first 3 md5 nibbles of `keyExpr` (SQL string).

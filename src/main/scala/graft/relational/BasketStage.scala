@@ -21,19 +21,18 @@ import graft.Tables.t
   * Scale shape: the items projection is one hash-distinct shuffle;
   * the census is one co-partitioned self-equi-join on the order key
   * (order-size-bounded fan-out) plus one pair-key aggregate. Staged
-  * to parquet once per (JVM, dir) via the Bench-visible
-  * "graft-staged" temp-dir convention; consumers pay a parquet scan. */
+  * to parquet once per (JVM, dataset) via [[graft.Memo.frame]];
+  * consumers pay a parquet scan. */
 object BasketStage {
 
   /** Distinct (l_orderkey, l_partkey) basket items, staged per
-    * (JVM, dir, dataset fingerprint) — StagedCache keys on a dir
-    * fingerprint so a regenerated dataset rebuilds the stage (advice
-    * r16). The explicit not-null filter matches what the optimizer
+    * (JVM, dir, dataset fingerprint) — a regenerated dataset rebuilds
+    * the stage (advice r16). The explicit not-null filter matches what the optimizer
     * infers for the self-join sides (keys are never null in the data;
     * no semantic change) — kept from the pre-staging shape so the
     * staged frame is byte-identical to what consumers built inline. */
   def items(spark: SparkSession, dir: String): DataFrame =
-    graft.StagedCache.parquet(spark, dir, "basket-items") {
+    graft.Memo.frame(spark, dir, "basket-items") {
       t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
         .filter(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
@@ -43,17 +42,13 @@ object BasketStage {
   /** Unfiltered (pa < pb, n_ab) pair-co-occurrence census, staged.
     * UNFILTERED (no minSupport cut) so every consumer can apply its
     * own threshold to the same staged frame. */
-  def pairCounts(spark: SparkSession, dir: String): DataFrame = {
-    // resolve the items staging BEFORE entering the pairs build — a
-    // nested computeIfAbsent on StagedCache's one map is a recursive
-    // update and can throw (the Dedup.stagedClusters discipline)
-    val its = items(spark, dir)
-    graft.StagedCache.parquet(spark, dir, "basket-pairs") {
+  def pairCounts(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.frame(spark, dir, "basket-pairs") {
+      val its = items(spark, dir)
       its.select(col("l_orderkey"), col("l_partkey").as("pa"))
         .join(its.select(col("l_orderkey"), col("l_partkey").as("pb")),
           "l_orderkey")
         .filter(col("pa") < col("pb"))
         .groupBy("pa", "pb").agg(count(lit(1)).as("n_ab"))
     }
-  }
 }

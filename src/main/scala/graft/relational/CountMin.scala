@@ -35,8 +35,7 @@ object CountMin extends graft.Registry {
   private def bucketSql(r: Int, key: String): String = {
     // 4 hex nibbles -> int via the instr() hex-parse (the simhash
     // oracle's trick; DuckDB has no conv())
-    val nib = (i: Int) =>
-      s"(instr('0123456789abcdef', substr(md5(concat('$r:', $key)), $i, 1)) - 1)"
+    val nib = (i: Int) => graft.pipeline.Splits.nibbleSql(s"md5(concat('$r:', $key))", i.toString)
     s"(((${nib(1)} * 16 + ${nib(2)}) * 16 + ${nib(3)}) * 16 + ${nib(4)}) % $W"
   }
 

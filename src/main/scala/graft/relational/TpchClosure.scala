@@ -44,9 +44,6 @@ import graft.Tables.t
   */
 object TpchClosure extends graft.Registry {
 
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Derived partsupp: DISTINCT observed (partkey, suppkey) pairs +
     * integer-hash availqty / supplycost-cents. One shuffle, output
     * bounded by |part| x suppliers-per-part (~4 in TPC-H), i.e.
@@ -55,10 +52,8 @@ object TpchClosure extends graft.Registry {
     * distinct over the full fact scan is the expensive part (the
     * Dedup.stagedCandidates convention; 11 MB of q2's shuffle was
     * re-deriving this). */
-  private[relational] def partsupp(spark: SparkSession, dir: String): DataFrame = {
-    val path = staged.computeIfAbsent(s"ps:$dir", { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft-staged")
-      p.toFile.deleteOnExit()
+  private[graft] def partsupp(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.frame(spark, dir, "partsupp") {
       t(spark, dir, "lineitem")
         .select(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
         .distinct()
@@ -67,11 +62,7 @@ object TpchClosure extends graft.Registry {
         .withColumn("ps_supplycost_cents",
           expr("(ps_partkey * 7919 + ps_suppkey * 104729) % 99001 + 1000"))
         .coalesce(4)
-        .write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
-    spark.read.parquet(path)
-  }
+    }
 
   private val sqlPartsupp =
     """ps AS (

@@ -35,23 +35,21 @@ object IvfIncremental extends graft.Registry {
 
   /** Standing index: centers trained on the standing corpus + its
     * (pid, k) lists, staged per (JVM, dir). */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Double]], String)]()
   private def standingIndex(spark: SparkSession, dir: String)
       : (Array[Array[Double]], DataFrame) = {
     val ed = Points.embedDims
-    val (centers, path) = staged.computeIfAbsent(dir, { _ =>
+    // the lists are written while the centers build holds the standing
+    // corpus, so they are always staged by then
+    def lists(assign: => DataFrame) = graft.Memo.frame(spark, dir, "ivf-standing-lists")(assign)
+    val centers = graft.Memo.value(dir, "ivf-standing-centers") {
       val spts = Points.embeddings64(spark, dir)
         .filter(col("pid") % 10 =!= 0).cache()
       val cs = SimSearch.trainCoarse(spts, CELLS, SimSearch.IVF_ITERS, ed)
-      val p = java.nio.file.Files.createTempDirectory("graft-staged")
-      p.toFile.deleteOnExit()
-      KMeans.assign(spts, cs, ed).select(col("pid"), col("k"))
-        .write.mode("overwrite").parquet(p.toString)
+      lists(KMeans.assign(spts, cs, ed).select(col("pid"), col("k")))
       spts.unpersist()
-      (cs, p.toString)
-    })
-    (centers, spark.read.parquet(path))
+      cs
+    }
+    (centers, lists(sys.error(s"standing lists of $dir not staged with their centers")))
   }
 
   /** Assign a batch frame into the standing cells (no retrain). */

@@ -113,12 +113,13 @@ object IvfPq extends graft.Registry {
     * train+encode chain (~5 s of the query's ~6 s at sf0.1). The
     * whole build is deterministic, so staging cannot change results
     * (same argument as stagedCoarse/stagedCodebooks). */
-  private val resStaged = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Array[Double]]], String)]()
   private def stagedResidualIndex(spark: SparkSession, dir: String)
       : (Array[Array[Array[Double]]], DataFrame) = {
     val ed = Points.embedDims
-    val (codebooks, path) = resStaged.computeIfAbsent(dir, { _ =>
+    // the codes are written while the codebooks build holds the
+    // residual frame, so they are always staged by then
+    def codes(encode: => DataFrame) = graft.Memo.frame(spark, dir, "ivfpq-residual-codes")(encode)
+    val codebooks = graft.Memo.value(dir, "ivfpq-residual-codebooks") {
       val pts = Points.embeddings64(spark, dir).cache()
       val coarse = SimSearch.stagedCoarse(pts, dir, ed)
       // residual frame: same (pid, e1..e64) shape, e_d := e_d - c_cell,d.
@@ -136,15 +137,12 @@ object IvfPq extends graft.Registry {
       rpts.count()
       pts.unpersist()
       val cbs = PQ.trainCodebooks(rpts)
-      val p = java.nio.file.Files.createTempDirectory("graft-staged")
-      p.toFile.deleteOnExit()
-      PQ.encodeCodes(rpts, cbs).join(cells, "pid")
-        .write.mode("overwrite").parquet(p.toString)
+      codes(PQ.encodeCodes(rpts, cbs).join(cells, "pid"))
       rpts.unpersist()
       cells.unpersist()
-      (cbs, p.toString)
-    })
-    (codebooks, spark.read.parquet(path))
+      cbs
+    }
+    (codebooks, codes(sys.error(s"residual codes of $dir not staged with their codebooks")))
   }
 
   def qIvfPqResidual(spark: SparkSession, dir: String): DataFrame = {

@@ -139,12 +139,8 @@ object PQ extends graft.Registry {
     * cannot change results. M x PQ_K x SUBD doubles of driver memory.
     * The residual variant trains on per-cell residuals and is NOT
     * staged (different input frame). */
-  private val codebooksStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
   private[search] def stagedCodebooks(pts: DataFrame, dir: String): Array[Array[Array[Double]]] =
-    codebooksStaged.computeIfAbsent(dir, { _ =>
-      graft.Memo.miss(); trainCodebooks(pts)
-    })
+    graft.Memo.value(dir, "pq-codebooks")(trainCodebooks(pts))
 
   def qPq(spark: SparkSession, dir: String): DataFrame = {
     val pts = Points.embeddings64(spark, dir).cache()

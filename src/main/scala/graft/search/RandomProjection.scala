@@ -57,18 +57,10 @@ object RandomProjection extends graft.Registry {
     * re-evaluates (and re-compiles) the 16x64-term projection tree on
     * BOTH plan branches (corpus and query side). Deterministic sign
     * matrix, so staging cannot change results. */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stagedProjected(spark: SparkSession, dir: String): DataFrame = {
-    val path = staged.computeIfAbsent(dir, { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft-staged")
-      p.toFile.deleteOnExit()
-      projected(t(spark, dir, "embeddings"), "embedding")
-        .select(col("vec_id"), col("p"))
-        .write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
-    spark.read.parquet(path)
-  }
+  private def stagedProjected(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.frame(spark, dir, "rp-projected") {
+      projected(t(spark, dir, "embeddings"), "embedding").select(col("vec_id"), col("p"))
+    }
 
   /** Top-k cosine search in the projected space: queries broadcast,
     * one corpus pass, per-query top-k through the heap rewrite. */

@@ -48,22 +48,10 @@ object SimSearch extends graft.Registry {
     * measured 2-4 s each at sf0.1. The registered `simsearch_topk` /
     * `simsearch_ann` queries stay the raw derivations (the operator
     * being measured); only the quality REPORTS ride the staging. */
-  private val truthStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stagedResult(spark: SparkSession, key: String)
-                          (derive: => DataFrame): DataFrame = {
-    val p = truthStaged.computeIfAbsent(key, { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft-staged")
-      tmp.toFile.deleteOnExit()
-      derive.write.mode("overwrite").parquet(tmp.toString)
-      tmp.toString
-    })
-    spark.read.parquet(p)
-  }
   private[search] def stagedTopK(spark: SparkSession, dir: String): DataFrame =
-    stagedResult(spark, s"topk:$dir")(qTopK(spark, dir))
+    graft.Memo.frame(spark, dir, "topk")(qTopK(spark, dir))
   private[search] def stagedAnn(spark: SparkSession, dir: String): DataFrame =
-    stagedResult(spark, s"ann:$dir")(qAnn(spark, dir))
+    graft.Memo.frame(spark, dir, "ann")(qAnn(spark, dir))
 
   /** Hard-negative mining for contrastive training (the public
     * dense-retrieval recipe — DPR/ANCE-style: for each anchor, the
@@ -180,14 +168,9 @@ object SimSearch extends graft.Registry {
     * change any result; the cache is CELLS x dims doubles of driver
     * memory. Callers pass their (cached) points frame — it is only
     * consumed on the first call. */
-  private val coarseStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
   private[search] def stagedCoarse(pts: DataFrame, dir: String,
                                    ed: Seq[String]): Array[Array[Double]] =
-    coarseStaged.computeIfAbsent(dir, { _ =>
-      graft.Memo.miss()
-      trainCoarse(pts, CELLS, IVF_ITERS, ed)
-    })
+    graft.Memo.value(dir, "ivf-coarse")(trainCoarse(pts, CELLS, IVF_ITERS, ed))
 
   /** The (pid, k) cell-assignment table — the IVF inverted lists —
     * staged to parquet once per (JVM, dir): a deployment assigns
@@ -195,21 +178,16 @@ object SimSearch extends graft.Registry {
     * every IVF-family query re-ran the 8x64-term assign expression
     * over the whole corpus per invocation (most of simsearch_ivf's
     * cost). Deterministic, so staging cannot change results. */
-  private val cellsStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[search] def stagedCells(spark: SparkSession, dir: String): DataFrame = {
     val ed = graft.clustering.Points.embedDims
-    val path = cellsStaged.computeIfAbsent(dir, { _ =>
-      val pts = graft.clustering.Points.embeddings64(spark, dir).cache()
-      val centers = stagedCoarse(pts, dir, ed)
-      val p = java.nio.file.Files.createTempDirectory("graft-staged")
-      p.toFile.deleteOnExit()
-      KMeans.assign(pts, centers, ed).select(col("pid"), col("k"), col("dist"))
-        .write.mode("overwrite").parquet(p.toString)
-      pts.unpersist()
-      p.toString
-    })
-    spark.read.parquet(path)
+    var pts = Option.empty[DataFrame] // cached for the build only
+    val cells = graft.Memo.frame(spark, dir, "ivf-cells") {
+      val p = graft.clustering.Points.embeddings64(spark, dir).cache()
+      pts = Some(p)
+      KMeans.assign(p, stagedCoarse(p, dir, ed), ed).select(col("pid"), col("k"), col("dist"))
+    }
+    pts.foreach(_.unpersist())
+    cells
   }
 
   /** Driver-side cell probe, shared by IVF and IVFPQ: QN query vectors
@@ -234,15 +212,12 @@ object SimSearch extends graft.Registry {
     * recall-curve invocation alone — pure scheduler latency at ~30 ms
     * a job). Same staged-input discipline, driver-side instead of
     * parquet because it is QN rows. */
-  private val qvecsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(Long, Array[Double])]]()
-  private[search] def queryVecs(spark: SparkSession, dir: String): Array[(Long, Array[Double])] =
-    qvecsMemo.computeIfAbsent(dir, { _ =>
-      graft.Memo.miss()
+  private[graft] def queryVecs(spark: SparkSession, dir: String): Array[(Long, Array[Double])] =
+    graft.Memo.value(dir, "query-vecs") {
       t(spark, dir, "embeddings").filter(col("vec_id") <= QN)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
-    })
+    }
 
   /** IVF ANN: the 100 TB scale path. A coarse quantizer (the SAME
     * generic Lloyd operator, 2 iterations, deterministic init) buckets

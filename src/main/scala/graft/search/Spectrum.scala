@@ -45,13 +45,9 @@ object Spectrum extends graft.Registry {
 
   /** (per-dim micro sums, upper-triangle micro-product sums, row
     * count) — exact integers, staged once per (JVM, dir). */
-  private val covStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[BigInt], Array[BigInt], Long)]()
-
   private def stagedSums(spark: SparkSession, dir: String)
       : (Array[BigInt], Array[BigInt], Long) =
-    covStaged.computeIfAbsent(dir, { _ =>
-      graft.Memo.miss()
+    graft.Memo.value(dir, "cov-sums") {
       val parts = t(spark, dir, "embeddings").select("embedding").rdd.mapPartitions { it =>
         val sums = new Array[Long](D)
         val prods = new Array[Long](P)
@@ -90,7 +86,7 @@ object Spectrum extends graft.Registry {
         n += pn
       }
       (s, pr, n)
-    })
+    }
 
   private def r6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble

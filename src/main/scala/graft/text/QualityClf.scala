@@ -85,19 +85,8 @@ object QualityClf extends graft.Registry {
       .select(col("doc_id"), col("y"), col("x"))
   }
 
-  private val stagedFeats =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def features(spark: SparkSession, dir: String): DataFrame = {
-    val path = stagedFeats.computeIfAbsent(dir, { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft-staged")
-      p.toFile.deleteOnExit()
-      featurizeDocs(t(spark, dir, "documents"))
-        .write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
-    spark.read.parquet(path)
-  }
+  private def features(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.frame(spark, dir, "clf-features")(featurizeDocs(t(spark, dir, "documents")))
 
   /** Index-order 33-term dot product of x with the given weight
     * literals, rounded 6, then the rounded sigmoid. */
@@ -147,19 +136,14 @@ object QualityClf extends graft.Registry {
       .select(col("doc_id"), col("y").cast("int").as("label"),
         col("clf_score"), (col("clf_score") >= 0.5).as("keep"))
 
-  /** Trained weights staged per (JVM, dir, split) — the staged-index
-    * discipline applied to model state: the corpus query, the
-    * calibration report and the eval query share one training run
-    * instead of re-walking the 10-job GD chain each (training is
-    * deterministic, so staging cannot change results). */
-  private val stagedW =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
-  private def stagedTrain(key: String)(feats: => DataFrame): Array[Double] =
-    stagedW.computeIfAbsent(key, { _ => graft.Memo.miss(); trainOn(feats) })
-
+  /** Scores the corpus with weights trained once per (JVM, dir,
+    * split) — the staged-index discipline applied to model state: the
+    * corpus query, the calibration report and the eval query share one
+    * training run instead of re-walking the 10-job GD chain each
+    * (training is deterministic, so staging cannot change results). */
   def qQualityClf(spark: SparkSession, dir: String): DataFrame = {
     val feats = features(spark, dir)
-    scoreOn(feats, stagedTrain(s"full:$dir")(feats))
+    scoreOn(feats, graft.Memo.value(dir, "clf-weights-full")(trainOn(feats)))
   }
 
   /** Calibration/reliability report over the trained scores — the
@@ -255,7 +239,7 @@ object QualityClf extends graft.Registry {
       expr(s"${graft.pipeline.Splits.nibbleHashSql("CAST(doc_id AS STRING)")} % 100"))
     val trainF = feats.filter(col("b") < 80)
     val evalF = feats.filter(col("b") >= 80)
-    val w = stagedTrain(s"train80:$dir")(trainF)
+    val w = graft.Memo.value(dir, "clf-weights-train80")(trainOn(trainF))
     val scored = scoreOn(evalF, w)
     val u = aucParts(scored)
     val acc = scored.agg(

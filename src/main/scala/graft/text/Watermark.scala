@@ -30,7 +30,7 @@ object Watermark extends graft.Registry {
   /** SQL green test for one token expression (Spark + DuckDB share
     * md5/instr/substr semantics — the Splits nibble convention). */
   private def greenSql(tok: String): String =
-    s"((instr('0123456789abcdef', substr(md5($tok), 1, 1)) - 1) % 4) = 0"
+    s"(${graft.pipeline.Splits.nibbleSql(s"md5($tok)", "1")} % 4) = 0"
 
   def qWatermark(spark: SparkSession, dir: String): DataFrame =
     watermarkOf(t(spark, dir, "documents"))

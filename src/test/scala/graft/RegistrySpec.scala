@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Registry drift fails here, at `sbt test`, not only after a full
   * Verify run: one owner per key, an oracle only for a registered query,
   * and a SURVEY §2 row for every key (the regex tools/roundclose.sh
-  * uses). */
+  * uses). Likewise a per-dataset cache hand-rolled beside graft.Memo. */
 class RegistrySpec extends AnyFunSuite {
 
   private def owners(part: Registry => Iterable[String]): Map[String, Seq[String]] =
@@ -37,6 +37,20 @@ class RegistrySpec extends AnyFunSuite {
     val listed = "`([a-z0-9_]+)`".r.findAllMatchIn(s2).map(_.group(1)).toSet
     val unlisted = SparkEntry.queries.keySet -- listed
     assert(unlisted.isEmpty, s"registered queries with no SURVEY §2 row: ${unlisted.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("staged state is built only through graft.Memo") {
+    import scala.jdk.CollectionConverters._
+    val forkMarks = Seq("createTempDirectory(\"graft-staged\")", "Memo.miss(", "deleteOnExit")
+      .map(java.util.regex.Pattern.quote).mkString("(", "|", ")").r
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val forks = try s.iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Memo.scala")
+      .flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        forkMarks.findAllMatchIn(text).map(m => s"$p: ${m.matched}")
+      } finally s.close()
+    assert(forks.isEmpty, s"per-dataset state built outside graft.Memo: ${forks.mkString(", ")}")
   }
 
   test("select trims names and rejects unknown ones") {
