@@ -17,10 +17,23 @@ private[graft] object ClusterSql {
   def widenSql(k: Int, cIn: String, out: String,
                dims: Seq[String] = Points.dims, prefix: String = "k",
                mat: Boolean = false): String =
+    s"$out AS ${if (mat) "MATERIALIZED " else ""}(${pivotSql(k, cIn, dims, prefix)})"
+
+  private def pivotSql(k: Int, cIn: String, dims: Seq[String], prefix: String): String =
+    "SELECT " + (0 until k).flatMap(ki => dims.indices.map(j =>
+      s"max(CASE WHEN k = $ki THEN c${j + 1} END) AS $prefix${ki}_${j + 1}")).mkString(", ") +
+      s" FROM $cIn"
+
+  /** `cIn` widened like widenSql, except that a class with no row in
+    * `cIn` takes its center from `prev`, an earlier widen: the engine's
+    * reseed (KMeans.train), where an emptied cluster keeps its previous
+    * center. */
+  private def carrySql(k: Int, cIn: String, prev: String, out: String,
+                       dims: Seq[String], mat: Boolean): String =
     s"$out AS ${if (mat) "MATERIALIZED " else ""}(SELECT " +
-      (0 until k).flatMap(ki => dims.indices.map(j =>
-        s"max(CASE WHEN k = $ki THEN c${j + 1} END) AS $prefix${ki}_${j + 1}")).mkString(", ") +
-      s" FROM $cIn)"
+      (0 until k).flatMap(ki => dims.indices.map(j => s"k${ki}_${j + 1}"))
+        .map(c => s"coalesce(n.$c, o.$c) AS $c").mkString(", ") +
+      s" FROM (${pivotSql(k, cIn, dims, "k")}) n CROSS JOIN $prev o)"
 
   /** Euclidean distance to wide-row center k, matching Points.distTo's
     * operation order (left-fold adds, x*x). */
@@ -33,12 +46,15 @@ private[graft] object ClusterSql {
   /** One assign stage over wide centers: nearest-center k (ties ->
     * lowest k) and its distance, one row per input row of `src`.
     *
-    * An EMPTY class pivots to NULL center columns; its distance is
-    * coalesced to +infinity so both the CASE-chain argmin and least()
-    * behave exactly like the Spark side's +inf sentinel (a raw NULL
-    * d$i would NULL-out whole CASE arms and fall through to ELSE k-1,
-    * silently assigning the wrong class). */
-  /** `mat` materializes BOTH emitted CTEs — required where a consumer
+    * A class whose center columns are NULL (GKA's empty class, which
+    * centersSql leaves out) gets distance +infinity, so both the
+    * CASE-chain argmin and least() behave exactly like GKA's +inf
+    * sentinel center (a raw NULL d$i would NULL-out whole CASE arms and
+    * fall through to ELSE k-1, silently assigning the wrong class).
+    * Lloyd never reaches it: lloydChainSql carries an emptied class's
+    * previous center instead.
+    *
+    * `mat` materializes BOTH emitted CTEs — required where a consumer
     * references them repeatedly (the IVF probe union reads `acell_d`
     * once per cell; DuckDB re-inlines a plain CTE per reference, so
     * without the hint the whole upstream Lloyd chain re-evaluates
@@ -82,16 +98,42 @@ private[graft] object ClusterSql {
        |         ${dims.zipWithIndex.map { case (d, i) => s"round(avg($d), 6) AS c${i + 1}" }.mkString(", ")}
        |  FROM $aIn GROUP BY k)""".stripMargin
 
-  def fullLloydSql(k: Int, iters: Int, ptsSql: String, dims: Seq[String]): String = {
+  /** The Lloyd chain, unrolled: `iters` widen -> assign -> update CTE
+    * triples over `src`, from the centers CTE `c0` to `${p}u$iters`
+    * (KMeans.train's per-iteration step). Each widen after the first
+    * carries the previous center of a class the update left empty, as
+    * KMeans.train does. A widen that a later one carries from is read
+    * twice (by its assign and by that carry), so it is MATERIALIZED:
+    * DuckDB re-inlines a plain CTE per reference, which would re-run
+    * the chain 2^iters times. A non-empty `finalAssign` also
+    * emits the trained centers as one wide row `${p}fw` and `src`
+    * assigned to them as `$p$finalAssign`; `mat` materializes both for
+    * consumers that read them repeatedly. */
+  def lloydChainSql(k: Int, iters: Int, c0: String, dims: Seq[String],
+                    src: String = "pts", p: String = "",
+                    finalAssign: String = "", mat: Boolean = false): String = {
+    // the widen feeding assign i: c0's own pivot, then carried ones;
+    // the next carry, when one follows, reads it a second time
+    def widen(i: Int): String = if (i == 1) s"${c0}w" else s"${p}u${i - 1}w"
+    def widenDef(i: Int, out: String, m: Boolean): String =
+      if (i == 1) widenSql(k, c0, out, dims, mat = m)
+      else carrySql(k, s"${p}u${i - 1}", widen(i - 1), out, dims, m)
     val stages = (1 to iters).map { i =>
-      val cIn = if (i == 1) "c0" else s"u${i - 1}"
-      s"${widenSql(k, cIn, s"${cIn}w", dims)},\n${assignSql(k, s"${cIn}w", s"a$i", "pts", dims)},\n${updateSql(s"a$i", s"u$i", dims)}"
-    }.mkString(",\n")
+      s"${widenDef(i, widen(i), i < iters || finalAssign.nonEmpty)},\n" +
+        s"${assignSql(k, widen(i), s"${p}a$i", src, dims)},\n" +
+        updateSql(s"${p}a$i", s"${p}u$i", dims)
+    }
+    val fin = if (finalAssign.isEmpty) Nil else Seq(
+      widenDef(iters + 1, s"${p}fw", mat),
+      assignSql(k, s"${p}fw", s"$p$finalAssign", src, dims, mat))
+    (stages ++ fin).mkString(",\n")
+  }
+
+  def fullLloydSql(k: Int, iters: Int, ptsSql: String, dims: Seq[String]): String =
     s"""WITH pts AS ($ptsSql),
        |${c0Sql(k, ptsSql, dims)},
-       |$stages
+       |${lloydChainSql(k, iters, "c0", dims)}
        |SELECT * FROM u$iters""".stripMargin
-  }
 
   def assignOnlySql(k: Int, ptsSql: String, dims: Seq[String]): String =
     s"""WITH pts AS ($ptsSql),

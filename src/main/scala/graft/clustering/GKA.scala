@@ -3,6 +3,7 @@ package graft.clustering
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.Exact.r6
 
 /** Genetic k-means (GKA), re-expressing gka.java Spark-first.
   *
@@ -116,8 +117,7 @@ object GKA extends graft.Registry {
       val iv = fits.map(1.0 / _)
       val tot = iv.sum
       val cums = iv.scanLeft(0.0)(_ + _).tail.map(_ / tot)
-      val rows = (0 until P).map(p => (p, fits(p), BigDecimal(cums(p))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      val rows = (0 until P).map(p => (p, fits(p), r6(cums(p))))
       import spark.implicits._
       rows.toDF("p", "fitness", "cum_w")
     } finally { pts.unpersist(); () }

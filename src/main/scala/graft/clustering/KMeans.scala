@@ -1,7 +1,8 @@
 package graft.clustering
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Exact.r6
 
 /** Distributed Lloyd's k-means, re-expressing kmeans.java:91-202
   * (spark_kmeans) Spark-first:
@@ -60,43 +61,60 @@ object KMeans extends graft.Registry {
       .drop("dist_arr")
   }
 
-  /** Per-cluster size + mean center (round 6 = the determinism spec). */
-  def update(assigned: DataFrame, ds: Seq[String] = dims): DataFrame =
+  /** Per-cluster size + mean center (round 6 = the determinism spec),
+    * then any `extra` aggregates after c1..cD. */
+  def update(assigned: DataFrame, ds: Seq[String], extra: Column*): DataFrame =
     assigned.groupBy("k").agg(
       count(lit(1)).as("n"),
       ds.zipWithIndex.map { case (d, i) =>
         round(avg(col(d)), 6).as(s"c${i + 1}")
-      }: _*)
+      } ++ extra: _*)
 
-  /** Full Lloyd loop. Returns the final per-cluster summary
-    * (k, n, c1..cD). One Spark job per iteration; the collected
-    * per-iteration state is K*(D+1) doubles. */
+  def update(assigned: DataFrame): DataFrame = update(assigned, dims)
+
+  /** The Lloyd iteration: `iters` passes of update(assign(...)) from
+    * `init`, one Spark job each; only the K centers move through the
+    * driver. Returns the final centers and the last pass's rows
+    * (k, n, c1..cD, one per non-empty cluster). Caching `pts` is the
+    * caller's business. ClusterSql.lloydChainSql is its oracle. */
+  def train(pts: DataFrame, init: Array[Array[Double]], iters: Int,
+            ds: Seq[String] = dims): (Array[Array[Double]], Array[Row]) = {
+    var centers = init
+    var rows = Array.empty[Row]
+    for (_ <- 1 to iters) {
+      rows = update(assign(pts, centers, ds), ds).collect()
+      centers = reseed(centers, rows, ds)
+    }
+    (centers, rows)
+  }
+
+  /** The next centers from one pass's rows: an empty cluster keeps its
+    * previous center (deterministic variant of the reference's random
+    * reseed, kmeans.java:192-195). */
+  private def reseed(centers: Array[Array[Double]], rows: Array[Row],
+                     ds: Seq[String]): Array[Array[Double]] = {
+    val byK = rows.map(r => r.getAs[Int]("k") ->
+      ds.indices.map(i => r.getDouble(2 + i)).toArray).toMap
+    Array.tabulate(centers.length)(i => byK.getOrElse(i, centers(i)))
+  }
+
+  /** Full Lloyd loop from the first-K init. Returns the final
+    * per-cluster summary (k, n, c1..cD). */
   def lloyd(points: DataFrame, k: Int, iters: Int,
             ds: Seq[String] = dims): DataFrame =
-    lloydWith(points, p => Points.firstKCenters(p, k, ds), k, iters, ds)
+    lloydWith(points, p => Points.firstKCenters(p, k, ds), iters, ds)
 
   /** Lloyd with a pluggable center init (deterministic first-K or
     * Points.randomCenters — kmeans.java:240-248's create_center). */
   def lloydWith(points: DataFrame, init: DataFrame => Array[Array[Double]],
-                k: Int, iters: Int, ds: Seq[String] = dims): DataFrame = {
+                iters: Int, ds: Seq[String] = dims): DataFrame = {
     val pts = points.cache()
     try {
-      var centers = init(pts)
-      var lastRows: Array[org.apache.spark.sql.Row] = Array.empty
-      var schema: org.apache.spark.sql.types.StructType = null
-      for (_ <- 1 to iters) {
-        val u = update(assign(pts, centers, ds), ds)
-        schema = u.schema
-        lastRows = u.collect()
-        val byK = lastRows
-          .map(r => r.getAs[Int]("k") ->
-            ds.indices.map(i => r.getDouble(2 + i)).toArray).toMap
-        // deterministic reseed: an empty cluster keeps its previous center
-        centers = Array.tabulate(k)(i => byK.getOrElse(i, centers(i)))
-      }
+      val (centers, lastRows) = train(pts, init(pts), iters, ds)
       // the result is K rows and already on the driver: return a literal
       // frame so the point cache can be released immediately (a lazy
       // plan over the cache would leak it for the caller's lifetime)
+      val schema = update(assign(pts, centers, ds), ds).schema
       val spark = points.sparkSession
       spark.createDataFrame(spark.sparkContext.parallelize(lastRows.toSeq, 1), schema)
     } finally { points.unpersist(); () }
@@ -150,16 +168,7 @@ object KMeans extends graft.Registry {
     * memory: sum(k) x dims doubles. */
   private def stagedElbowCenters(pts: DataFrame, dir: String): Map[Int, Array[Array[Double]]] =
     graft.Memo.value(dir, "kmeans-elbow-centers") {
-      ELBOW_KS.map { k =>
-        var centers = Points.firstKCenters(pts, k)
-        for (_ <- 1 to ELBOW_ITERS) {
-          val byK = update(assign(pts, centers)).collect()
-            .map(r => r.getAs[Int]("k") ->
-              dims.indices.map(i => r.getDouble(2 + i)).toArray).toMap
-          centers = Array.tabulate(k)(i => byK.getOrElse(i, centers(i)))
-        }
-        k -> centers
-      }.toMap
+      ELBOW_KS.map(k => k -> train(pts, Points.firstKCenters(pts, k), ELBOW_ITERS)._1).toMap
     }
 
   def qElbow(spark: SparkSession, dir: String): DataFrame = {
@@ -177,6 +186,32 @@ object KMeans extends graft.Registry {
     } finally { pts.unpersist(); () }
   }
 
+  /** (n, Σ round(dist² · 1e3)) over an assignment, exact in both
+    * engines. dist² sums at ~1e12 magnitude accumulate more double
+    * error than the round-6 grid resolves — the round-13 dual-layout
+    * sweep caught results flipping with the partition layout. The
+    * MicroGrid fix: quantize each dist² on a scale-3 grid per row
+    * (|dist² * 1e3| stays under 2^52, so the scale-0 decision is exact
+    * in both engines) and sum the integers (order-free). Quantize ONCE
+    * per row with the fp fast path: for 0 <= y < 2^52, floor(y + 0.5)
+    * is bit-equal to the oracle's round(y) (ties are representable,
+    * the +0.5 add is exact), and the max-aggregate guard proves every
+    * row was in range AND the BIGINT sum cannot wrap — codegen long
+    * adds instead of the per-row BigDecimal walk Spark's round() takes
+    * on doubles (measured 0.9 -> 4.2 s per bench rep on the 4-pass
+    * sweep). */
+  private def quantizedSqDist(assigned: DataFrame): (Long, BigInt) = {
+    val r = assigned
+      .withColumn("__zq", expr("CAST(floor(dist * dist * 1000.0 + 0.5D) AS BIGINT)"))
+      .agg(count(lit(1)).as("n"), sum("__zq").as("sq"), max("__zq").as("mx"))
+      .collect()(0)
+    val n = r.getLong(0)
+    require(r.getLong(2) < 4500000000000000L &&
+      BigInt(r.getLong(2)) * n <= Long.MaxValue,
+      s"quantized dist^2 out of exact range (n=$n max=${r.getLong(2)})")
+    (n, BigInt(r.getLong(1)))
+  }
+
   /** BIC/AIC model selection over the elbow trajectory (the X-means
     * family's answer to "which k": the SSE-based information criteria
     * BIC = n ln(SSE/n) + kD ln(n), AIC = n ln(SSE/n) + 2kD charge the
@@ -191,34 +226,10 @@ object KMeans extends graft.Registry {
     val pts = Points.lineitem4dSpread(spark, dir).cache()
     try {
       val d = dims.size
-      def r6(x: Double): Double =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       val byK = stagedElbowCenters(pts, dir)
       val rows = ELBOW_KS.map { k =>
-        // dist^2 sums at ~1e12 magnitude accumulate more double error
-        // than the round-6 grid resolves — the round-13 dual-layout
-        // sweep caught msd flipping with the partition layout. The
-        // MicroGrid fix: quantize each dist^2 on a scale-3 grid per
-        // row (|dist^2 * 1e3| stays under 2^52, so the scale-0
-        // decision is exact in both engines), sum the integers in
-        // DECIMAL (order-free), and round msd via exact integer
-        // division: msd*1e6 = sq*1e3 / n.
-        // quantize ONCE per row with the fp fast path: for 0 <= y <
-        // 2^52, floor(y + 0.5) is bit-equal to the oracle's round(y)
-        // (ties are representable, the +0.5 add is exact), and the
-        // max-aggregate guard proves every row was in range AND the
-        // BIGINT sum cannot wrap — codegen long adds instead of the
-        // per-row BigDecimal walk Spark's round() takes on doubles
-        // (measured 0.9 -> 4.2 s per bench rep on the 4-pass sweep)
-        val r = assign(pts, byK(k))
-          .withColumn("__zq", expr("CAST(floor(dist * dist * 1000.0 + 0.5D) AS BIGINT)"))
-          .agg(count(lit(1)).as("n"), sum("__zq").as("sq"), max("__zq").as("mx"))
-          .collect()(0)
-        val n = r.getLong(0)
-        require(r.getLong(2) < 4500000000000000L &&
-          BigInt(r.getLong(2)) * n <= Long.MaxValue,
-          s"quantized dist^2 out of exact range (n=$n max=${r.getLong(2)})")
-        val sq = BigInt(r.getLong(1))
+        val (n, sq) = quantizedSqDist(assign(pts, byK(k)))
+        // msd rounds by exact integer division: msd*1e6 = sq*1e3 / n
         val msd = graft.functions.MicroGrid.roundDiv6(sq * 1000L, BigInt(n))
         val fit = n * math.log(msd)
         (k, n, msd, r6(fit + (k * d) * math.log(n.toDouble)), r6(fit + 2 * k * d))
@@ -248,14 +259,7 @@ object KMeans extends graft.Registry {
     * nothing. K x dims doubles of driver memory. */
   private def stagedFinalCenters(pts: DataFrame, dir: String): Array[Array[Double]] =
     graft.Memo.value(dir, "kmeans-final-centers") {
-      var centers = Points.firstKCenters(pts, K)
-      for (_ <- 1 to ITERS) {
-        val byK = update(assign(pts, centers)).collect()
-          .map(r => r.getAs[Int]("k") ->
-            dims.indices.map(i => r.getDouble(2 + i)).toArray).toMap
-        centers = Array.tabulate(K)(i => byK.getOrElse(i, centers(i)))
-      }
-      centers
+      train(pts, Points.firstKCenters(pts, K), ITERS)._1
     }
 
   def qSilhouette(spark: SparkSession, dir: String): DataFrame = {
@@ -307,8 +311,7 @@ object KMeans extends graft.Registry {
         val db = (0 until K).filter(j => j != i && scatter.contains(j))
           .map(j => (scatter(i)._2 + scatter(j)._2) / d(i, j)).max
         // HALF_UP to match the round(x, 6) both engines use elsewhere
-        org.apache.spark.sql.Row(i, scatter(i)._1, scatter(i)._2,
-          BigDecimal(db).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        Row(i, scatter(i)._1, scatter(i)._2, r6(db))
       }
       import org.apache.spark.sql.types._
       val schema = StructType(Seq(
@@ -337,25 +340,11 @@ object KMeans extends graft.Registry {
     try {
       val centers = stagedFinalCenters(pts, dir)
       val fa = assign(pts, centers)
-      // W at ~1e12 magnitude: a raw double sum carries more error than
-      // the scale-3 grid (round-13 dual-layout sweep caught the flip).
-      // MicroGrid: per-row scale-3 quantized dist^2, order-free exact
-      // DECIMAL sum; W = sum/1e3 is then an exact 3-decimal (< 2^53,
-      // so the double conversion is exact too).
-      val tot = fa
-        .withColumn("__zq", expr("CAST(floor(dist * dist * 1000.0 + 0.5D) AS BIGINT)"))
-        .agg(count(lit(1)).as("n"), sum("__zq").as("wq"), max("__zq").as("mx"))
-        .collect()(0)
-      // fp fast-path quantization (bit-equal to round() for 0 <= y <
-      // 2^52, see qBic) + the max guard proving range and no BIGINT
-      // wrap; BigInt.toDouble and DuckDB's HUGEINT->DOUBLE cast are
-      // both correctly rounded, so w is identical cross-engine at any
-      // magnitude (exactly the 3-decimal while wq < 2^53)
-      val n = tot.getLong(0)
-      require(tot.getLong(2) < 4500000000000000L &&
-        BigInt(tot.getLong(2)) * n <= Long.MaxValue,
-        s"quantized dist^2 out of exact range (n=$n max=${tot.getLong(2)})")
-      val wq = BigInt(tot.getLong(1))
+      // W = Σ quantized dist² / 1e3: BigInt.toDouble and DuckDB's
+      // HUGEINT->DOUBLE cast are both correctly rounded, so w is
+      // identical cross-engine at any magnitude (exactly the 3-decimal
+      // while wq < 2^53)
+      val (n, wq) = quantizedSqDist(fa)
       val w = wq.toDouble / 1000.0
       val gmCols = dims.map(d => round(avg(col(d)), 6).as(d))
       val gmRow = pts.agg(gmCols.head, gmCols.tail: _*).collect()(0)
@@ -374,8 +363,7 @@ object KMeans extends graft.Registry {
         graft.functions.MicroGrid.quantizeBig(sizes(i).toDouble * sq, 1000.0)
       }.sum
       val b = bq.toDouble / 1000.0
-      val ch = BigDecimal((b / (kUsed - 1)) / (w / (n - kUsed)))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val ch = r6((b / (kUsed - 1)) / (w / (n - kUsed)))
       import org.apache.spark.sql.types._
       val schema = StructType(Seq(
         StructField("n", LongType, nullable = false),
@@ -385,24 +373,18 @@ object KMeans extends graft.Registry {
         StructField("ch", DoubleType, nullable = false)))
       spark.createDataFrame(
         spark.sparkContext.parallelize(
-          Seq(org.apache.spark.sql.Row(n, kUsed, b, w, ch)), 1), schema)
+          Seq(Row(n, kUsed, b, w, ch)), 1), schema)
     } finally { pts.unpersist(); () }
   }
 
   private val calinskiHarabaszSql: String = {
-    val stages = (1 to ITERS).map { i =>
-      val cIn = if (i == 1) "c0" else s"u${i - 1}"
-      s"${widenSql(cIn, s"${cIn}w")},\n${assignSql(s"${cIn}w", s"a$i")},\n${updateSql(s"a$i", s"u$i")}"
-    }.mkString(",\n")
     val gmCols = dims.zipWithIndex.map { case (d, i) =>
       s"round(avg($d), 6) AS g${i + 1}" }.mkString(", ")
     val bExpr = dims.indices.map(x =>
       s"(c.c${x + 1} - g${x + 1}) * (c.c${x + 1} - g${x + 1})").mkString(" + ")
     s"""WITH pts AS ($ptsSql),
        |$c0Sql,
-       |$stages,
-       |${widenSql(s"u$ITERS", "fw")},
-       |${assignSql("fw", "fa")},
+       |$finalChainSql,
        |tot AS (SELECT count(*) AS n,
        |    CAST(sum(CAST(round(dist * dist * 1000.0) AS HUGEINT)) AS DOUBLE)
        |      / 1000.0 AS w FROM fa),
@@ -423,17 +405,11 @@ object KMeans extends graft.Registry {
     * the K-row frames (tiny cross join in DuckDB only — the Spark
     * side does this on the driver). */
   private val daviesBouldinSql: String = {
-    val stages = (1 to ITERS).map { i =>
-      val cIn = if (i == 1) "c0" else s"u${i - 1}"
-      s"${widenSql(cIn, s"${cIn}w")},\n${assignSql(s"${cIn}w", s"a$i")},\n${updateSql(s"a$i", s"u$i")}"
-    }.mkString(",\n")
     val dExpr = dims.indices.map(x =>
       s"(a.c${x + 1} - b.c${x + 1}) * (a.c${x + 1} - b.c${x + 1})").mkString(" + ")
     s"""WITH pts AS ($ptsSql),
        |$c0Sql,
-       |$stages,
-       |${widenSql(s"u$ITERS", "fw")},
-       |${assignSql("fw", "fa")},
+       |$finalChainSql,
        |sc AS (SELECT k, count(*) AS n, round(avg(dist), 6) AS s FROM fa GROUP BY k),
        |comp AS (SELECT sa.k, sa.n, sa.s,
        |    max((sa.s + sb.s) / sqrt($dExpr)) AS db
@@ -443,17 +419,11 @@ object KMeans extends graft.Registry {
        |SELECT k, n, s AS scatter, round(db, 6) AS db_component FROM comp""".stripMargin
   }
   private val silhouetteSql: String = {
-    val stages = (1 to ITERS).map { i =>
-      val cIn = if (i == 1) "c0" else s"u${i - 1}"
-      s"${widenSql(cIn, s"${cIn}w")},\n${assignSql(s"${cIn}w", s"a$i")},\n${updateSql(s"a$i", s"u$i")}"
-    }.mkString(",\n")
     val bExpr = "least(" + (0 until K).map(j =>
       s"CASE WHEN k = $j THEN CAST('infinity' AS DOUBLE) ELSE d$j END").mkString(", ") + ")"
     s"""WITH pts AS ($ptsSql),
        |$c0Sql,
-       |$stages,
-       |${widenSql(s"u$ITERS", "fw")},
-       |${assignSql("fw", "fa")},
+       |$finalChainSql,
        |sil AS (SELECT k, dist AS a, $bExpr AS b FROM fa)
        |SELECT k, count(*) AS n,
        |  round(avg(CASE WHEN greatest(a, b) = 0 THEN 0 ELSE (b - a) / greatest(a, b) END), 6) AS mean_silhouette
@@ -462,66 +432,34 @@ object KMeans extends graft.Registry {
 
   // ---- oracle SQL (see ClusterSql for the shared generators) ----------
 
-  import ClusterSql.{assignSql => asg, widenSql => wid}
-
-  private def assignSql(cwIn: String, out: String): String = asg(K, cwIn, out)
-  private def widenSql(cIn: String, out: String): String = wid(K, cIn, out)
-
   /** Centers CTE c0: first K points by (pid, dims). */
   private def c0Sql: String = ClusterSql.c0Sql(K, ptsSql, dims)
 
-  /** One update stage: per-cluster mean (round 6) from an assignment. */
-  private def updateSql(aIn: String, out: String): String =
-    ClusterSql.updateSql(aIn, out, dims)
+  /** The kmeans_full chain plus its final assignment `fa`. */
+  private def finalChainSql: String =
+    ClusterSql.lloydChainSql(K, ITERS, "c0", dims, finalAssign = "fa")
 
-  val oracleAssign: String =
-    s"""WITH pts AS ($ptsSql),
-       |$c0Sql,
-       |${widenSql("c0", "c0w")},
-       |${assignSql("c0w", "a1")}
-       |SELECT pid, k, dist FROM a1""".stripMargin
+  val oracleAssign: String = ClusterSql.assignOnlySql(K, ptsSql, dims)
 
-  val oracleUpdate: String =
-    s"""WITH pts AS ($ptsSql),
-       |$c0Sql,
-       |${widenSql("c0", "c0w")},
-       |${assignSql("c0w", "a1")},
-       |${updateSql("a1", "u1")}
-       |SELECT * FROM u1""".stripMargin
+  val oracleUpdate: String = ClusterSql.fullLloydSql(K, 1, ptsSql, dims)
 
   val oracleSse: String =
     s"""WITH pts AS ($ptsSql),
        |$c0Sql,
-       |${widenSql("c0", "c0w")},
-       |${assignSql("c0w", "a1")}
+       |${ClusterSql.widenSql(K, "c0", "c0w")},
+       |${ClusterSql.assignSql(K, "c0w", "a1")}
        |SELECT count(*) AS n, round(avg(dist), 3) AS avg_dist FROM a1""".stripMargin
 
   /** The full Lloyd loop, unrolled into widen/assign/update CTE sets. */
-  val oracleFull: String = {
-    val stages = (1 to ITERS).map { i =>
-      val cIn = if (i == 1) "c0" else s"u${i - 1}"
-      s"${widenSql(cIn, s"${cIn}w")},\n${assignSql(s"${cIn}w", s"a$i")},\n${updateSql(s"a$i", s"u$i")}"
-    }.mkString(",\n")
-    s"""WITH pts AS ($ptsSql),
-       |$c0Sql,
-       |$stages
-       |SELECT * FROM u$ITERS""".stripMargin
-  }
+  val oracleFull: String = ClusterSql.fullLloydSql(K, ITERS, ptsSql, dims)
 
   /** The per-k unrolled Lloyd chains the elbow AND the BIC/AIC
     * oracles share: one namespaced chain per candidate k, each
     * finishing with the final assignment table e{k}af. */
   private val elbowChainsSql: String = ELBOW_KS.map { k =>
     val p = s"e$k"
-    val stages = (1 to ELBOW_ITERS).map { i =>
-      val cIn = if (i == 1) s"${p}c0" else s"${p}u${i - 1}"
-      s"${wid(k, cIn, s"${cIn}w")},\n${asg(k, s"${cIn}w", s"${p}a$i")},\n" +
-        ClusterSql.updateSql(s"${p}a$i", s"${p}u$i", dims)
-    }.mkString(",\n")
     s"""${ClusterSql.c0Sql(k, ptsSql, dims, s"${p}c0")},
-       |$stages,
-       |${wid(k, s"${p}u$ELBOW_ITERS", s"${p}fw")},
-       |${asg(k, s"${p}fw", s"${p}af")}""".stripMargin
+       |${ClusterSql.lloydChainSql(k, ELBOW_ITERS, s"${p}c0", dims, p = p, finalAssign = "af")}""".stripMargin
   }.mkString(",\n")
 
   /** The elbow sweep's oracle: each chain's final assignment yields
@@ -591,6 +529,14 @@ object KMeans extends graft.Registry {
        |SELECT pid, $scaled FROM pts CROSS JOIN st""".stripMargin
   }
 
+  /** Per-dim quantiles (dim -> p -> value) from the bounded-state
+    * exact-quantile engine (graft.relational.Quantiles) over the dims
+    * melted long — no single-buffer percentile aggregate. */
+  private def dimQuantiles(pts: DataFrame, ps: Seq[Double]): Map[String, Map[Double, Double]] =
+    graft.relational.Quantiles.grouped(pts.select(expr(
+      s"stack(${dims.size}, ${dims.map(d => s"'$d', $d").mkString(", ")}) as (g, v)")),
+      "g", "v", ps)
+
   /** Robust (median/IQR) scaling of the point set — the outlier-proof
     * sibling of min-max normalization (a single extreme value pins
     * min-max scaling to a corner; quartiles don't move). The per-dim
@@ -602,9 +548,7 @@ object KMeans extends graft.Registry {
     * with no rounding. */
   def qRobustScale(spark: SparkSession, dir: String): DataFrame = {
     val pts = Points.lineitem4d(spark, dir)
-    val melted = pts.select(expr(
-      s"stack(${dims.size}, ${dims.map(d => s"'$d', $d").mkString(", ")}) as (g, v)"))
-    val qs = graft.relational.Quantiles.grouped(melted, "g", "v", Seq(0.25, 0.5, 0.75))
+    val qs = dimQuantiles(pts, Seq(0.25, 0.5, 0.75))
     pts.select(col("pid") +: dims.map { d =>
       val med = qs(d)(0.5)
       val iqr = qs(d)(0.75) - qs(d)(0.25)
@@ -622,11 +566,7 @@ object KMeans extends graft.Registry {
     * codegen'd least/greatest projection. */
   def qWinsorize(spark: SparkSession, dir: String): DataFrame = {
     val pts = Points.lineitem4d(spark, dir)
-    val melted = pts.select(expr(
-      s"stack(${dims.size}, ${dims.map(d => s"'$d', $d").mkString(", ")}) as (g, v)"))
-    val qs = graft.relational.Quantiles.grouped(melted, "g", "v", Seq(0.05, 0.95))
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val qs = dimQuantiles(pts, Seq(0.05, 0.95))
     pts.select(col("pid") +: dims.map { d =>
       least(greatest(col(d), lit(r6(qs(d)(0.05)))), lit(r6(qs(d)(0.95))))
         .as(s"w_$d")
@@ -774,8 +714,7 @@ object KMeans extends graft.Registry {
     for (r <- 1 to SCAL_ROUNDS) {
       // phi ROUNDED 6 before it enters the draw threshold: the raw
       // sum is order-dependent, the rounded value is engine-stable
-      val phi = BigDecimal(base.agg(sum(d2)).head.getDouble(0))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val phi = r6(base.agg(sum(d2)).head.getDouble(0))
       val u = col(s"__u$r")
       // canonicalize per pid (the testdata duplicates rows per pid):
       // identical rows share one draw decision; a pid with several
@@ -822,12 +761,8 @@ object KMeans extends graft.Registry {
     * dim. */
   def qQuantileTransform(spark: SparkSession, dir: String): DataFrame = {
     val pts = Points.lineitem4d(spark, dir)
-    val melted = pts.select(expr(
-      s"stack(${dims.size}, ${dims.map(d => s"'$d', $d").mkString(", ")}) as (g, v)"))
     val ps = (1 to 9).map(_ / 10.0)
-    val qs = graft.relational.Quantiles.grouped(melted, "g", "v", ps)
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val qs = dimQuantiles(pts, ps)
     pts.select(col("pid") +: dims.map { d =>
       ps.map(p => when(col(d) >= lit(r6(qs(d)(p))), 1).otherwise(0))
         .reduce(_ + _).as(s"q_$d")
@@ -867,21 +802,13 @@ object KMeans extends graft.Registry {
       for (iter <- 1 to iters) {
         val t0 = System.nanoTime()
         val (rows, run) = graft.QueryRun.record(spark) {
-          assign(pts, centers, ds)
-            .groupBy("k")
-            .agg(count(lit(1)).as("n"),
-              ds.zipWithIndex.map { case (d, i) =>
-                round(avg(col(d)), 6).as(s"c${i + 1}")
-              } :+ sum(col("dist")).as("sse_part"): _*)
-            .collect()
+          update(assign(pts, centers, ds), ds, sum(col("dist")).as("sse_part")).collect()
         }
         val ours = run.jobs.filter(_.group.contains(jobGroup)).flatMap(_.stageIds).toSet
         val (reduce, map) = run.stages.filter(s => ours(s.id)).partition(_.shuffleRead > 0)
         val sse = rows.map(_.getAs[Double]("sse_part")).sum
         if (sse < best) best = sse
-        val byK = rows.map(r => r.getAs[Int]("k") ->
-          ds.indices.map(i => r.getDouble(2 + i)).toArray).toMap
-        centers = Array.tabulate(k)(i => byK.getOrElse(i, centers(i)))
+        centers = reseed(centers, rows, ds)
         out += ((iter, sse, best, map.map(_.durationMs max 0L).sum,
           reduce.map(_.durationMs max 0L).sum,
           (System.nanoTime() - t0) / 1000000L))
@@ -910,7 +837,7 @@ object KMeans extends graft.Registry {
 
   def qRandomInit(spark: SparkSession, dir: String): DataFrame =
     lloydWith(Points.lineitem4dSpread(spark, dir),
-      p => Points.randomCenters(p, K, RAND_SEED), K, RAND_ITERS)
+      p => Points.randomCenters(p, K, RAND_SEED), RAND_ITERS)
 
   /** Unrolled random-init Lloyd oracle: c0 by the seeded-md5 ranking,
     * then the same widen/assign/update stages as kmeans_full. */
@@ -921,13 +848,9 @@ object KMeans extends graft.Registry {
          |  SELECT CAST(row_number() OVER (ORDER BY $oc) - 1 AS INT) AS k,
          |         ${dims.zipWithIndex.map { case (d, i) => s"$d AS c${i + 1}" }.mkString(", ")}
          |  FROM (SELECT * FROM pts ORDER BY $oc LIMIT $K))""".stripMargin
-    val stages = (1 to RAND_ITERS).map { i =>
-      val cIn = if (i == 1) "c0" else s"u${i - 1}"
-      s"${widenSql(cIn, s"${cIn}w")},\n${assignSql(s"${cIn}w", s"a$i")},\n${updateSql(s"a$i", s"u$i")}"
-    }.mkString(",\n")
     s"""WITH pts AS ($ptsSql),
        |$c0,
-       |$stages
+       |${ClusterSql.lloydChainSql(K, RAND_ITERS, "c0", dims)}
        |SELECT * FROM u$RAND_ITERS""".stripMargin
   }
 
@@ -960,13 +883,7 @@ object KMeans extends graft.Registry {
     try {
       val seedPool = Points.firstKCenters(pts, RUNS * K)
       val results = (0 until RUNS).map { r =>
-        var centers = seedPool.slice(r * K, r * K + K)
-        for (_ <- 1 to RUN_ITERS) {
-          val byK = update(assign(pts, centers)).collect()
-            .map(row => row.getAs[Int]("k") ->
-              dims.indices.map(i => row.getDouble(2 + i)).toArray).toMap
-          centers = Array.tabulate(K)(i => byK.getOrElse(i, centers(i)))
-        }
+        val (centers, _) = train(pts, seedPool.slice(r * K, r * K + K), RUN_ITERS)
         val a = assign(pts, centers)
           .agg(count(lit(1)).as("n"), round(avg(col("dist")), 3).as("avg_dist")).head
         (r, a.getLong(0), a.getDouble(1))
@@ -988,17 +905,11 @@ object KMeans extends graft.Registry {
            |         ${dims.zipWithIndex.map { case (d, i) => s"$d AS c${i + 1}" }.mkString(", ")}
            |  FROM (SELECT * FROM pts ORDER BY ${ClusterSql.orderCols} LIMIT ${(r + 1) * K})
            |  QUALIFY row_number() OVER (ORDER BY ${ClusterSql.orderCols}) > ${r * K})""".stripMargin
-      val stages = (1 to RUN_ITERS).map { i =>
-        val cIn = if (i == 1) s"r${r}c0" else s"r${r}u${i - 1}"
-        s"${ClusterSql.widenSql(K, cIn, s"${cIn}w")},\n" +
-          s"${ClusterSql.assignSql(K, s"${cIn}w", s"r${r}a$i")},\n" +
-          s"${ClusterSql.updateSql(s"r${r}a$i", s"r${r}u$i", dims)}"
-      }.mkString(",\n")
-      val finalAssign =
-        s"${ClusterSql.widenSql(K, s"r${r}u$RUN_ITERS", s"r${r}fw")},\n" +
-          s"${ClusterSql.assignSql(K, s"r${r}fw", s"r${r}fa")},\n" +
-          s"r${r}res AS (SELECT $r AS run, count(*) AS n, round(avg(dist), 3) AS avg_dist FROM r${r}fa)"
-      s"$c0,\n$stages,\n$finalAssign"
+      val chain = ClusterSql.lloydChainSql(K, RUN_ITERS, s"r${r}c0", dims,
+        p = s"r$r", finalAssign = "fa")
+      s"""$c0,
+         |$chain,
+         |r${r}res AS (SELECT $r AS run, count(*) AS n, round(avg(dist), 3) AS avg_dist FROM r${r}fa)""".stripMargin
     }.mkString(",\n")
     val union = (0 until RUNS).map(r => s"SELECT * FROM r${r}res").mkString(" UNION ALL ")
     s"""WITH pts AS ($ptsSql),

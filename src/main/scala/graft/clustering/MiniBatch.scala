@@ -2,6 +2,7 @@ package graft.clustering
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Exact.r6
 
 /** Mini-batch k-means (Sculley 2010, "Web-Scale K-Means Clustering"):
   * each iteration assigns only a deterministic SUBSET of the points to
@@ -33,9 +34,6 @@ object MiniBatch extends graft.Registry {
   private val K = 4
   private val ITERS = 3
 
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   def qMiniBatch(spark: SparkSession, dir: String): DataFrame = {
     val pts = Points.lineitem4dSpread(spark, dir).cache()
     try {
@@ -50,7 +48,7 @@ object MiniBatch extends graft.Registry {
           val eta = n.toDouble / vNew.toDouble
           for (j <- dims.indices) {
             val m = r.getDouble(2 + j)
-            centers(k)(j) = round6(centers(k)(j) + (m - centers(k)(j)) * eta)
+            centers(k)(j) = r6(centers(k)(j) + (m - centers(k)(j)) * eta)
           }
           v(k) = vNew
         }

@@ -26,6 +26,16 @@ package graft.functions
   * [[duck6]] is the DuckDB oracle mirror (HUGEINT). */
 object Exact {
 
+  /** Driver-side round to 6 decimals, HALF_UP on the double's decimal
+    * form: the one spelling of the determinism spec's round(x, 6) for
+    * values computed on the driver. */
+  def d6(x: Double): BigDecimal = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+
+  def r6(x: Double): Double = d6(x).toDouble
+
+  /** An exact decimal rounded the same way. */
+  def r6(x: BigDecimal): Double = x.setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   def rate6(num: String, den: String): String =
     s"""CAST((2 * CAST(($num) AS DECIMAL(38,0)) * 1000000 + ($den))
        | DIV (2 * CAST(($den) AS DECIMAL(38,0))) AS DOUBLE) / 1000000.0"""

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables.t
+import graft.functions.Exact.r6
 
 /** Statistical analytics wave — the data-QC / feature-engineering
   * aggregates a training-data warehouse runs daily, each in its
@@ -812,8 +813,6 @@ object Analytics extends graft.Registry {
       .collect()
       .map(r => (r.getDate(0), r.getDecimal(1).doubleValue))
       .sortBy(_._1.getTime)
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     var l = daily.head._2
     var b = 0.0
     val rows = daily.head match { case (d0, x0) =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables.t
+import graft.functions.Exact.r6
 
 /** Core relational operators over the testdata star schema: scan+filter
   * with pushdown, hash/broadcast joins, partial aggregation, top-k,
@@ -1021,8 +1022,6 @@ object Relational extends graft.Registry {
       .select("event_type", "next_type", "p").collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
     val states = pRows.keys.map(_._1).toSeq.distinct.sorted
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     var pi = states.map(_ => r6(1.0 / states.length)).toArray
     for (_ <- 1 to sweeps) {
       val raw = states.map { j =>
@@ -1099,8 +1098,6 @@ object Relational extends graft.Registry {
         expr(graft.functions.Exact.rate6("n", "total")).as("p"))
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val froms = tm.keys.map(_._1).toSeq.distinct
     val states = (tm.keys.map(_._1) ++ tm.keys.map(_._2)).toSeq.distinct.sorted
     val channels = froms.filter(_ != "START").sorted

@@ -3,6 +3,7 @@ package graft.search
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.MicroGrid
+import graft.functions.Exact.{d6, r6}
 
 /** Embedding centroid-drift monitor — the per-class distribution-shift
   * check a production embedding pipeline runs between two snapshots
@@ -56,13 +57,10 @@ object Drift extends graft.Registry {
     val out = labels.flatMap { l =>
       for ((sa, na) <- byKey.get((l, 0)); (sb, nb) <- byKey.get((l, 1))) yield {
       val diffs = Array.tabulate(D) { d =>
-        BigDecimal(MicroGrid.roundDiv6(sa(d), BigInt(na)))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP) -
-          BigDecimal(MicroGrid.roundDiv6(sb(d), BigInt(nb)))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP)
+        d6(MicroGrid.roundDiv6(sa(d), BigInt(na))) -
+          d6(MicroGrid.roundDiv6(sb(d), BigInt(nb)))
       }
-      val drift2 = diffs.map(x => x * x).sum
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val drift2 = r6(diffs.map(x => x * x).sum)
       val topDim = diffs.zipWithIndex
         .maxBy { case (x, d) => (x.abs, BigDecimal(-d)) }._2
       (l, na, nb, drift2, topDim, diffs(topDim).toDouble)

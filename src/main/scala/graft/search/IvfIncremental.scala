@@ -44,7 +44,8 @@ object IvfIncremental extends graft.Registry {
     val centers = graft.Memo.value(dir, "ivf-standing-centers") {
       val spts = Points.embeddings64(spark, dir)
         .filter(col("pid") % 10 =!= 0).cache()
-      val cs = SimSearch.trainCoarse(spts, CELLS, SimSearch.IVF_ITERS, ed)
+      val (cs, _) =
+        KMeans.train(spts, Points.firstKCenters(spts, CELLS, ed), SimSearch.IVF_ITERS, ed)
       lists(KMeans.assign(spts, cs, ed).select(col("pid"), col("k")))
       spts.unpersist()
       cs
@@ -106,21 +107,14 @@ object IvfIncremental extends graft.Registry {
 
   val oracleSql: Map[String, String] = {
     val ed = Points.embedDims
-    val stages = (1 to SimSearch.IVF_ITERS).map { i =>
-      val cIn = if (i == 1) "c0" else s"u${i - 1}"
-      s"${ClusterSql.widenSql(CELLS, cIn, s"${cIn}w", ed)},\n" +
-        s"${ClusterSql.assignSql(CELLS, s"${cIn}w", s"a$i", "spts", ed)},\n" +
-        s"${ClusterSql.updateSql(s"a$i", s"u$i", ed)}"
-    }.mkString(",\n")
     Map("simsearch_ivf_incremental" ->
       s"""WITH pts AS (${Points.embedPtsSql}),
          |spts AS MATERIALIZED (SELECT * FROM pts WHERE pid % 10 != 0),
          |bpts AS (SELECT * FROM pts WHERE pid % 10 = 0),
          |${ClusterSql.c0Sql(CELLS, "", ed, "c0", "spts")},
-         |$stages,
-         |${ClusterSql.widenSql(CELLS, s"u${SimSearch.IVF_ITERS}", "cwinc", ed, mat = true)},
-         |${ClusterSql.assignSql(CELLS, "cwinc", "astand", "spts", ed, mat = true)},
-         |${ClusterSql.assignSql(CELLS, "cwinc", "abatch", "bpts", ed)},
+         |${ClusterSql.lloydChainSql(CELLS, SimSearch.IVF_ITERS, "c0", ed, "spts",
+              finalAssign = "astand", mat = true)},
+         |${ClusterSql.assignSql(CELLS, "fw", "abatch", "bpts", ed)},
          |cells AS (SELECT CAST(f AS INT) AS cell FROM range(0, $CELLS) ff(f)),
          |sc AS (SELECT k, count(*) AS n FROM astand GROUP BY k),
          |bc AS (SELECT k, count(*) AS n FROM abatch GROUP BY k),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.clustering.{KMeans, Points}
+import graft.functions.Exact.r6
 
 /** IVF+PQ composed — the full FAISS-style billion-vector architecture
   * from its public description: the coarse quantizer narrows each
@@ -11,7 +12,7 @@ import graft.clustering.{KMeans, Points}
   * cells are scored from their 8-byte PQ codes with the ADC lookup
   * table (the shared-codebook, non-residual IVFPQ variant — FAISS's
   * `by_residual=false`). Composes the two already-oracled trainers:
-  * SimSearch.trainCoarse and PQ.trainCodebooks.
+  * SimSearch.stagedCoarse (KMeans.train) and PQ.trainCodebooks.
   *
   * Scale shape: query-time work is (corpus/CELLS)*NPROBE code rows per
   * query, each costing 8 array lookups — no vector arithmetic touches
@@ -177,23 +178,23 @@ object IvfPq extends graft.Registry {
     // the row's own cell, dimension by dimension
     val resCols = ed.zipWithIndex.map { case (e, d) =>
       "a." + e + " - (CASE a.k " + (0 until SimSearch.CELLS).map(c =>
-        s"WHEN $c THEN cw.k${c}_${d + 1}").mkString(" ") + s" END) AS $e"
+        s"WHEN $c THEN fw.k${c}_${d + 1}").mkString(" ") + s" END) AS $e"
     }.mkString(",\n    ")
     // residual query per probed cell: same subtraction for the query
     // row against the PROBED cell (not its own)
     val rqCols = ed.zipWithIndex.map { case (e, d) =>
       "p." + e + " - (CASE pr.cell " + (0 until SimSearch.CELLS).map(c =>
-        s"WHEN $c THEN cw.k${c}_${d + 1}").mkString(" ") + s" END) AS $e"
+        s"WHEN $c THEN fw.k${c}_${d + 1}").mkString(" ") + s" END) AS $e"
     }.mkString(",\n    ")
     s"""WITH pts AS (${Points.embedPtsSql}),
        |${SimSearch.ivfChainSql},
        |rpts AS MATERIALIZED (SELECT a.pid,
        |    $resCols
-       |  FROM acell a CROSS JOIN cw),
+       |  FROM acell a CROSS JOIN fw),
        |${PQ.pqTrainSql("rpts")},
        |rq AS (SELECT pr.q_id, pr.cell,
        |    $rqCols
-       |  FROM pr JOIN pts p ON p.pid = pr.q_id CROSS JOIN cw),
+       |  FROM pr JOIN pts p ON p.pid = pr.q_id CROSS JOIN fw),
        |${PQ.pqQtabSql("rq", "q_id, cell", "")},
        |cand AS (SELECT pr.q_id, pr.cell, a.pid AS vec_id
        |  FROM pr JOIN acell a ON a.k = pr.cell WHERE a.pid != pr.q_id),
@@ -263,8 +264,7 @@ object IvfPq extends graft.Registry {
         val row = byVariant.get(variant)
         (1 to TOPK).map { k =>
           val m = row.map(_.getLong(k)).getOrElse(0L)
-          (variant, k, m, BigDecimal(m.toDouble / (k * qn))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          (variant, k, m, r6(m.toDouble / (k * qn)))
         }
       }.toDF("variant", "k", "n_matched", "recall_at_k")
     } finally { truth.unpersist(); () }

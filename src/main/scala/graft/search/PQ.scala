@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables.t
 import graft.clustering.{ClusterSql, KMeans, Points}
+import graft.functions.Exact.r6
 
 /** Product quantization (PQ) ANN — the classic FAISS-style memory path
   * for billion-vector search, from its public description (Jégou et
@@ -268,7 +269,7 @@ object PQ extends graft.Registry {
     val mses = (0 until M).map(row.getDouble)
     val total = mses.sum
     (0 until M).map(s => (s, mses(s),
-      BigDecimal(mses(s) / total).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      r6(mses(s) / total)))
       .toDF("subspace", "mse", "share")
   }
 

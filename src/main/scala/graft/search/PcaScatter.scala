@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Exact.{d6, r6}
 
 /** Two-dimensional PCA scatter table — the embedding-map histogram a
   * corpus dashboard renders (the public embedding-visualization
@@ -25,8 +26,6 @@ import org.apache.spark.sql.functions._
   * literals; the only shuffle is the bounded grid-cell rollup. */
 object PcaScatter extends graft.Registry {
 
-  private def d6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
 
   /** Left-fold projection of the mean-centered embedding onto a
     * literal direction vector (explicit element order, like the
@@ -49,8 +48,7 @@ object PcaScatter extends graft.Registry {
     val lam = Spectrum.powerIterate(c)
     val v1 = Spectrum.powerVector(c)
     val c2 = Array.tabulate(D, D)((i, j) =>
-      (d6(c(i)(j)) - d6(lam) * d6(v1(i)) * d6(v1(j)))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      r6(d6(c(i)(j)) - d6(lam) * d6(v1(i)) * d6(v1(j))))
     val v2 = Spectrum.powerVector(c2)
     graft.Tables.t(spark, dir, "embeddings")
       .select(

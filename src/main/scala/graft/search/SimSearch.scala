@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables.t
 import graft.clustering.{ClusterSql, KMeans, Points}
 import graft.functions.VectorOps
+import graft.functions.Exact.r6
 
 /** Similarity search over the embeddings corpus.
   *
@@ -146,19 +147,6 @@ object SimSearch extends graft.Registry {
   private[search] val IVF_ITERS = 2
   private val IVF_TOPK = 5
 
-  /** Coarse-quantizer training, shared by IVF and IVFPQ: centers move
-    * through the driver, data does not. */
-  private[search] def trainCoarse(pts: DataFrame, cells: Int, iters: Int,
-                                  ed: Seq[String]): Array[Array[Double]] = {
-    var centers = Points.firstKCenters(pts, cells, ed)
-    for (_ <- 1 to iters) {
-      val byK = KMeans.update(KMeans.assign(pts, centers, ed), ed).collect()
-        .map(r => r.getAs[Int]("k") -> ed.indices.map(i => r.getDouble(2 + i)).toArray).toMap
-      centers = Array.tabulate(cells)(i => byK.getOrElse(i, centers(i)))
-    }
-    centers
-  }
-
   /** The DEFAULT coarse quantizer (CELLS cells, IVF_ITERS sweeps over
     * the embeddings corpus), trained once per (JVM, dir) — the staged-
     * index discipline applied to model state: a deployment trains the
@@ -170,7 +158,9 @@ object SimSearch extends graft.Registry {
     * consumed on the first call. */
   private[search] def stagedCoarse(pts: DataFrame, dir: String,
                                    ed: Seq[String]): Array[Array[Double]] =
-    graft.Memo.value(dir, "ivf-coarse")(trainCoarse(pts, CELLS, IVF_ITERS, ed))
+    graft.Memo.value(dir, "ivf-coarse") {
+      KMeans.train(pts, Points.firstKCenters(pts, CELLS, ed), IVF_ITERS, ed)._1
+    }
 
   /** The (pid, k) cell-assignment table — the IVF inverted lists —
     * staged to parquet once per (JVM, dir): a deployment assigns
@@ -254,27 +244,19 @@ object SimSearch extends graft.Registry {
       .select("q_id", "vec_id", "rank", "cs")
   }
 
-  /** The IVF CTE chain (train -> cell assignment `acell` -> probed
-    * cells `pr`), shared by the IVF and IVFPQ oracles. Expects a `pts`
-    * CTE in scope. */
+  /** The IVF CTE chain (train -> trained centers `fw` -> cell
+    * assignment `acell` -> probed cells `pr`), shared by the IVF and
+    * IVFPQ oracles. Expects a `pts` CTE in scope. */
   private[search] def ivfChainSql: String = {
     val ed = Points.embedDims
-    val stages = (1 to IVF_ITERS).map { i =>
-      val cIn = if (i == 1) "c0" else s"u${i - 1}"
-      s"${ClusterSql.widenSql(CELLS, cIn, s"${cIn}w", ed)},\n" +
-        s"${ClusterSql.assignSql(CELLS, s"${cIn}w", s"a$i", "pts", ed)},\n" +
-        s"${ClusterSql.updateSql(s"a$i", s"u$i", ed)}"
-    }.mkString(",\n")
     val probeUnion = (0 until CELLS).map(k =>
       s"SELECT pid AS q_id, $k AS cell, d$k AS dist FROM acell_d WHERE pid <= $QN")
       .mkString(" UNION ALL ")
-    // cw (the trained centers, 1 row) and acell/acell_d are each read
+    // fw (the trained centers, 1 row) and acell/acell_d are each read
     // several times downstream (probe union: once per cell; residual
     // IVFPQ: rpts + rq) — materialize so the Lloyd chain runs ONCE
     s"""${ClusterSql.c0Sql(CELLS, Points.embedPtsSql, ed)},
-       |$stages,
-       |${ClusterSql.widenSql(CELLS, s"u$IVF_ITERS", "cw", ed, mat = true)},
-       |${ClusterSql.assignSql(CELLS, "cw", "acell", "pts", ed, mat = true)},
+       |${ClusterSql.lloydChainSql(CELLS, IVF_ITERS, "c0", ed, finalAssign = "acell", mat = true)},
        |probe AS (SELECT * FROM ($probeUnion) WHERE dist IS NOT NULL),
        |pr AS (SELECT q_id, cell FROM (
        |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY dist, cell) AS rn
@@ -469,8 +451,6 @@ object SimSearch extends graft.Registry {
     // candidates each) is inherently sequential driver math — the
     // lloyd/qRecallCurve literal-frame pattern; scores round 6
     // exactly like the SQL round the oracle applies
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val out = cand.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, pool) =>
       val byScore = pool.map(t => t._2 -> t._3).sortBy { case (vid, cs) => (-cs, vid) }
       var selected = List(byScore.head)
@@ -511,8 +491,7 @@ object SimSearch extends graft.Registry {
     val qn = truth.select("q_id").distinct().count()
     (1 to IVF_TOPK).map { k =>
       val m = row.getLong(k - 1)
-      (k, m, BigDecimal(m.toDouble / (k * qn))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      (k, m, r6(m.toDouble / (k * qn)))
     }.toDF("k", "n_matched", "recall_at_k")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.functions.MicroGrid
+import graft.functions.Exact.{d6, r6}
 
 /** Embedding covariance + spectral diagnostics — the anisotropy
   * report a vector-search deployment reads before trusting cosine
@@ -88,9 +89,6 @@ object Spectrum extends graft.Registry {
       (s, pr, n)
     }
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** The rounded covariance matrix (full, symmetric): each entry is
     * the EXACT HALF_UP round-6 of (n*Pij - Si*Sj) / (n^2 * 1e12) —
     * pure integer arithmetic, bit-identical on any host or layout. */
@@ -141,9 +139,6 @@ object Spectrum extends graft.Registry {
     * then act on bit-identical doubles in both engines (a binary
     * double can never equal a scale-7 decimal midpoint, so identical
     * doubles always round identically). */
-  private def d6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-
   private def gridDot(a: Array[Double], b: Array[Double]): BigDecimal =
     a.indices.map(i => d6(a(i)) * d6(b(i))).sum
 
@@ -151,8 +146,7 @@ object Spectrum extends graft.Registry {
     * Rayleigh quotient, all grid sums decimal-exact. */
   private[search] def powerIterate(c: Array[Array[Double]]): Double = {
     def matvec(v: Array[Double]): Array[Double] =
-      Array.tabulate(c.length)(i => gridDot(c(i), v)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      Array.tabulate(c.length)(i => r6(gridDot(c(i), v)))
     var v = Array.fill(c.length)(0.125)
     for (_ <- 1 to ITERS) {
       val u = matvec(v)
@@ -168,8 +162,7 @@ object Spectrum extends graft.Registry {
     * removes this direction. Same trajectory as [[powerIterate]]. */
   private[search] def powerVector(c: Array[Array[Double]]): Array[Double] = {
     def matvec(v: Array[Double]): Array[Double] =
-      Array.tabulate(c.length)(i => gridDot(c(i), v)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      Array.tabulate(c.length)(i => r6(gridDot(c(i), v)))
     var v = Array.fill(c.length)(0.125)
     for (_ <- 1 to ITERS) {
       val u = matvec(v)
@@ -216,8 +209,7 @@ object Spectrum extends graft.Registry {
     // decimal terminates at scale 12, so the share rounds on the
     // exact decimal too (lam/64 lands on a midpoint whenever the
     // grid integer is 32 mod 64 — a 1/64 structural tie as a double)
-    val share = (d6(lam) * BigDecimal("0.015625"))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val share = r6(d6(lam) * BigDecimal("0.015625"))
     Seq((n, D, lam, share))
       .toDF("n_vecs", "dim", "top_eig", "explained_share")
   }

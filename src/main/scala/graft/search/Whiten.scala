@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Exact.{d6, r6}
 
 /** Top-PC removal APPLIED — the action the spectrum diagnostics decide
   * on, one level above `embed_standardize`: `embed_corr_spectrum`
@@ -31,10 +32,6 @@ import org.apache.spark.sql.functions._
   * removed direction reports ≈ 0 on every host and layout. */
 object Whiten extends graft.Registry {
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def d6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
 
   def qWhiten(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -48,8 +45,7 @@ object Whiten extends graft.Registry {
     val s = v.map(d6).map(x => x * x).sum.toDouble
     // Hotelling deflation on the grid: every entry an exact decimal
     val c2 = Array.tabulate(D, D)((i, j) =>
-      (d6(c(i)(j)) - d6(lam) * d6(v(i)) * d6(v(j)))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      r6(d6(c(i)(j)) - d6(lam) * d6(v(i)) * d6(v(j))))
     val lam2 = Spectrum.powerIterate(c2)
     val trace2 = (0 until D).map(i => d6(c2(i)(i))).sum.toDouble
     val shareAfter = r6(lam2 / trace2)

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.functions.Exact.r6
 
 /** Trained quality-classifier scoring — the fastText/DCLM-style stage
   * the rule bundles (Gopher) and LM scores (unigram/bigram/KN) sit
@@ -47,8 +48,6 @@ object QualityClf extends graft.Registry {
   // shift, so the update w - LR*g loses no precision before its round
   private val LR = "0.5"
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Per-doc label + feature vector: y = reference-slice indicator
     * (lang = 'en'), x = 32 normalized hashed-unigram frequencies

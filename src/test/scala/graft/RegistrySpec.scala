@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Registry drift fails here, at `sbt test`, not only after a full
   * Verify run: one owner per key, an oracle only for a registered query,
   * and a SURVEY §2 row for every key (the regex tools/roundclose.sh
-  * uses). Likewise a per-dataset cache hand-rolled beside graft.Memo. */
+  * uses). Likewise a per-dataset cache hand-rolled beside graft.Memo,
+  * and a Lloyd step spelled beside KMeans.train / ClusterSql. */
 class RegistrySpec extends AnyFunSuite {
 
   private def owners(part: Registry => Iterable[String]): Map[String, Seq[String]] =
@@ -39,18 +40,32 @@ class RegistrySpec extends AnyFunSuite {
     assert(unlisted.isEmpty, s"registered queries with no SURVEY §2 row: ${unlisted.toSeq.sorted.mkString(", ")}")
   }
 
-  test("staged state is built only through graft.Memo") {
+  /** Matches of `marks` in every src/main Scala file but `owner`. */
+  private def strays(marks: scala.util.matching.Regex, owner: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val forkMarks = Seq("createTempDirectory(\"graft-staged\")", "Memo.miss(", "deleteOnExit")
-      .map(java.util.regex.Pattern.quote).mkString("(", "|", ")").r
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val forks = try s.iterator().asScala.toSeq
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Memo.scala")
+    try s.iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != owner)
       .flatMap { p =>
         val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        forkMarks.findAllMatchIn(text).map(m => s"$p: ${m.matched}")
+        marks.findAllMatchIn(text).map(m => s"$p: ${m.matched}")
       } finally s.close()
+  }
+
+  test("staged state is built only through graft.Memo") {
+    val forkMarks = Seq("createTempDirectory(\"graft-staged\")", "Memo.miss(", "deleteOnExit")
+      .map(java.util.regex.Pattern.quote).mkString("(", "|", ")").r
+    val forks = strays(forkMarks, "Memo.scala")
     assert(forks.isEmpty, s"per-dataset state built outside graft.Memo: ${forks.mkString(", ")}")
+  }
+
+  test("the Lloyd step is spelled once: KMeans.train and ClusterSql.lloydChainSql") {
+    // the engine's reseed and the oracle's unrolled widen/assign/update
+    // chain (whose stage i > 1 reads the previous update, u${i - 1})
+    val reseeds = strays(java.util.regex.Pattern.quote("getOrElse(i, centers(i))").r, "KMeans.scala")
+    assert(reseeds.isEmpty, s"a Lloyd reseed outside KMeans.train: ${reseeds.mkString(", ")}")
+    val chains = strays("""if \(i == 1\)[^\n]*u\$\{i - 1\}""".r, "ClusterSql.scala")
+    assert(chains.isEmpty, s"a Lloyd chain unrolled outside ClusterSql: ${chains.mkString(", ")}")
   }
 
   test("select trims names and rejects unknown ones") {

@@ -35,12 +35,19 @@ class KMeansSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("lloyd reseeds an empty cluster from its previous center") {
-    // Second center is far from every point: it ends empty and must
-    // survive (keep previous) rather than crash or emit NaN.
-    val pts = Seq((1L, 0.0, 0.0, 0.0, 0.0), (2L, 1.0, 0.0, 0.0, 0.0))
+    // First-K init picks pid 1 twice: two identical centers, so every
+    // point ties to k=0 and cluster 1 empties on iteration 1. It keeps
+    // its previous center (the origin), which then wins the two points
+    // at the origin; ClusterSql.lloydChainSql carries the same center.
+    val pts = Seq((1L, 0.0, 0.0, 0.0, 0.0), (1L, 0.0, 0.0, 0.0, 0.0),
+        (2L, 10.0, 0.0, 0.0, 0.0), (3L, 10.0, 0.0, 0.0, 0.0))
       .toDF("pid", "x1", "x2", "x3", "x4")
-    val out = KMeans.lloyd(pts, 2, 3).select("k").as[Int].collect().toSet
-    assert(out.nonEmpty && out.subsetOf(Set(0, 1)))
+    val (centers, _) = KMeans.train(pts, Points.firstKCenters(pts, 2), 3)
+    assert(centers.map(_.toSeq).toSeq == Seq(Seq(10.0, 0.0, 0.0, 0.0), Seq(0.0, 0.0, 0.0, 0.0)))
+    val rows = KMeans.lloyd(pts, 2, 3).collect()
+      .map(r => (r.getAs[Int]("k"), r.getAs[Long]("n"), (1 to 4).map(i => r.getAs[Double](s"c$i"))))
+      .sortBy(_._1).toSeq
+    assert(rows == Seq((0, 2L, Seq(10.0, 0.0, 0.0, 0.0)), (1, 2L, Seq(0.0, 0.0, 0.0, 0.0))))
   }
 
   test("lloyd SSE is non-increasing over iterations on real data") {
@@ -48,13 +55,11 @@ class KMeansSpec extends AnyFunSuite with BeforeAndAfterAll {
     var centers = Points.firstKCenters(pts, 4)
     var last = Double.MaxValue
     for (_ <- 1 to 4) {
-      val assigned = KMeans.assign(pts, centers)
-      val sse = assigned.agg(org.apache.spark.sql.functions.sum("dist")).as[Double].head()
+      val sse = KMeans.assign(pts, centers)
+        .agg(org.apache.spark.sql.functions.sum("dist")).as[Double].head()
       assert(sse <= last + 1e-6, s"SSE rose: $sse > $last")
       last = sse
-      val byK = KMeans.update(assigned).collect()
-        .map(r => r.getAs[Int]("k") -> Points.dims.indices.map(i => r.getDouble(2 + i)).toArray).toMap
-      centers = Array.tabulate(4)(i => byK.getOrElse(i, centers(i)))
+      centers = KMeans.train(pts, centers, 1)._1
     }
   }
 

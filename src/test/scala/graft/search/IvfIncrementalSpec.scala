@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.clustering.{Points, SparkTestSession}
+import graft.clustering.{KMeans, Points, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +13,8 @@ class IvfIncrementalSpec extends AnyFunSuite {
     val ed = Points.embedDims
     val all = Points.embeddings64(spark, sf)
     val spts = all.filter(col("pid") % 10 =!= 0)
-    val centers = SimSearch.trainCoarse(spts, SimSearch.CELLS, SimSearch.IVF_ITERS, ed)
+    val (centers, _) = KMeans.train(spts, Points.firstKCenters(spts, SimSearch.CELLS, ed),
+      SimSearch.IVF_ITERS, ed)
     // the standing lists plus the batch add...
     val stand = IvfIncremental.addBatch(spts, centers)
     val batch = IvfIncremental.addBatch(all.filter(col("pid") % 10 === 0), centers)

@@ -53,6 +53,9 @@ RULES = [
     (r'clustering/', r'avg\(', 'GENERIC'),
     (r'clustering/GKA', r'sum\(iv\)', 'GENERIC'),
     (r'clustering/KMeans', r'sum\(\(cnt / nc\)', 'BOUNDED'),
+    # k-means|| phi, Spark side: an order-dependent double sum of d^2
+    # over every point (off-grid continuous inputs)
+    (r'clustering/KMeans', r'r6\(base\.agg\(sum\(d2\)\)', 'GENERIC'),
     # LM / entropy / KL / PSI / chi2 scores: log outputs are off-grid
     (r'CorpusStats|Analytics|Relational', r'log2|ln\(|entropy', 'GENERIC'),
     (r'Analytics', r'\(o - e\)|\(o - rt', 'GENERIC'),
