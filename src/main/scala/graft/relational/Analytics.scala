@@ -618,7 +618,7 @@ object Analytics extends graft.Registry {
 
   /** Collect-and-release: both reports reduce to a handful of rows,
     * so they materialize the result, drop the ranked frame's cached
-    * partitioning, and return a literal frame (the qPq pattern). */
+    * partitioning, and return a literal frame (the KMeans.lloyd pattern). */
   private def literalFrame(res: DataFrame, release: () => Unit): DataFrame = {
     val rows = res.collect()
     val schema = res.schema

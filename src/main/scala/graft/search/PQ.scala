@@ -33,11 +33,10 @@ import graft.functions.Exact.r6
   */
 object PQ extends graft.Registry {
 
-  private val QN = 5 // query vectors: vec_id <= QN (the simsearch set)
   private val M = 8 // subspaces
   private val SUBD = 8 // dims per subspace
-  private val PQ_K = 16 // centroids per subspace codebook
-  private val PQ_TOPK = 5
+  private[search] val PQ_K = 16 // centroids per subspace codebook
+  private[search] val PQ_TOPK = 5
 
   private def sub(s: Int): Seq[String] = Points.embedDims.slice(s * SUBD, (s + 1) * SUBD)
 
@@ -108,102 +107,96 @@ object PQ extends graft.Registry {
     enc.select(col("pid") +: (0 until M).map(s => col(s"code_$s")): _*)
   }
 
-  /** Driver-side ADC lookup tables: per query, M x PQ_K squared
-    * partial distances, left-fold add order identical to the oracle. */
-  private[search] def adcRows(qvecs: Array[(Long, Array[Double])],
-                              codebooks: Array[Array[Array[Double]]]): Seq[(Long, Seq[Seq[Double]])] = {
-    // shape derives from the codebooks, so larger-K' sweep configs
-    // (IvfPqSweep) ride the same code path the defaults are oracled on
+  /** Driver-side ADC lookup table of one query vector: M x K' squared
+    * partial distances, left-fold add order identical to the oracle.
+    * The shape derives from the codebooks, so larger-K' sweep configs
+    * (IvfPqSweep) ride the same code path the defaults are oracled on. */
+  private[search] def adcTable(v: Array[Double],
+                               codebooks: Array[Array[Array[Double]]]): Seq[Seq[Double]] = {
     val (m, k, subd) = (codebooks.length, codebooks.head.length, codebooks.head.head.length)
-    qvecs.toSeq.map { case (qid, v) =>
-      val dtab = (0 until m).map { s =>
-        (0 until k).map { j =>
-          (0 until subd).map { d =>
-            val df = v(s * subd + d) - codebooks(s)(j)(d); df * df
-          }.reduce(_ + _)
-        }
+    (0 until m).map { s =>
+      (0 until k).map { j =>
+        (0 until subd).map { d =>
+          val df = v(s * subd + d) - codebooks(s)(j)(d); df * df
+        }.reduce(_ + _)
       }
-      (qid, dtab)
     }
   }
 
-  /** ADC score column: per (query, vector), 8 table lookups + an add
-    * chain; approx distance = sqrt of the summed partials. Expects a
-    * `dtab` column and the code_0..code_{M-1} columns in scope. */
-  private[search] def adScore: org.apache.spark.sql.Column =
-    sqrt((0 until M).map(s =>
+  /** The ADC search: each (query, code row) pair except the query
+    * itself scored by its `dtab` lookups (8 table lookups + an add
+    * chain; approx distance = sqrt of the summed partials), the top
+    * PQ_TOPK per query by (ad ASC, vec_id ASC). `pairs` carries q_id,
+    * dtab, pid and code_0..code_{M-1}; flat PQ pairs every query with
+    * every code row, IVFPQ with the rows of its probed cells. */
+  private[search] def adTopK(pairs: DataFrame): DataFrame = {
+    val ad = sqrt((0 until M).map(s =>
       element_at(element_at(col("dtab"), s + 1), col(s"code_$s") + 1)).reduce(_ + _))
+    val w = Window.partitionBy("q_id").orderBy(col("ad").asc, col("vec_id").asc)
+    pairs.filter(col("pid") =!= col("q_id"))
+      .select(col("q_id"), col("pid").as("vec_id"), ad.as("ad"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= PQ_TOPK)
+      .select("q_id", "vec_id", "rank", "ad")
+  }
 
   /** The default (non-residual) codebooks trained once per (JVM, dir)
-    * — shared by PQ and IVFPQ exactly as a deployment shares one
-    * trained codebook across its indexes; deterministic, so staging
-    * cannot change results. M x PQ_K x SUBD doubles of driver memory.
-    * The residual variant trains on per-cell residuals and is NOT
-    * staged (different input frame). */
+    * — shared by PQ and the plain IVFPQ index exactly as a deployment
+    * shares one trained codebook across its indexes; deterministic, so
+    * staging cannot change results. M x PQ_K x SUBD doubles of driver
+    * memory. The residual IVFPQ codebooks train on per-cell residuals
+    * and are staged with their index (IvfPq.stagedIndex). */
   private[search] def stagedCodebooks(pts: DataFrame, dir: String): Array[Array[Array[Double]]] =
     graft.Memo.value(dir, "pq-codebooks")(trainCodebooks(pts))
 
+  /** Flat PQ search: every query's ADC table against every code row.
+    * The encode is one fused PQEncode projection below the broadcast
+    * join, so each corpus row is encoded once per call. */
   def qPq(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Points.embeddings64(spark, dir).cache()
-    // 1. train the codebooks (tiny driver state only)
+    val pts = Points.embeddings64(spark, dir)
     val codebooks = stagedCodebooks(pts, dir)
-    // 2. encode: MATERIALIZED — this is the PQ index (8 bytes/vector),
-    //    and caching it keeps the 8x16-center distance trees out of
-    //    the downstream join/window plan
-    val codes = encodeCodes(pts, codebooks).cache()
-    codes.count()
-    pts.unpersist()
-    // 3+4. ADC tables + scoring
-    val qRows = adcRows(SimSearch.queryVecs(spark, dir), codebooks)
     import spark.implicits._
-    val qdf = broadcast(qRows.toDF("q_id", "dtab"))
-    val scored = codes.crossJoin(qdf).filter(col("pid") =!= col("q_id"))
-      .select(col("q_id"), col("pid").as("vec_id"), adScore.as("ad"))
-    val w = Window.partitionBy("q_id").orderBy(col("ad").asc, col("vec_id").asc)
-    val result = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= PQ_TOPK)
-      .select("q_id", "vec_id", "rank", "ad")
-    // literal-frame return (KMeans.lloyd's trick) so the codes cache is
-    // released now instead of leaking for the session's lifetime
-    val rows = result.collect()
-    val schema = result.schema
-    codes.unpersist()
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+    val qdf = broadcast(SimSearch.queryVecs(spark, dir).toSeq
+      .map { case (qid, v) => (qid, adcTable(v, codebooks)) }.toDF("q_id", "dtab"))
+    adTopK(encodeCodes(pts, codebooks).crossJoin(qdf))
   }
 
-  /** Train+encode CTE chain (c0_s .. enc_s per subspace, then the
-    * joined `codes` table) over any (pid, e1..e64) point CTE `src`
-    * (raw points for PQ, coarse residuals for residual IVFPQ).
-    * Shared by the PQ and IVFPQ oracles. */
-  private[search] def pqTrainSql(src: String = "pts"): String = {
+  /** Train+encode CTE chain (${p}c0_s .. ${p}enc_s per subspace, then
+    * the joined `${p}codes` table) over any (pid, e1..e64) point CTE
+    * `src` (raw points for PQ, coarse residuals for residual IVFPQ).
+    * The name prefix `p` keeps several variants' chains apart in one
+    * WITH (the IVFPQ recall-curve oracle). Shared by the PQ and IVFPQ
+    * oracles. */
+  private[search] def pqTrainSql(src: String = "pts", p: String = ""): String = {
     val train = (0 until M).map { s =>
       val sd = sub(s)
       // u1_s is read by BOTH the encode widen and the qtab widen —
       // materialize so each subspace's training runs once
-      s"""${ClusterSql.c0Sql(PQ_K, Points.embedPtsSql, sd, s"c0_$s", src)},
-         |${ClusterSql.widenSql(PQ_K, s"c0_$s", s"c0w_$s", sd)},
-         |${ClusterSql.assignSql(PQ_K, s"c0w_$s", s"a1_$s", src, sd)},
-         |${ClusterSql.updateSql(s"a1_$s", s"u1_$s", sd, mat = true)},
-         |${ClusterSql.widenSql(PQ_K, s"u1_$s", s"cw_$s", sd)},
-         |${ClusterSql.assignSql(PQ_K, s"cw_$s", s"enc_$s", src, sd)}""".stripMargin
+      s"""${ClusterSql.c0Sql(PQ_K, Points.embedPtsSql, sd, s"${p}c0_$s", src)},
+         |${ClusterSql.widenSql(PQ_K, s"${p}c0_$s", s"${p}c0w_$s", sd)},
+         |${ClusterSql.assignSql(PQ_K, s"${p}c0w_$s", s"${p}a1_$s", src, sd)},
+         |${ClusterSql.updateSql(s"${p}a1_$s", s"${p}u1_$s", sd, mat = true)},
+         |${ClusterSql.widenSql(PQ_K, s"${p}u1_$s", s"${p}cw_$s", sd)},
+         |${ClusterSql.assignSql(PQ_K, s"${p}cw_$s", s"${p}enc_$s", src, sd)}""".stripMargin
     }.mkString(",\n")
-    val codes = "codes AS (SELECT e0.pid, " +
+    val codes = s"${p}codes AS (SELECT e0.pid, " +
       (0 until M).map(s => s"e$s.k AS code_$s").mkString(", ") +
-      " FROM " + (0 until M).map(s => s"enc_$s e$s").mkString(", ") +
+      " FROM " + (0 until M).map(s => s"${p}enc_$s e$s").mkString(", ") +
       " WHERE " + (1 until M).map(s => s"e0.pid = e$s.pid").mkString(" AND ") + ")"
     s"$train,\n$codes"
   }
 
-  /** The per-query ADC table CTE (`qtab`): one widened copy of each
-    * codebook with a per-subspace column prefix, so all 8 can share
-    * one scope. Expects the u1_s CTEs plus a query-point CTE `src`
-    * carrying (e1..e64 + the `keySelect` columns); residual IVFPQ
-    * passes its per-(query, cell) residual CTE. */
+  /** The ADC table CTE (`${p}qtab`): one widened copy of each codebook
+    * with a per-subspace column prefix, so all 8 can share one scope.
+    * Expects the ${p}u1_s CTEs plus a query-point CTE `src` carrying
+    * (e1..e64 + the `keySelect` columns); residual IVFPQ passes its
+    * per-(query, cell) residual CTE. */
   private[search] def pqQtabSql(src: String = "pts",
                                 keySelect: String = "pid AS q_id",
-                                where: String = s"WHERE pid <= $QN"): String = {
+                                where: String = s"WHERE pid <= ${SimSearch.QN}",
+                                p: String = ""): String = {
     val qWidens = (0 until M).map(s =>
-      ClusterSql.widenSql(PQ_K, s"u1_$s", s"cwq_$s", sub(s), s"q${s}x")).mkString(",\n")
+      ClusterSql.widenSql(PQ_K, s"${p}u1_$s", s"${p}cwq_$s", sub(s), s"q${s}x")).mkString(",\n")
     val qtabCols = (0 until M).flatMap { s =>
       val sd = sub(s)
       (0 until PQ_K).map { j =>
@@ -213,14 +206,14 @@ object PQ extends graft.Registry {
       }
     }.mkString(",\n    ")
     s"""$qWidens,
-       |qtab AS (SELECT $keySelect,
+       |${p}qtab AS (SELECT $keySelect,
        |    $qtabCols
-       |  FROM $src ${(0 until M).map(s => s"CROSS JOIN cwq_$s").mkString(" ")}
+       |  FROM $src ${(0 until M).map(s => s"CROSS JOIN ${p}cwq_$s").mkString(" ")}
        |  $where)""".stripMargin
   }
 
   /** The ADC distance expression over a codes row `c` and a qtab row
-    * `q` — explicit left-fold order, identical to adScore. */
+    * `q` — explicit left-fold order, identical to adTopK's score. */
   private[search] def pqAdCaseSql: String =
     (0 until M).map { s =>
       s"(CASE c.code_$s " +

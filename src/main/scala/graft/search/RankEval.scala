@@ -23,7 +23,7 @@ import graft.functions.VectorOps
   * with K = 60), summed in BIGINT; ranking ties break on vec_id. */
 object RankEval extends graft.Registry {
 
-  private val K = 5 // AP/fusion depth (= SimSearch.ANN_TOPK)
+  private val K = SimSearch.ANN_TOPK // AP/fusion depth
   private val LCM = 60 // lcm(1..K): exact common denominator for 1/r
   private val RRF_K = 60 // Cormack's smoothing constant
   private val FP = 1000000000000L // RRF fixed-point scale
@@ -101,31 +101,10 @@ object RankEval extends graft.Registry {
     "simsearch_map" -> (qMap _),
     "simsearch_rrf_fusion" -> (qRrfFusion _))
 
-  // truth/ann CTE chain shared with the simsearch_mrr oracle
-  private def truthAnnSql: String =
-    s"""c AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-       |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-       |  FROM embeddings q JOIN embeddings e
-       |    ON q.vec_id <= ${SimSearch.QN} AND q.vec_id != e.vec_id),
-       |truth AS (SELECT q_id, vec_id FROM (
-       |  SELECT q_id, vec_id, row_number() OVER (
-       |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM c)
-       |  WHERE rank <= $K),
-       |b AS (SELECT vec_id, embedding,
-       |  ${VectorOps.signBucketSql("embedding", SimSearch.BITS)} AS bk
-       |  FROM embeddings),
-       |ac AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-       |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-       |  FROM b q JOIN b e ON q.vec_id <= ${SimSearch.QN}
-       |    AND q.bk = e.bk AND q.vec_id != e.vec_id),
-       |ann AS (SELECT q_id, vec_id, rank FROM (
-       |  SELECT q_id, vec_id, row_number() OVER (
-       |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM ac)
-       |  WHERE rank <= $K)""".stripMargin
-
   val oracleSql: Map[String, String] = Map(
     "simsearch_map" ->
-      s"""WITH $truthAnnSql,
+      s"""WITH ${SimSearch.truthSql(K)},
+         |${SimSearch.annSql(K)},
          |m AS (SELECT a.q_id, a.rank,
          |    CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END AS hit
          |  FROM ann a LEFT JOIN truth t
@@ -144,14 +123,7 @@ object RankEval extends graft.Registry {
          |       // (2 * $LCM * k) AS DOUBLE) / 1000000.0 AS ap_at_k
          |FROM kt LEFT JOIN p ON kt.q_id = p.q_id""".stripMargin,
     "simsearch_rrf_fusion" ->
-      s"""WITH c AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-         |  FROM embeddings q JOIN embeddings e
-         |    ON q.vec_id <= ${SimSearch.QN} AND q.vec_id != e.vec_id),
-         |full_r AS (SELECT q_id, vec_id, rank AS r_full FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM c)
-         |  WHERE rank <= ${SimSearch.TOPK}),
+      s"""WITH ${SimSearch.truthSql(SimSearch.TOPK, "full_r")},
          |c8 AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
          |    ${VectorOps.cosineSql("q.embedding[1:8]", "e.embedding[1:8]")} AS cs8
          |  FROM embeddings q JOIN embeddings e
@@ -163,9 +135,9 @@ object RankEval extends graft.Registry {
          |fused AS (
          |  SELECT coalesce(f.q_id, p.q_id) AS q_id,
          |    coalesce(f.vec_id, p.vec_id) AS vec_id,
-         |    coalesce($FP // ($RRF_K + r_full), 0)
+         |    coalesce($FP // ($RRF_K + f.rank), 0)
          |      + coalesce($FP // ($RRF_K + r_prefix), 0) AS score_e12,
-         |    coalesce(r_full, 0) AS rank_full,
+         |    coalesce(f.rank, 0) AS rank_full,
          |    coalesce(r_prefix, 0) AS rank_prefix
          |  FROM full_r f FULL OUTER JOIN prefix_r p
          |    ON f.q_id = p.q_id AND f.vec_id = p.vec_id),

@@ -263,20 +263,20 @@ object SimSearch extends graft.Registry {
        |  FROM probe) WHERE rn <= $NPROBE)""".stripMargin
   }
 
-  private val ivfOracle: String = {
-    s"""WITH pts AS (${Points.embedPtsSql}),
-       |$ivfChainSql,
-       |cand AS (SELECT pr.q_id, a.pid AS vec_id
+  /** The IVF searcher as oracle CTEs: `cand`, the probed cells' other
+    * vectors, and `ivf` (q_id, vec_id, rank, cs), each query's top
+    * IVF_TOPK by cosine. Expects `pts` and ivfChainSql in scope. */
+  private val ivfSearchSql: String =
+    s"""cand AS (SELECT pr.q_id, a.pid AS vec_id
        |  FROM pr JOIN acell a ON a.k = pr.cell WHERE a.pid != pr.q_id),
-       |scored AS (SELECT cand.q_id, cand.vec_id,
-       |  ${VectorOps.cosineSql("qe.embedding", "ce.embedding")} AS cs
-       |  FROM cand JOIN embeddings qe ON qe.vec_id = cand.q_id
-       |            JOIN embeddings ce ON ce.vec_id = cand.vec_id)
-       |SELECT q_id, vec_id, rank, cs FROM (
+       |ivf AS (SELECT q_id, vec_id, rank, cs FROM (
        |  SELECT *, CAST(row_number() OVER (
        |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS INT) AS rank
-       |  FROM scored) WHERE rank <= $IVF_TOPK""".stripMargin
-  }
+       |  FROM (SELECT cand.q_id, cand.vec_id,
+       |    ${VectorOps.cosineSql("qe.embedding", "ce.embedding")} AS cs
+       |    FROM cand JOIN embeddings qe ON qe.vec_id = cand.q_id
+       |              JOIN embeddings ce ON ce.vec_id = cand.vec_id))
+       |  WHERE rank <= $IVF_TOPK)""".stripMargin
 
   /** Cluster-BALANCED subsample (the SemDeDup/DCLM-style diversity
     * step): assign every embedding to its trained coarse cell, then
@@ -473,27 +473,72 @@ object SimSearch extends graft.Registry {
   /** Recall CURVE of the IVF searcher against the brute-force truth —
     * recall@k for every k up to the retrieval depth in one pass, the
     * tuning table an ANN deployment reads before picking k and NPROBE
-    * (the fixed-k recall@5 number is one row of it). Both sides'
-    * ranked results join once; the per-k matches are parallel
-    * conditional aggregates over that small frame, and recalls are
-    * exact rationals rounded 6. */
+    * (the fixed-k recall@5 number is one row of it). */
   def qRecallCurve(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val truth = stagedTopK(spark, dir).filter(col("rank") <= IVF_TOPK)
       .select(col("q_id"), col("vec_id"), col("rank").as("trank"))
-    val ivf = qIvf(spark, dir)
-      .select(col("q_id"), col("vec_id"), col("rank").as("arank"))
-    val j = truth.join(ivf, Seq("q_id", "vec_id"))
-    val aggs = (1 to IVF_TOPK).map(k =>
+    recallAtK(truth, Seq("ivf" -> qIvf(spark, dir)), IVF_TOPK, queryVecs(spark, dir).length)
+      .map { case (_, k, m, recall) => (k, m, recall) }
+      .toDF("k", "n_matched", "recall_at_k")
+  }
+
+  /** recall@k, k = 1..depth, of each named ranked result (q_id, vec_id,
+    * rank) against `truth` (q_id, vec_id, trank) over `qn` queries: the
+    * results join the truth once and ONE grouped aggregate of parallel
+    * per-k conditional sums counts the matches of all of them. A result
+    * sharing no row with the truth has no group and counts 0. Rows:
+    * (name, k, n_matched, recall_at_k), recalls exact rationals rounded
+    * 6. Shared by both recall curves (and so the IVFPQ sweep). */
+  private[search] def recallAtK(truth: DataFrame, ranked: Seq[(String, DataFrame)],
+                                depth: Int, qn: Long): Seq[(String, Int, Long, Double)] = {
+    val aggs = (1 to depth).map(k =>
       sum(when(col("trank") <= k && col("arank") <= k, 1).otherwise(0))
         .cast("long").as(s"m_$k"))
-    val row = j.agg(aggs.head, aggs.tail: _*).head()
-    val qn = truth.select("q_id").distinct().count()
-    (1 to IVF_TOPK).map { k =>
-      val m = row.getLong(k - 1)
-      (k, m, r6(m.toDouble / (k * qn)))
-    }.toDF("k", "n_matched", "recall_at_k")
+    val byName = ranked.map { case (name, res) =>
+      truth.join(res.select(col("q_id"), col("vec_id"), col("rank").as("arank")),
+        Seq("q_id", "vec_id")).withColumn("name", lit(name))
+    }.reduce(_ unionByName _)
+      .groupBy("name").agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => r.getString(0) -> r).toMap
+    for ((name, _) <- ranked; k <- 1 to depth) yield {
+      val m = byName.get(name).map(_.getLong(k)).getOrElse(0L)
+      (name, k, m, r6(m.toDouble / (k * qn)))
+    }
   }
+
+  /** Oracle twin of recallAtK's count: per k = 1..depth, the matches in
+    * the joined (trank, arank) CTE `j` — 0, not NULL, when `j` is empty. */
+  private[search] def matchedSql(j: String, depth: Int): String =
+    (1 to depth).map(k =>
+      s"""SELECT $k AS k,
+         |  CAST(coalesce(sum(CASE WHEN trank <= $k AND arank <= $k THEN 1 ELSE 0 END), 0) AS BIGINT)
+         |    AS n_matched FROM $j""".stripMargin).mkString("\nUNION ALL\n")
+
+  /** The brute-force cosine truth as oracle CTEs: `c`, every (query,
+    * other vector) cosine, and `out`, each query's top k (q_id, vec_id,
+    * cs, rank) by (cs DESC, vec_id ASC) — the SQL twin of qTopK. */
+  private[search] def truthSql(k: Int, out: String = "truth", mat: Boolean = false): String =
+    s"""c AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
+       |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
+       |  FROM embeddings q JOIN embeddings e ON q.vec_id <= $QN AND q.vec_id != e.vec_id),
+       |$out AS ${if (mat) "MATERIALIZED " else ""}(SELECT q_id, vec_id, cs, rank FROM (
+       |  SELECT q_id, vec_id, cs, row_number() OVER (
+       |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM c)
+       |  WHERE rank <= $k)""".stripMargin
+
+  /** The sign-bucket ANN result as oracle CTEs `b`, `ac` and `ann`
+    * (q_id, vec_id, rank), top k per query — the SQL twin of qAnn. */
+  private[search] def annSql(k: Int): String =
+    s"""b AS (SELECT vec_id, embedding,
+       |  ${VectorOps.signBucketSql("embedding", BITS)} AS bk FROM embeddings),
+       |ac AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
+       |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
+       |  FROM b q JOIN b e ON q.vec_id <= $QN AND q.bk = e.bk AND q.vec_id != e.vec_id),
+       |ann AS (SELECT q_id, vec_id, rank FROM (
+       |  SELECT q_id, vec_id, row_number() OVER (
+       |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM ac)
+       |  WHERE rank <= $k)""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "simsearch_recall_curve" -> (qRecallCurve _),
@@ -512,38 +557,18 @@ object SimSearch extends graft.Registry {
     "pipeline_balanced_sample" -> ((s: SparkSession, d: String) => qBalancedSample(s, d)))
 
   val oracleSql: Map[String, String] = Map(
-    "simsearch_recall_curve" -> {
-      val mk = (1 to IVF_TOPK).map(k =>
-        s"""SELECT $k AS k,
-           |  CAST(sum(CASE WHEN trank <= $k AND arank <= $k THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS n_matched FROM j""".stripMargin).mkString("\nUNION ALL\n")
+    "simsearch_recall_curve" ->
       s"""WITH pts AS (${Points.embedPtsSql}),
          |$ivfChainSql,
-         |cand AS (SELECT pr.q_id, a.pid AS vec_id
-         |  FROM pr JOIN acell a ON a.k = pr.cell WHERE a.pid != pr.q_id),
-         |iscored AS (SELECT cand.q_id, cand.vec_id,
-         |  ${graft.functions.VectorOps.cosineSql("qe.embedding", "ce.embedding")} AS cs
-         |  FROM cand JOIN embeddings qe ON qe.vec_id = cand.q_id
-         |            JOIN embeddings ce ON ce.vec_id = cand.vec_id),
-         |ivf AS (SELECT q_id, vec_id, rank AS arank FROM (
-         |  SELECT *, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank
-         |  FROM iscored) WHERE rank <= $IVF_TOPK),
-         |bc AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    ${graft.functions.VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-         |  FROM embeddings q JOIN embeddings e ON q.vec_id <= $QN AND q.vec_id != e.vec_id),
-         |truth AS MATERIALIZED (SELECT q_id, vec_id, rank AS trank FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM bc)
-         |  WHERE rank <= $IVF_TOPK),
-         |j AS MATERIALIZED (SELECT truth.q_id, truth.vec_id, trank, arank
+         |$ivfSearchSql,
+         |${truthSql(IVF_TOPK, mat = true)},
+         |j AS MATERIALIZED (SELECT truth.q_id, truth.vec_id, truth.rank AS trank, ivf.rank AS arank
          |  FROM truth JOIN ivf ON ivf.q_id = truth.q_id AND ivf.vec_id = truth.vec_id),
          |qn AS (SELECT CAST(count(DISTINCT q_id) AS BIGINT) AS n FROM truth),
-         |m AS ($mk)
+         |m AS (${matchedSql("j", IVF_TOPK)})
          |SELECT k, n_matched,
          |  ${graft.functions.Exact.duck6("n_matched", "k * qn.n")} AS recall_at_k
-         |FROM m CROSS JOIN qn""".stripMargin
-    },
+         |FROM m CROSS JOIN qn""".stripMargin,
     "simsearch_filtered_ann" ->
       s"""WITH b AS (SELECT vec_id, embedding, label,
          |  ${VectorOps.signBucketSql("embedding", BITS)} AS bk FROM embeddings),
@@ -576,22 +601,8 @@ object SimSearch extends graft.Registry {
          |LEFT JOIN nc ON nc.q_id = t.q_id
          |GROUP BY t.q_id""".stripMargin,
     "simsearch_recall" ->
-      s"""WITH c AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-         |  FROM embeddings q JOIN embeddings e ON q.vec_id <= $QN AND q.vec_id != e.vec_id),
-         |truth AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM c)
-         |  WHERE rank <= $ANN_TOPK),
-         |b AS (SELECT vec_id, embedding,
-         |  ${VectorOps.signBucketSql("embedding", BITS)} AS bk FROM embeddings),
-         |ac AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-         |  FROM b q JOIN b e ON q.vec_id <= $QN AND q.bk = e.bk AND q.vec_id != e.vec_id),
-         |ann AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM ac)
-         |  WHERE rank <= $ANN_TOPK)
+      s"""WITH ${truthSql(ANN_TOPK)},
+         |${annSql(ANN_TOPK)}
          |SELECT t.q_id, count(*) AS k,
          |  CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
          |  ${graft.functions.Exact.duck6(
@@ -600,22 +611,8 @@ object SimSearch extends graft.Registry {
          |FROM truth t LEFT JOIN ann a ON t.q_id = a.q_id AND t.vec_id = a.vec_id
          |GROUP BY t.q_id""".stripMargin,
     "simsearch_ndcg" ->
-      s"""WITH c AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-         |  FROM embeddings q JOIN embeddings e ON q.vec_id <= $QN AND q.vec_id != e.vec_id),
-         |truth AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM c)
-         |  WHERE rank <= $ANN_TOPK),
-         |b AS (SELECT vec_id, embedding,
-         |  ${VectorOps.signBucketSql("embedding", BITS)} AS bk FROM embeddings),
-         |ac AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-         |  FROM b q JOIN b e ON q.vec_id <= $QN AND q.bk = e.bk AND q.vec_id != e.vec_id),
-         |ann AS (SELECT q_id, vec_id, rank FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM ac)
-         |  WHERE rank <= $ANN_TOPK)
+      s"""WITH ${truthSql(ANN_TOPK)},
+         |${annSql(ANN_TOPK)}
          |SELECT a.q_id,
          |  round(sum(CASE WHEN t.vec_id IS NOT NULL
          |    THEN 1.0 / log2(a.rank + 1) ELSE 0.0 END), 6) AS dcg_at_k,
@@ -624,24 +621,10 @@ object SimSearch extends graft.Registry {
          |FROM ann a LEFT JOIN truth t ON a.q_id = t.q_id AND a.vec_id = t.vec_id
          |GROUP BY a.q_id""".stripMargin,
     "simsearch_mrr" ->
-      s"""WITH c AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-         |  FROM embeddings q JOIN embeddings e ON q.vec_id <= $QN AND q.vec_id != e.vec_id),
-         |truth AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM c)
-         |  WHERE rank <= $ANN_TOPK),
-         |b AS (SELECT vec_id, embedding,
-         |  ${VectorOps.signBucketSql("embedding", BITS)} AS bk FROM embeddings),
-         |ac AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-         |  FROM b q JOIN b e ON q.vec_id <= $QN AND q.bk = e.bk AND q.vec_id != e.vec_id),
-         |ann AS (SELECT q_id, vec_id, rank FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM ac)
-         |  WHERE rank <= $ANN_TOPK),
-         |h AS (SELECT q_id, min(rank) AS fhr
-         |  FROM ann SEMI JOIN truth USING (q_id, vec_id) GROUP BY q_id)
+      s"""WITH ${truthSql(ANN_TOPK)},
+         |${annSql(ANN_TOPK)},
+         |h AS (SELECT ann.q_id, min(ann.rank) AS fhr
+         |  FROM ann SEMI JOIN truth USING (q_id, vec_id) GROUP BY ann.q_id)
          |SELECT t.q_id, CAST(coalesce(h.fhr, 0) AS BIGINT) AS first_hit_rank,
          |  CASE WHEN h.fhr IS NOT NULL THEN ${graft.functions.Exact.duck6("1", "h.fhr")}
          |       ELSE 0.0 END AS rr_at_k
@@ -671,13 +654,7 @@ object SimSearch extends graft.Registry {
       val unions = (2 to MMR_K).map(i =>
         s"UNION ALL SELECT q_id, $i AS mmr_rank, vec_id, cs, sc AS mmr_score FROM r$i")
         .mkString("\n")
-      s"""WITH c AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
-         |  FROM embeddings q JOIN embeddings e ON q.vec_id <= $QN AND q.vec_id != e.vec_id),
-         |cand AS MATERIALIZED (SELECT q_id, vec_id, cs FROM (
-         |  SELECT q_id, vec_id, cs, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS rank FROM c)
-         |  WHERE rank <= $TOPK),
+      s"""WITH ${truthSql(TOPK, "cand", mat = true)},
          |cc AS MATERIALIZED (SELECT a.q_id, a.vec_id AS va, b.vec_id AS vb,
          |    ${VectorOps.cosineSql("ea.embedding", "eb.embedding")} AS sim
          |  FROM cand a JOIN cand b ON a.q_id = b.q_id AND a.vec_id != b.vec_id
@@ -698,7 +675,11 @@ object SimSearch extends graft.Registry {
          |    ${VectorOps.cosineSql("q.embedding", "e.embedding")} AS cs
          |  FROM embeddings q JOIN embeddings e ON q.vec_id <= $QN AND q.vec_id != e.vec_id)
          |WHERE cs >= 0.3""".stripMargin,
-    "simsearch_ivf" -> ivfOracle,
+    "simsearch_ivf" ->
+      s"""WITH pts AS (${Points.embedPtsSql}),
+         |$ivfChainSql,
+         |$ivfSearchSql
+         |SELECT q_id, vec_id, rank, cs FROM ivf""".stripMargin,
     "embed_cell_outliers" ->
       s"""WITH pts AS (${Points.embedPtsSql}),
          |$ivfChainSql,
@@ -727,13 +708,8 @@ object SimSearch extends graft.Registry {
          |  FROM acell)
          |SELECT cell, vec_id, rank FROM r WHERE rank <= 20""".stripMargin,
     "simsearch_topk" ->
-      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings WHERE vec_id <= $QN),
-         |c AS (SELECT q_id, vec_id,
-         |  ${VectorOps.cosineSql("qe", "embedding")} AS cs
-         |  FROM q JOIN embeddings ON q_id != vec_id),
-         |r AS (SELECT *, CAST(row_number() OVER (
-         |  PARTITION BY q_id ORDER BY cs DESC, vec_id ASC) AS INT) AS rank FROM c)
-         |SELECT q_id, vec_id, rank, cs FROM r WHERE rank <= $TOPK""".stripMargin,
+      s"""WITH ${truthSql(TOPK)}
+         |SELECT q_id, vec_id, CAST(rank AS INT) AS rank, cs FROM truth""".stripMargin,
     "simsearch_hard_negatives" ->
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qe, label AS ql
          |  FROM embeddings WHERE vec_id <= $QN),

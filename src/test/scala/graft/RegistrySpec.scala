@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Verify run: one owner per key, an oracle only for a registered query,
   * and a SURVEY §2 row for every key (the regex tools/roundclose.sh
   * uses). Likewise a per-dataset cache hand-rolled beside graft.Memo,
-  * and a Lloyd step spelled beside KMeans.train / ClusterSql. */
+  * a Lloyd step spelled beside KMeans.train / ClusterSql, and an
+  * oracle that trains the IVF coarse quantizer twice. */
 class RegistrySpec extends AnyFunSuite {
 
   private def owners(part: Registry => Iterable[String]): Map[String, Seq[String]] =
@@ -66,6 +67,13 @@ class RegistrySpec extends AnyFunSuite {
     assert(reseeds.isEmpty, s"a Lloyd reseed outside KMeans.train: ${reseeds.mkString(", ")}")
     val chains = strays("""if \(i == 1\)[^\n]*u\$\{i - 1\}""".r, "ClusterSql.scala")
     assert(chains.isEmpty, s"a Lloyd chain unrolled outside ClusterSql: ${chains.mkString(", ")}")
+  }
+
+  test("each oracle trains the IVF coarse quantizer at most once") {
+    val twice = SparkEntry.oracleSql.collect {
+      case (k, sql) if "acell AS MATERIALIZED".r.findAllMatchIn(sql).size > 1 => k
+    }
+    assert(twice.isEmpty, s"oracles training the coarse quantizer twice: ${twice.toSeq.sorted.mkString(", ")}")
   }
 
   test("select trims names and rejects unknown ones") {

@@ -78,6 +78,40 @@ class SimSearchSpec extends AnyFunSuite {
       "qIvfPq must unpersist its point and index caches before returning")
   }
 
+  test("ivfpq_residual returns 5 ranked rows per query, no self match, ad non-decreasing") {
+    val rows = IvfPq.queries("simsearch_ivfpq_residual")(spark, sf).collect()
+    assert(rows.nonEmpty)
+    rows.groupBy(_.getAs[Long]("q_id")).foreach { case (q, rs) =>
+      val byRank = rs.sortBy(_.getAs[Int]("rank"))
+      assert(byRank.map(_.getAs[Int]("rank")).toSeq == (1 to 5), s"q=$q ranks")
+      assert(!byRank.exists(_.getAs[Long]("vec_id") == q), s"q=$q matched itself")
+      val ads = byRank.map(_.getAs[Double]("ad"))
+      assert(ads.zip(ads.tail).forall { case (a, b) => a <= b }, s"q=$q ad decreases")
+    }
+  }
+
+  test("a second ivfpq call reads the staged index: no Memo build") {
+    IvfPq.qIvfPq(spark, sf).collect()
+    val m0 = graft.Memo.misses
+    IvfPq.qIvfPq(spark, sf).collect()
+    assert(graft.Memo.misses == m0)
+  }
+
+  test("the ivfpq sweep at the shipped config is the recall curve's k=5 rows") {
+    val at5 = IvfPq.qIvfPqRecallCurve(spark, sf).collect()
+      .filter(_.getAs[Int]("k") == 5)
+      .map(r => r.getAs[String]("variant") -> r.getAs[Double]("recall_at_k")).toMap
+    assert(IvfPqSweep.recallAt(spark, sf, 16, SimSearch.NPROBE) ==
+      ((at5("ivfpq"), at5("ivfpq_residual"))))
+  }
+
+  test("recall@k counts zero matches when a result shares no row with the truth") {
+    val truth = Seq((1L, 7L, 1), (1L, 8L, 2)).toDF("q_id", "vec_id", "trank")
+    val none = Seq.empty[(Long, Long, Int)].toDF("q_id", "vec_id", "rank")
+    val rows = SimSearch.recallAtK(truth, Seq("ivf" -> none), 2, 1L)
+    assert(rows == Seq(("ivf", 1, 0L, 0.0), ("ivf", 2, 0L, 0.0)))
+  }
+
   test("ann recall measurement is a valid fraction over the brute-force truth") {
     val rows = SimSearch.qRecall(spark, sf).collect()
     assert(rows.nonEmpty)
