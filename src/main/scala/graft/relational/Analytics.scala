@@ -838,15 +838,16 @@ object Analytics extends graft.Registry {
     * quantity-weighted question the unweighted percentile family
     * cannot answer (a cheap SKU shipped by the pallet moves the
     * weighted median; the unweighted one counts it once). Runs on the
-    * [[WeightedQuantiles]] engine: bounded-state bucket refinement
-    * with DECIMAL-exact weight masses, so the threshold comparison
-    * cumW >= p*W is exact and the answer is the oracle's
-    * min-value-reaching-the-mass, never a float near-tie. */
+    * weighted entry of the [[Quantiles]] engine: bounded-state bucket
+    * refinement with DECIMAL-exact weight masses, so the threshold
+    * comparison cumW >= p*W is exact and the answer is the oracle's
+    * min-value-reaching-the-mass, never a float near-tie; `w_total` is
+    * the total weight its fused first pass already sums. */
   def qWeightedQuartiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val li = t(spark, dir, "lineitem")
       .select(col("l_returnflag"), col("l_extendedprice"), col("l_quantity"))
-    val (qs, totals) = WeightedQuantiles.groupedWithTotals(
+    val (qs, totals) = Quantiles.weightedGroupedWithTotals(
       li, "l_returnflag", "l_extendedprice", "l_quantity", Seq(0.25, 0.5, 0.75))
     qs.toSeq.sortBy(_._1)
       .map { case (g, m) =>

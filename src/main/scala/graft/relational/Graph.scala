@@ -481,49 +481,38 @@ object Graph extends graft.Registry {
       |       UNION ALL SELECT ib AS s, ia AS d FROM cands),
       |deg AS (SELECT s, count(*) AS deg FROM und GROUP BY s)""".stripMargin
 
+  /** The label-propagation oracles' shared prefix: the candidate graph,
+    * each node its own label in `l0`, then three synchronous sweeps —
+    * the most frequent neighbour label, ties to the smallest — ending
+    * at `l3`. */
+  private val lpSweepsSql = {
+    val sweep = (k: Int) =>
+      s"""v$k AS (SELECT und.s AS node, l${k - 1}.lbl, count(*) AS n
+         |  FROM und JOIN l${k - 1} ON und.d = l${k - 1}.node GROUP BY 1, 2),
+         |m$k AS (SELECT node, lbl FROM (
+         |  SELECT node, lbl, row_number() OVER (
+         |    PARTITION BY node ORDER BY n DESC, lbl ASC) AS rk FROM v$k)
+         |  WHERE rk = 1),
+         |l$k AS MATERIALIZED (
+         |  SELECT nodes.node, coalesce(m$k.lbl, nodes.node) AS lbl
+         |  FROM nodes LEFT JOIN m$k ON m$k.node = nodes.node)""".stripMargin
+    s"""WITH ${Dedup.sigSql},
+       |${Dedup.bandsSql},
+       |${Dedup.candsSql},
+       |$undSql,
+       |nodes AS (SELECT DISTINCT s AS node FROM und),
+       |l0 AS (SELECT node, node AS lbl FROM nodes),
+       |${(1 to 3).map(sweep).mkString(",\n")}""".stripMargin
+  }
+
   val oracleSql: Map[String, String] = Map(
-    "graph_label_propagation" -> {
-      val sweep = (k: Int) =>
-        s"""v$k AS (SELECT und.s AS node, l${k - 1}.lbl, count(*) AS n
-           |  FROM und JOIN l${k - 1} ON und.d = l${k - 1}.node GROUP BY 1, 2),
-           |m$k AS (SELECT node, lbl FROM (
-           |  SELECT node, lbl, row_number() OVER (
-           |    PARTITION BY node ORDER BY n DESC, lbl ASC) AS rk FROM v$k)
-           |  WHERE rk = 1),
-           |l$k AS MATERIALIZED (
-           |  SELECT nodes.node, coalesce(m$k.lbl, nodes.node) AS lbl
-           |  FROM nodes LEFT JOIN m$k ON m$k.node = nodes.node)""".stripMargin
-      val sweeps = (1 to 3).map(sweep).mkString(",\n")
-      s"""WITH ${Dedup.sigSql},
-         |${Dedup.bandsSql},
-         |${Dedup.candsSql},
-         |$undSql,
-         |nodes AS (SELECT DISTINCT s AS node FROM und),
-         |l0 AS (SELECT node, node AS lbl FROM nodes),
-         |$sweeps,
+    "graph_label_propagation" ->
+      s"""$lpSweepsSql,
          |sz AS (SELECT lbl, count(*) AS community_size FROM l3 GROUP BY lbl)
          |SELECT community_size, count(*) AS n_communities
-         |FROM sz GROUP BY community_size""".stripMargin
-    },
-    "graph_lp_modularity" -> {
-      val sweep = (k: Int) =>
-        s"""v$k AS (SELECT und.s AS node, l${k - 1}.lbl, count(*) AS n
-           |  FROM und JOIN l${k - 1} ON und.d = l${k - 1}.node GROUP BY 1, 2),
-           |m$k AS (SELECT node, lbl FROM (
-           |  SELECT node, lbl, row_number() OVER (
-           |    PARTITION BY node ORDER BY n DESC, lbl ASC) AS rk FROM v$k)
-           |  WHERE rk = 1),
-           |l$k AS MATERIALIZED (
-           |  SELECT nodes.node, coalesce(m$k.lbl, nodes.node) AS lbl
-           |  FROM nodes LEFT JOIN m$k ON m$k.node = nodes.node)""".stripMargin
-      val sweeps = (1 to 3).map(sweep).mkString(",\n")
-      s"""WITH ${Dedup.sigSql},
-         |${Dedup.bandsSql},
-         |${Dedup.candsSql},
-         |$undSql,
-         |nodes AS (SELECT DISTINCT s AS node FROM und),
-         |l0 AS (SELECT node, node AS lbl FROM nodes),
-         |$sweeps,
+         |FROM sz GROUP BY community_size""".stripMargin,
+    "graph_lp_modularity" ->
+      s"""$lpSweepsSql,
          |lm AS MATERIALIZED (SELECT node AS doc_id, lbl FROM l3),
          |dc AS (SELECT coalesce(lm.lbl, deg.s) AS c, CAST(sum(deg) AS BIGINT) AS dc
          |       FROM deg LEFT JOIN lm ON lm.doc_id = deg.s GROUP BY 1),
@@ -539,8 +528,7 @@ object Graph extends graft.Registry {
          |  ${graft.functions.Exact.sduck6(
               "4 * CAST(n_edges AS HUGEINT) * intra_edges - sum_dc2",
               "4 * CAST(n_edges AS HUGEINT) * n_edges")} AS modularity
-         |FROM ec CROSS JOIN ds""".stripMargin
-    },
+         |FROM ec CROSS JOIN ds""".stripMargin,
     "graph_bfs_distances" -> {
       val round = (k: Int) =>
         s"""f$k AS (SELECT DISTINCT seed, und.d AS node

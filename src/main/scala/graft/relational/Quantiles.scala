@@ -1,6 +1,8 @@
 package graft.relational
 
-import org.apache.spark.sql.DataFrame
+import java.math.{BigDecimal => JBD}
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Exact distributed quantiles with BOUNDED executor and driver state —
@@ -10,43 +12,60 @@ import org.apache.spark.sql.functions._
   * domain stops fitting in memory: `l_extendedprice` at 100 TB has
   * ~10⁸⁺ distinct doubles).
   *
+  * One selector serves both entries: over rows (group, value, mass),
+  * for each (group, threshold T) it finds the smallest value whose
+  * cumulative mass reaches T, and it returns each group's total mass.
+  *   - unweighted ([[grouped]], [[exact]]): the mass is a BIGINT 1 per
+  *     row, so rank r (0-based) is threshold r + 1, and the answer is
+  *     `percentile`'s `(k₂−r)·lower + (r−k₁)·higher` interpolation.
+  *   - weighted ([[weightedGrouped]], [[weightedExact]]): Q(p) is the
+  *     smallest value whose cumulative weight reaches p of the total
+  *     weight (the "weighted lower quantile"; "below what unit price
+  *     does half the shipped QUANTITY sit"). The mass is decimal(38,6)
+  *     — Spark's decimal sum is exact and order-independent — and the
+  *     threshold is W · BigDecimal(p's decimal string), mirrored by the
+  *     oracle's DECIMAL literal product, so `probs` must be
+  *     decimal-exact literals (0.25, not 1.0/3).
+  *
   * Algorithm — iterative bucket refinement, the classic distributed
   * exact-selection scheme, with the stats pass FUSED into the first
   * histogram pass so the typical query is two scans total:
   *
-  *   pass 1   groupBy(group, rankBucket(v)) → (count, min, max)
-  *            where rankBucket is a rank-preserving function of the
+  *   pass 1   groupBy(group, binade bucket(v)) → (mass, rows, min, max)
+  *            where the bucket is a rank-preserving function of the
   *            double's sign/binary-exponent/log-mantissa — computable
   *            WITHOUT knowing per-group min/max, statically bounded
-  *            (≤ ~4300·32 ids). One scan yields per-group n/min/max
-  *            (sums over buckets) AND the first bracket refinement.
-  *   pass k   histogram the current bracket into 1024
-  *            comparison-exact buckets, keep the bucket
-  *            holding the rank, recurse             O(|brackets|·1024)
-  *   final    sort_array(collect_list) of the ≤ residualCap
-  *            values left in the bracket, index the rank O(residualCap)
+  *            (≤ ~4300·32 ids). One scan yields per-group totals AND
+  *            the first bracket refinement.
+  *   pass k   histogram the current bracket into 1024 buckets, keep the
+  *            bucket where the mass reaches the threshold, recurse
+  *                                                  O(|brackets|·1024)
+  *   final    collect the ≤ residualCap rows left in the bracket and
+  *            walk their mass on the driver            O(residualCap)
   *
   * Every aggregation in every pass is a partial-aggregated groupBy
-  * over a STATICALLY bounded key space; the only collect_list is
-  * capped at `residualCap` by construction. Each pass shrinks the
-  * bracket ≥1024×, so even an adversarial all-values-within-one-ulp
-  * column terminates in ≤ ~6 passes (a double has 52 mantissa bits);
-  * typical data resolves in ONE fused pass + one residual pass = 2
-  * scans of a 2-column projection. The input is deliberately NOT
-  * cached: recomputing a cheap projection beats materializing a
-  * corpus-wide cache at 100 TB, and locally the pass count is what
-  * dominates, not the scan.
+  * over a STATICALLY bounded key space; the only row collect is capped
+  * at `residualCap` by construction. Typical data resolves in ONE
+  * fused pass + one residual pass = 2 scans of a 3-column projection.
+  * The input is deliberately NOT cached: recomputing a cheap projection
+  * beats materializing a corpus-wide cache at 100 TB, and locally the
+  * pass count is what dominates, not the scan.
   *
-  * Exactness: pass-1 bucketing only needs to be rank-preserving
-  * (floor∘log2 is monotone — java.lang.Math.log is semi-monotonic,
-  * division by the positive constant ln 2 and floor preserve order);
-  * each bucket's bracket is its OBSERVED [min, max], and all later
-  * membership is decided by COMPARISONS against driver-held exact
-  * doubles, so no value can straddle a rounding boundary and the rank
-  * bookkeeping is exact. The final interpolation mirrors
-  * `percentile`'s `(k₂−r)·lower + (r−k₁)·higher`, keeping results
-  * bitwise-identical to the single-buffer aggregate (QuantilesSpec
-  * asserts this property on adversarial data).
+  * Exactness: both bucket functions are monotone in the value (floor∘
+  * log2 — java.lang.Math.log is semi-monotonic, division by the
+  * positive constant ln 2 and floor preserve order; and floor((v−lo) /
+  * (hi−lo)·1024), whose every step is monotone), and the next bracket
+  * is the chosen bucket's OBSERVED [min, max], so a monotone bucket
+  * puts every value of that range in that bucket and bracket
+  * membership (lo ≤ v ≤ hi, comparisons against exact driver doubles)
+  * selects exactly the bucket's rows. Mass is walked as exact integers
+  * or decimals, never doubles. A bracket's min lands in bucket 0 and
+  * its max in bucket 1023, so every pass splits it; each pass also
+  * narrows it ≥1024× from a pass-1 bracket inside one 32nd of a binade,
+  * so even an all-values-within-a-few-ulps column ends in a few passes.
+  * The unweighted interpolation keeps results bitwise-identical to the
+  * single-buffer aggregate (QuantilesSpec asserts this on adversarial
+  * data).
   *
   * NaN policy: NaNs are filtered with nulls (a corrupt value must not
   * abort the query — the bracket comparisons would silently drop it
@@ -72,9 +91,12 @@ object Quantiles {
     * residual-sized brackets in the one fused pass. */
   private val SubBuckets = 32
 
-  private final case class Target(group: String, rank: Long)
-  private final case class Bracket(lo: Double, hi: Double, hiClosed: Boolean,
-                                   countBelow: Long, countIn: Long)
+  /** The i-th threshold of a group. */
+  private final case class Target(group: String, i: Int)
+  /** Values lo ≤ v ≤ hi of one group: `rows` rows above `massBelow`. */
+  private final case class Bracket(lo: Double, hi: Double, massBelow: JBD, rows: Long)
+  /** One histogram bucket's mass, row count and observed [mn, mx]. */
+  private final case class Cell(mass: JBD, rows: Long, mn: Double, mx: Double)
 
   /** Exact interpolated quantiles of `valueCol` per `groupCol` value.
     * Returns group → prob → quantile (groups with zero non-null rows
@@ -82,14 +104,98 @@ object Quantiles {
   def grouped(df: DataFrame, groupCol: String, valueCol: String,
               probs: Seq[Double],
               residualCap: Int = DefaultResidualCap)
-      : Map[String, Map[Double, Double]] = {
-    require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0))
-    val spark = df.sparkSession
-    val base = df.select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull && !isnan(col("v")))
+      : Map[String, Map[Double, Double]] =
+    groupedWithCounts(df, groupCol, valueCol, probs, residualCap)._1
 
-    // ---- Fused pass 1: stats + first refinement in ONE scan. ----
+  /** As [[grouped]], but also returns each group's row count (already
+    * summed by the fused pass — callers reporting it run no count). */
+  def groupedWithCounts(df: DataFrame, groupCol: String, valueCol: String,
+                        probs: Seq[Double],
+                        residualCap: Int = DefaultResidualCap)
+      : (Map[String, Map[Double, Double]], Map[String, Long]) = {
+    require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0))
+    val base = df.select(col(groupCol).cast("string").as("g"),
+        col(valueCol).cast("double").as("v"), lit(1L).as("w"))
+      .filter(col("v").isNotNull && !isnan(col("v")))
+    // Ranks needed per group: floor and ceil of p·(n−1), deduped.
+    def ranks(n: Long): IndexedSeq[Long] = probs.flatMap { p =>
+      val r = p * (n - 1)
+      Seq(math.floor(r).toLong, math.ceil(r).toLong)
+    }.distinct.toIndexedSeq
+    val (found, totals) = select(base,
+      w => ranks(w.longValueExact).map(r => JBD.valueOf(r + 1)), residualCap)
+    val counts = totals.map { case (g, w) => g -> w.longValueExact }
+    (counts.map { case (g, n) =>
+      val at = ranks(n).zip(found(g)).toMap
+      g -> probs.map { p =>
+        val r = p * (n - 1)
+        val k1 = math.floor(r).toLong
+        val k2 = math.ceil(r).toLong
+        val lo = at(k1)
+        val hi = at(k2)
+        // percentile's exact interpolation form (two products, not
+        // lo + Δ·frac — they differ by an ulp and the oracle is bitwise)
+        val q = if (k1 == k2 || lo == hi) lo
+                else (k2 - r) * lo + (r - k1) * hi
+        p -> q
+      }.toMap
+    }, counts)
+  }
+
+  /** Ungrouped convenience: exact quantiles of one column. */
+  def exact(df: DataFrame, valueCol: String, probs: Seq[Double],
+            residualCap: Int = DefaultResidualCap): Map[Double, Double] =
+    exactWithCount(df, valueCol, probs, residualCap)._1
+
+  /** As [[exact]], with the non-null row count; an empty column gives
+    * an empty map and 0. */
+  def exactWithCount(df: DataFrame, valueCol: String, probs: Seq[Double],
+                     residualCap: Int = DefaultResidualCap): (Map[Double, Double], Long) = {
+    val (qs, counts) = groupedWithCounts(df.withColumn("__g", lit("all")), "__g",
+      valueCol, probs, residualCap)
+    (qs.getOrElse("all", Map.empty), counts.getOrElse("all", 0L))
+  }
+
+  /** group → prob → weighted quantile (groups with zero positive-
+    * weight rows are absent). */
+  def weightedGrouped(df: DataFrame, groupCol: String, valueCol: String,
+                      weightCol: String, probs: Seq[Double],
+                      residualCap: Int = DefaultResidualCap)
+      : Map[String, Map[Double, Double]] =
+    weightedGroupedWithTotals(df, groupCol, valueCol, weightCol, probs, residualCap)._1
+
+  /** As [[weightedGrouped]], but also returns each group's exact total
+    * weight (already summed by the fused pass — consumers reporting
+    * the total should not pay a second scan). */
+  def weightedGroupedWithTotals(df: DataFrame, groupCol: String, valueCol: String,
+                                weightCol: String, probs: Seq[Double],
+                                residualCap: Int = DefaultResidualCap)
+      : (Map[String, Map[Double, Double]], Map[String, JBD]) = {
+    require(probs.nonEmpty && probs.forall(p => p > 0.0 && p <= 1.0))
+    val base = df.select(col(groupCol).cast("string").as("g"),
+        col(valueCol).cast("double").as("v"),
+        col(weightCol).cast("decimal(38,6)").as("w"))
+      .filter(col("v").isNotNull && !isnan(col("v")) &&
+        col("w").isNotNull && col("w") > 0)
+    val (found, totals) = select(base,
+      w => probs.map(p => w.multiply(new JBD(p.toString))).toIndexedSeq, residualCap)
+    (found.map { case (g, vs) => g -> probs.zip(vs).toMap }, totals)
+  }
+
+  /** Ungrouped weighted convenience. */
+  def weightedExact(df: DataFrame, valueCol: String, weightCol: String,
+                    probs: Seq[Double],
+                    residualCap: Int = DefaultResidualCap): Map[Double, Double] =
+    weightedGrouped(df.withColumn("__g", lit("all")), "__g", valueCol, weightCol,
+      probs, residualCap).getOrElse("all", Map.empty)
+
+  /** The selector over `base` (g, v, w): for each group, the smallest v
+    * whose cumulative mass reaches each threshold `thresholds(W)` of its
+    * total mass W, in threshold order; and each group's W. */
+  private def select(base: DataFrame, thresholds: JBD => IndexedSeq[JBD],
+                     residualCap: Int)
+      : (Map[String, IndexedSeq[Double]], Map[String, JBD]) = {
+    // ---- Fused pass 1: totals + first refinement in ONE scan. ----
     // Rank-preserving bucket id from the value alone:
     //   0 for ±0; ±(binade·32 + log-mantissa-32th) for finite v;
     //   ±2200·32 sentinels for ±Infinity (their own width-zero
@@ -105,222 +211,99 @@ object Quantiles {
         .when(v === Double.PositiveInfinity, 2200 * SubBuckets)
         .when(v === Double.NegativeInfinity, -2200 * SubBuckets)
         .otherwise(when(v < 0.0, -1).otherwise(1) * mag)
+    val first = cells[String](base.groupBy(col("g"), bucket).agg(cellAggs.head, cellAggs.tail: _*))
 
-    val first: Map[String, Array[(Int, Long, Double, Double)]] =
-      base.groupBy(col("g"), bucket.as("bk"))
-        .agg(count(lit(1)).as("n"), min("v").as("mn"), max("v").as("mx"))
-        .collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
-        .groupBy(_._1)
-        .map { case (g, rs) =>
-          g -> rs.map(t => (t._2, t._3, t._4, t._5)).sortBy(_._1)
-        }
-
-    val stats: Map[String, Long] = first.map { case (g, bs) => g -> bs.map(_._2).sum }
-
-    // Ranks needed per group: floor and ceil of p·(n−1), deduped.
-    val ranksOf: Map[String, Seq[Long]] = stats.map { case (g, n) =>
-      g -> probs.flatMap { p =>
-        val r = p * (n - 1)
-        Seq(math.floor(r).toLong, math.ceil(r).toLong)
-      }.distinct
-    }
-
+    val totals = first.map { case (g, cs) => g -> cs.map(_.mass).foldLeft(JBD.ZERO)(_.add(_)) }
+    val wanted = totals.map { case (g, w) => g -> thresholds(w) }
     val resolved = scala.collection.mutable.Map.empty[Target, Double]
-    var active = scala.collection.mutable.Map.empty[Target, Bracket]
-    for ((g, ranks) <- ranksOf; r <- ranks) {
-      // Walk the group's fused histogram to the bucket holding rank r.
-      val bs = first(g)
-      var cum = 0L
+    // Walk one bracket's cells (value order) from `below` to the cell
+    // where the mass reaches target t's threshold: resolved if that
+    // cell holds one distinct value (a tie block of any size costs no
+    // further pass), else the next bracket is its observed [mn, mx].
+    def step(t: Target, cs: IndexedSeq[Cell], below: JBD): Option[(Target, Bracket)] = {
+      val thr = wanted(t.group)(t.i)
+      var cum = below
       var i = 0
-      var done = false
-      while (!done && i < bs.length) {
-        val (_, c, mn, mx) = bs(i)
-        if (r < cum + c) {
-          if (mn == mx) resolved(Target(g, r)) = mn
-          else active(Target(g, r)) = Bracket(mn, mx, hiClosed = true, cum, c)
-          done = true
-        }
-        cum += c
+      while (i < cs.length && cum.add(cs(i).mass).compareTo(thr) < 0) {
+        cum = cum.add(cs(i).mass)
         i += 1
       }
-      require(done, s"rank $r not found in fused histogram for group $g")
+      require(i < cs.length, s"mass $thr unreached for group ${t.group}")
+      val c = cs(i)
+      if (c.mn == c.mx) { resolved(t) = c.mn; None }
+      else Some(t -> Bracket(c.mn, c.mx, cum, c.rows))
     }
 
-    var activeMap: Map[Target, Bracket] = active.toMap
+    var active: Map[Target, Bracket] = wanted.toSeq.flatMap { case (g, ts) =>
+      ts.indices.flatMap(i => step(Target(g, i), first(g), JBD.ZERO))
+    }.toMap
     var pass = 0
-    while (activeMap.nonEmpty && pass < 64) {
+    while (active.nonEmpty && pass < 64) {
       pass += 1
-      // 1. Width-zero brackets: every remaining value equals lo.
-      val (flat, rest) = activeMap.partition { case (_, b) => b.lo == b.hi }
-      flat.foreach { case (t, b) => resolved(t) = b.lo }
-      // 2. Small brackets: one batched collect, capped per target.
-      val (small, big) = rest.partition { case (_, b) => b.countIn <= residualCap }
-      if (small.nonEmpty) resolveResidual(spark, base, small, resolved)
-      // 3. Large brackets: histogram refinement, 1024× narrower each;
-      //    single-distinct-value buckets (heavy tie blocks) resolve
-      //    inside refine() from the bucket's min==max, so a column
-      //    with a million copies of one value costs ONE pass, not a
-      //    width-shrinking spiral down to ulp scale.
-      activeMap = if (big.nonEmpty) refine(spark, base, big, resolved) else Map.empty
-    }
-    require(activeMap.isEmpty, s"quantile refinement did not converge in $pass passes")
-
-    stats.map { case (g, n) =>
-      g -> probs.map { p =>
-        val r = p * (n - 1)
-        val k1 = math.floor(r).toLong
-        val k2 = math.ceil(r).toLong
-        val lo = resolved(Target(g, k1))
-        val hi = resolved(Target(g, k2))
-        // percentile's exact interpolation form (two products, not
-        // lo + Δ·frac — they differ by an ulp and the oracle is bitwise)
-        val q = if (k1 == k2 || lo == hi) lo
-                else (k2 - r) * lo + (r - k1) * hi
-        p -> q
+      // Targets that walked into the same bucket share one bracket.
+      val ids = active.toSeq.map { case (t, b) => (t.group, b.lo, b.hi) -> b.rows }
+        .distinct.zipWithIndex.map { case ((k, rows), id) => k -> (id, rows) }.toMap
+      val (small, big) = ids.partition(_._2._2 <= residualCap)
+      // Small brackets: every row is its own cell. Large brackets: a
+      // 1024-bucket histogram; dividing BEFORE scaling keeps a wide
+      // bracket from overflowing (hi−lo is finite: a pass-1 bucket
+      // never spans mixed signs or an Infinity).
+      val got =
+        (if (small.isEmpty) Map.empty[Int, IndexedSeq[Cell]]
+         else cells[Int](members(base, small).select(col("id"), col("w"),
+           lit(1L), col("v"), col("v")))) ++
+        (if (big.isEmpty) Map.empty[Int, IndexedSeq[Cell]]
+         else cells[Int](members(base, big).groupBy(col("id"),
+           least(lit(Buckets - 1), greatest(lit(0),
+             floor((v - col("lo")) / (col("hi") - col("lo")) * Buckets).cast("int"))))
+           .agg(cellAggs.head, cellAggs.tail: _*)))
+      active = active.toSeq.flatMap { case (t, b) =>
+        val cs = got.getOrElse(ids((t.group, b.lo, b.hi))._1, IndexedSeq.empty)
+        require(cs.map(_.rows).sum == b.rows,
+          s"pass $pass lost rows: ${cs.map(_.rows).sum} != ${b.rows} for $t $b")
+        step(t, cs, b.massBelow)
       }.toMap
     }
+    require(active.isEmpty, s"quantile refinement did not converge in $pass passes")
+
+    (wanted.map { case (g, ts) => g -> ts.indices.map(i => resolved(Target(g, i))) }, totals)
   }
 
-  /** Ungrouped convenience: exact quantiles of one column. */
-  def exact(df: DataFrame, valueCol: String, probs: Seq[Double],
-            residualCap: Int = DefaultResidualCap): Map[Double, Double] =
-    grouped(df.withColumn("__g", lit("all")), "__g", valueCol, probs, residualCap)
-      .getOrElse("all", Map.empty)
+  /** A histogram cell's aggregates, after its key columns. */
+  private val cellAggs = Seq(sum("w"), count(lit(1)), min("v"), max("v"))
 
-  /** Bracket-membership predicate: comparisons against exact driver
-    * doubles, [lo, hi) half-open except the original max stays closed. */
-  private def member(lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column,
-                     hic: org.apache.spark.sql.Column) = {
-    val v = col("v")
-    v >= lo && (v < hi || (hic && v <= hi))
+  /** Collects one histogram job — rows of (key, [bucket,] mass, rows,
+    * min, max) — into each key's cells in value order. Buckets are
+    * monotone in the value, so ordering by min orders them. */
+  private def cells[K](hist: DataFrame): Map[K, IndexedSeq[Cell]] = {
+    val n = hist.columns.length
+    hist.collect().toSeq.groupBy(_.getAs[K](0)).map { case (k, rs) =>
+      k -> rs.map(r => Cell(mass(r, n - 4), r.getLong(n - 3), r.getDouble(n - 2),
+        r.getDouble(n - 1))).sortBy(_.mn).toIndexedSeq
+    }
   }
 
-  /** One histogram pass over every active large bracket; returns the
-    * refined bracket per target, resolving targets whose bucket holds
-    * a single distinct value (min==max) directly into `out`. Identical
-    * (group, bracket) pairs share one histogram — on pass 1 all of a
-    * group's ranks do. */
-  private def refine(spark: org.apache.spark.sql.SparkSession, staged: DataFrame,
-                     big: Map[Target, Bracket],
-                     out: scala.collection.mutable.Map[Target, Double]): Map[Target, Bracket] = {
-    import spark.implicits._
-    val byBracket: Map[(String, Bracket), Seq[Target]] =
-      big.toSeq.groupBy { case (t, b) => (t.group, b) }
-        .map { case (k, ts) => k -> ts.map(_._1) }
-    val keyed = byBracket.keys.toSeq.zipWithIndex
-    val idOf = keyed.toMap
-    val bdf = keyed.map { case ((g, b), id) =>
-      (g, id, b.lo, b.hi, b.hiClosed, edges(b.lo, b.hi))
-    }.toDF("g", "bid", "lo", "hi", "hic", "edges")
+  /** BIGINT (unweighted) or DECIMAL (weighted) mass as an exact decimal. */
+  private def mass(r: Row, i: Int): JBD = r.get(i) match {
+    case n: java.lang.Long => JBD.valueOf(n)
+    case d: JBD => d
+  }
 
-    // Seed bucket by division — DIVIDE FIRST so a wide bracket can't
-    // overflow (v−lo ≤ hi−lo, the quotient is in [0,1]; hi−lo itself
-    // is finite because pass-1 binade bucketing never produces a
-    // mixed-sign or Infinity-spanning bracket) — then correct ±1
-    // against the exact edges: membership is decided ONLY by
-    // comparisons with e_b / e_{b+1}.
-    val b0 = least(lit(Buckets - 1), greatest(lit(0),
-      floor((col("v") - col("lo")) / (col("hi") - col("lo")) * Buckets).cast("int")))
-    val hist = staged.join(broadcast(bdf), "g")
-      .filter(member(col("lo"), col("hi"), col("hic")))
-      .withColumn("b0", b0)
-      .withColumn("b1",
-        when(col("v") < element_at(col("edges"), col("b0") + 1), col("b0") - 1)
-          .otherwise(col("b0")))
-      .withColumn("b2",
-        when(col("b1") < Buckets - 1 &&
-             col("v") >= element_at(col("edges"), col("b1") + 2), col("b1") + 1)
-          .otherwise(col("b1")))
-      .withColumn("bk", least(lit(Buckets - 1), greatest(lit(0), col("b2"))))
-      .groupBy("bid", "bk")
-      .agg(count(lit(1)).as("c"), min("v").as("mn"), max("v").as("mx"))
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (bid, rows) =>
-        bid -> rows.map(r =>
-          r.getInt(1) -> ((r.getLong(2), r.getDouble(3), r.getDouble(4)))).toMap
+  /** The rows of `base` inside each bracket (group, lo, hi) → id, as
+    * (id, lo, hi, v, w). A row is checked only against its own group's
+    * brackets, looked up in a literal map — the same work as a
+    * broadcast join on g, without the broadcast job. */
+  private def members(base: DataFrame,
+                      brackets: Map[(String, Double, Double), (Int, Long)]): DataFrame = {
+    val byGroup: Map[String, Seq[(Int, Double, Double)]] =
+      brackets.toSeq.groupBy(_._1._1).map { case (g, bs) =>
+        g -> bs.map { case ((_, lo, hi), (id, _)) => (id, lo, hi) }
       }
-
-    byBracket.toSeq.flatMap { case ((g, br), targets) =>
-      val counts = hist.getOrElse(idOf((g, br)), Map.empty)
-      val total = counts.values.map(_._1).sum
-      require(total == br.countIn,
-        s"histogram lost rows: $total != ${br.countIn} for $g $br")
-      val es = edges(br.lo, br.hi)
-      targets.flatMap { t =>
-        val rankIn = t.rank - br.countBelow
-        var cum = 0L
-        var chosen = -1
-        var below = 0L
-        var bucket = (0L, 0.0, 0.0)
-        var b = 0
-        while (b < Buckets && chosen < 0) {
-          val (c, mn, mx) = counts.getOrElse(b, (0L, 0.0, 0.0))
-          if (rankIn < cum + c) { chosen = b; below = cum; bucket = (c, mn, mx) }
-          cum += c
-          b += 1
-        }
-        require(chosen >= 0, s"rank ${t.rank} not found in bracket $br")
-        val (inBucket, mn, mx) = bucket
-        if (mn == mx) { out(t) = mn; None } // one distinct value: done
-        // new bracket = the OBSERVED [mn, mx] (closed), not the nominal
-        // bucket edges: values in other buckets are < e_b or >= e_{b+1}
-        // and mn >= e_b, mx < e_{b+1}, so [mn, mx] holds exactly this
-        // bucket's values — tighter, and clustered data converges in
-        // one extra pass instead of ulp-stepping through empty margins.
-        else Some(t -> Bracket(mn, mx, hiClosed = true,
-          countBelow = br.countBelow + below, countIn = inBucket))
-      }
-    }.toMap
-  }
-
-  /** Final pass: collect each small bracket (≤ residualCap values by
-    * construction — the one collect_list, explicitly bounded), sort,
-    * index the rank. Batched into ONE job for all targets. */
-  private def resolveResidual(spark: org.apache.spark.sql.SparkSession,
-                              staged: DataFrame, small: Map[Target, Bracket],
-                              out: scala.collection.mutable.Map[Target, Double]): Unit = {
-    import spark.implicits._
-    val rows = small.toSeq.zipWithIndex.map { case ((t, b), id) =>
-      (t.group, id, b.lo, b.hi, b.hiClosed)
-    }
-    val tOf = small.toSeq.zipWithIndex.map { case ((t, b), id) =>
-      id -> (t, b)
-    }.toMap
-    val rdf = rows.toDF("g", "tid", "lo", "hi", "hic")
-    val got = staged.join(broadcast(rdf), "g")
-      .filter(member(col("lo"), col("hi"), col("hic")))
-      .groupBy("tid").agg(sort_array(collect_list("v")).as("vs"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1))
-      .toMap
-    tOf.foreach { case (id, (t, b)) =>
-      val vs = got.getOrElse(id, Seq.empty)
-      require(vs.length == b.countIn,
-        s"residual lost rows: ${vs.length} != ${b.countIn} for $t")
-      out(t) = vs((t.rank - b.countBelow).toInt)
-    }
-  }
-
-  /** 1025 monotone bucket edges lo = e₀ ≤ … ≤ e₁₀₂₄ = hi. Duplicate
-    * edges (sub-ulp widths) just leave empty buckets. Width is divided
-    * BEFORE scaling by the index so no intermediate can overflow
-    * (w ≤ 2¹⁰²³ is guaranteed finite: pass-1 binade bucketing never
-    * emits a mixed-sign or Infinity-spanning bracket). */
-  private def edges(lo: Double, hi: Double): Array[Double] = {
-    val w = hi - lo
-    require(!w.isInfinity, s"bracket [$lo, $hi] has non-finite width")
-    val step = w / Buckets
-    val es = new Array[Double](Buckets + 1)
-    var i = 0
-    while (i <= Buckets) {
-      es(i) = lo + step * i
-      if (i > 0 && es(i) < es(i - 1)) es(i) = es(i - 1)
-      i += 1
-    }
-    es(0) = lo
-    es(Buckets) = hi
-    es
+    val mine = typedLit(byGroup)
+    base.filter(col("g").isin(byGroup.keys.toSeq: _*))
+      .select(col("v"), col("w"), explode(filter(mine(col("g")),
+        b => col("v") >= b("_2") && col("v") <= b("_3"))).as("b"))
+      .select(col("b._1").as("id"), col("b._2").as("lo"), col("b._3").as("hi"),
+        col("v"), col("w"))
   }
 }

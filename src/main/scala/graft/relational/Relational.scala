@@ -462,10 +462,9 @@ object Relational extends graft.Registry {
     val lags = p.select(col("user_id"),
       ((unix_timestamp(col("t_buy")) - unix_timestamp(col("t_view2"))).cast("double") / 60.0)
         .as("lag_min"))
-    val qs = Quantiles.grouped(lags.withColumn("g", lit("all")), "g", "lag_min",
-      Seq(0.25, 0.5, 0.75))
-    val n = lags.count()
-    Seq((n, qs("all")(0.25), qs("all")(0.5), qs("all")(0.75)))
+    val (qs, n) = Quantiles.exactWithCount(lags, "lag_min", Seq(0.25, 0.5, 0.75))
+    // no converting user: n = 0 and NULL quartiles, as quantile_cont gives
+    Seq((n, qs.get(0.25), qs.get(0.5), qs.get(0.75)))
       .toDF("n_converting_users", "p25", "p50", "p75")
       .select(col("n_converting_users"),
         round(col("p25"), 6).as("p25"), round(col("p50"), 6).as("p50"),

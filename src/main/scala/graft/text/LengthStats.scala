@@ -11,19 +11,19 @@ import graft.Tables.t
   *
   * Rides the repo's bounded-state exact-quantile engine
   * (graft.relational.Quantiles — the §5 rule: never the single-buffer
-  * `percentile` aggregate): three bounded-cardinality passes, exact
+  * `percentile` aggregate): bounded-cardinality passes (typically the
+  * fused first pass and one residual collect), exact
   * interpolated values, bitwise-equal to DuckDB's quantile_cont on
-  * integer inputs (the percentile_qty precedent). Counts are
-  * INT-EXACT; one extra bounded per-source count pass. */
+  * integer inputs (the percentile_qty precedent). `n_docs` is the
+  * per-source row count the engine's fused first pass already sums
+  * (`n_chars` is never null, so it equals the oracle's count(*)). */
 object LengthStats extends graft.Registry {
 
   def qLengthQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = t(spark, dir, "documents")
-    val qs = graft.relational.Quantiles.grouped(
+    val (qs, counts) = graft.relational.Quantiles.groupedWithCounts(
       docs, "source", "n_chars", Seq(0.1, 0.5, 0.9, 0.99))
-    val counts = docs.groupBy("source").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     qs.keys.toSeq.sorted.map { s =>
       val q = qs(s)
       (s, counts(s), q(0.1), q(0.5), q(0.9), q(0.99))

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Verify run: one owner per key, an oracle only for a registered query,
   * and a SURVEY §2 row for every key (the regex tools/roundclose.sh
   * uses). Likewise a per-dataset cache hand-rolled beside graft.Memo,
-  * a Lloyd step spelled beside KMeans.train / ClusterSql, and an
-  * oracle that trains the IVF coarse quantizer twice. */
+  * a Lloyd step spelled beside KMeans.train / ClusterSql, an oracle
+  * that trains the IVF coarse quantizer twice, and a second exact-
+  * quantile engine beside graft.relational.Quantiles. */
 class RegistrySpec extends AnyFunSuite {
 
   private def owners(part: Registry => Iterable[String]): Map[String, Seq[String]] =
@@ -67,6 +68,13 @@ class RegistrySpec extends AnyFunSuite {
     assert(reseeds.isEmpty, s"a Lloyd reseed outside KMeans.train: ${reseeds.mkString(", ")}")
     val chains = strays("""if \(i == 1\)[^\n]*u\$\{i - 1\}""".r, "ClusterSql.scala")
     assert(chains.isEmpty, s"a Lloyd chain unrolled outside ClusterSql: ${chains.mkString(", ")}")
+  }
+
+  test("exact quantiles have one engine: the pass-1 bucket is spelled only in Quantiles") {
+    val files = strays(java.util.regex.Pattern.quote("log(2.0, abs(").r, owner = "")
+      .map(m => java.nio.file.Paths.get(m.takeWhile(_ != ':')).getFileName.toString).distinct
+    assert(files == Seq("Quantiles.scala"),
+      s"files spelling the binade bucket: ${files.mkString(", ")}")
   }
 
   test("each oracle trains the IVF coarse quantizer at most once") {

@@ -17,6 +17,18 @@ class QuantilesSpec extends AnyFunSuite {
 
   private val probs = Seq(0.25, 0.5, 0.75, 0.9)
 
+  // Adversarial columns, one group "g" each.
+  private val infiniteRows = Seq.fill(100)(("g", Double.NegativeInfinity)) ++
+    Seq.tabulate(300)(i => ("g", i.toDouble)) ++
+    Seq.fill(100)(("g", Double.PositiveInfinity))
+  private val fewUlpRows = Seq(1.0, math.nextUp(1.0), math.nextUp(math.nextUp(1.0)))
+    .flatMap(v => Seq.fill(2000)(("g", v)))
+  private val nearMaxRows = Seq.tabulate(2000) { i =>
+    ("g", (if (i % 2 == 0) -1.0 else 1.0) * Double.MaxValue / (1 + i % 7))
+  }
+  /** The clean part of the NaN case; NaN rows are added to it. */
+  private val nanFreeRows = Seq.tabulate(500)(i => ("g", i.toDouble))
+
   /** Oracle: Spark's own exact percentile, per group. */
   private def sparkPercentile(rows: Seq[(String, Double)]): Map[String, Map[Double, Double]] =
     rows.toDF("g", "v")
@@ -78,7 +90,7 @@ class QuantilesSpec extends AnyFunSuite {
   test("NaN values are filtered like nulls, not a query abort") {
     // the documented divergence from percentile (which sorts NaN
     // last): a corrupt value must not throw the row-count invariant
-    val clean = Seq.tabulate(500)(i => ("g", i.toDouble))
+    val clean = nanFreeRows
     val got = Quantiles.grouped(
       (clean ++ Seq(("g", Double.NaN), ("g", Double.NaN))).toDF("g", "v"),
       "g", "v", probs, residualCap = 16)
@@ -93,26 +105,36 @@ class QuantilesSpec extends AnyFunSuite {
     // bucket seeding divides BEFORE scaling: a group spanning almost
     // the whole double range must refine normally rather than collapse
     // into the extreme buckets and fail the 64-pass bound
-    val rows = Seq.tabulate(2000) { i =>
-      ("g", (if (i % 2 == 0) -1.0 else 1.0) * Double.MaxValue / (1 + i % 7))
-    }
-    check(rows, residualCap = 16)
+    check(nearMaxRows, residualCap = 16)
   }
 
   test("infinite values sit in their own sentinel buckets") {
-    val rows = Seq.fill(100)(("g", Double.NegativeInfinity)) ++
-      Seq.tabulate(300)(i => ("g", i.toDouble)) ++
-      Seq.fill(100)(("g", Double.PositiveInfinity))
-    check(rows, residualCap = 16)
+    check(infiniteRows, residualCap = 16)
   }
 
-  test("edges are monotone and span exactly [lo, hi] even at sub-ulp width") {
-    // private edges() is exercised end-to-end: a bracket whose width is
-    // a few ulps must still refine rather than loop forever.
-    val lo = 1.0
-    val rows = Seq.fill(2000)(("g", lo)) ++
-      Seq.fill(2000)(("g", math.nextUp(lo))) ++
-      Seq.fill(2000)(("g", math.nextUp(math.nextUp(lo))))
-    check(rows, residualCap = 8)
+  test("a bracket a few ulps wide still refines and converges") {
+    // a bracket whose width is a few ulps must still refine rather
+    // than loop forever.
+    check(fewUlpRows, residualCap = 8)
+  }
+
+  test("the weighted entry matches brute force on the adversarial rows") {
+    // the ±Infinity sentinels, the few-ulp spread, the near-max-double
+    // range and NaN rows, one group each, under mixed integer weights
+    val clean = Seq("inf" -> infiniteRows, "ulp" -> fewUlpRows, "max" -> nearMaxRows,
+      "nan" -> nanFreeRows).flatMap { case (g, rows) =>
+      rows.zipWithIndex.map { case ((_, v), i) => (g, v, (i * 7 + 3) % 5 + 1) }
+    }
+    val df = (clean ++ Seq(("nan", Double.NaN, 4), ("nan", Double.NaN, 1)))
+      .toDF("g", "v", "w")
+    val ps = Seq(0.1, 0.25, 0.5, 0.75, 0.9, 1.0)
+    for (cap <- Seq(2, 8)) {
+      val got = Quantiles.weightedGrouped(df, "g", "v", "w", ps, residualCap = cap)
+      for ((g, rows) <- clean.groupBy(_._1); p <- ps) {
+        val exp = WeightedQuantilesSpec.brute(rows.map(r => (r._2, BigDecimal(r._3))), p)
+        assert(java.lang.Double.doubleToLongBits(got(g)(p)) ==
+          java.lang.Double.doubleToLongBits(exp), s"cap $cap group $g p=$p: ${got(g)(p)} vs $exp")
+      }
+    }
   }
 }

@@ -49,4 +49,15 @@ class RelationalSpec extends AnyFunSuite {
     }
     df.unpersist()
   }
+
+  test("conversion lag on events with no purchase is one row of 0 and NULL quartiles") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_no_purchase").toFile
+    try {
+      graft.Tables.t(spark, sf, "events").filter(col("event_type") =!= "purchase")
+        .coalesce(1).write.parquet(s"$dir/events.parquet")
+      val rows = Relational.eventsConversionLag(spark, dir.toString).collect()
+      assert(rows.map(_.toSeq) sameElements Array(Seq(0L, null, null, null)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 }
