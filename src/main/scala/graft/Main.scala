@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.clustering.{GKA, KMeans, PSO, Points}
 import graft.sources.CsvNumericSource
@@ -69,9 +70,18 @@ object Main {
   def cleanRun(spark: SparkSession, inPath: String, outDir: String): Unit = {
     val docs = sources.JsonDocsSource.docs(spark, inPath)
     val kept = pipeline.CleanCorpus.cleanOf(docs).select("doc_id")
-    val v = sources.JsonDocsSource.commitJson(docs.join(kept, "doc_id"), outDir)
-    val nOut = sources.JsonDocsSource.readCommitted(spark, outDir).count()
-    println(s"[clean] kept $nOut of ${docs.count()} documents -> $outDir (version $v)")
+    // both counts are metrics of the commit job itself: no second parse
+    // of the input, no re-read of the output. A branch the optimizer
+    // pruned reports no metric; that happens only when a side of the
+    // join is empty, so the output is then 0 rows and only the input
+    // count needs a job of its own.
+    val (in, out) = (Observation(), Observation())
+    val n = count(lit(1)).as("n")
+    val v = sources.JsonDocsSource.commitJson(
+      docs.observe(in, n).join(kept, "doc_id").observe(out, n), outDir)
+    val observed = (o: Observation) => o.get.get("n").map(_.asInstanceOf[Long])
+    val nIn = observed(in).getOrElse(docs.count())
+    println(s"[clean] kept ${observed(out).getOrElse(0L)} of $nIn documents -> $outDir (version $v)")
   }
 
   /** Release-report entry: run the corpus observability heads over a

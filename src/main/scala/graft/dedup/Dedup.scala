@@ -8,8 +8,9 @@ import graft.functions.VectorOps
 /** Deduplication operators for a training-data pipeline, over the
   * `documents` corpus (and `embeddings` for vector near-dup).
   *
-  * Scale rules (SURVEY.md §5): signatures/fingerprints are computed
-  * with codegen'd HOFs — zero shuffle per document; candidate pairs
+  * Scale rules (SURVEY.md §5): signatures/fingerprints are per-row
+  * projections — zero shuffle per document; MinHash signatures come
+  * from one native codegen'd kernel (MinHashSig); candidate pairs
   * come ONLY from LSH band buckets or sign buckets (equi-joins on
   * bucket keys); there is no all-pairs CartesianProduct anywhere.
   */
@@ -31,13 +32,6 @@ object Dedup extends graft.Registry {
     * grams) sit on, so NFC never re-runs inside a HOF lambda. */
   private[graft] def normDocs(docs: DataFrame): DataFrame =
     docs.withColumn("text", graft.text.TextAnalysis.normalizeUnicode(col("text")))
-
-  /** Hash-family member i of word w: md5("i:w") — deterministic and
-    * identical in DuckDB, standing in for the usual (a*x+b) mod p
-    * permutations. Min over the NORMALIZED word set = the MinHash
-    * signature. */
-  private def mhExpr(i: Int): Column =
-    expr(s"array_min(transform(split($NTS, ' '), w -> md5(concat('$i:', w))))").as(s"mh_$i")
 
   val H = 8 // signature length
   val BANDS = 4 // 2 rows per band
@@ -92,8 +86,18 @@ object Dedup extends graft.Registry {
 
   // ---- MinHash + LSH ---------------------------------------------------
 
+  /** Per-doc MinHash signature (doc_id, mh_0..mh_{h-1}). Hash-family
+    * member i of word w is md5("i:w") — deterministic and identical in
+    * DuckDB ([[mhSql]]), standing in for the usual (a*x+b) mod p
+    * permutations; mh_i is its min over the NORMALIZED text's words.
+    * One native kernel ([[graft.functions.MinHashSig]]) computes all h
+    * members in one codegen'd pass. It sits in its own projection: the
+    * kernel is not cheap, so CollapseProject keeps it evaluated once
+    * per row instead of inlining it into each of the h getItem columns. */
   def signatures(docs: DataFrame, h: Int = H): DataFrame =
-    docs.select(col("doc_id") +: (0 until h).map(mhExpr): _*)
+    docs.select(col("doc_id"), graft.functions.GraftFunctions.minhashSig(
+        graft.text.TextAnalysis.normalizeUnicode(col("text")), h).as("__mh"))
+      .select(col("doc_id") +: (0 until h).map(i => col("__mh").getItem(i).as(s"mh_$i")): _*)
 
   def qMinhash(spark: SparkSession, dir: String): DataFrame =
     stagedSignatures(spark, dir)
@@ -1022,10 +1026,13 @@ object Dedup extends graft.Registry {
   private[graft] val sigSql =
     s"sig AS (SELECT doc_id, ${(0 until H).map(mhSql).mkString(", ")} FROM documents)"
 
-  private[graft] val bandsSql =
-    "bands AS (" + (0 until BANDS).map(b =>
-      s"SELECT doc_id, $b AS band, md5(concat(mh_${2 * b}, mh_${2 * b + 1})) AS bh FROM sig")
-      .mkString(" UNION ALL ") + ")"
+  /** Band rows (doc_id, band, bh) over a signature relation `src`. */
+  private[dedup] def bandsSqlFrom(src: String): String =
+    (0 until BANDS).map(b =>
+      s"SELECT doc_id, $b AS band, md5(concat(mh_${2 * b}, mh_${2 * b + 1})) AS bh FROM $src")
+      .mkString(" UNION ALL ")
+
+  private[graft] val bandsSql = s"bands AS (${bandsSqlFrom("sig")})"
 
   private[graft] val candsSql =
     """mins AS (SELECT band, bh, min(doc_id) AS ia FROM bands GROUP BY band, bh),

@@ -97,12 +97,6 @@ object Incremental extends graft.Registry {
     "dedup_incremental" -> (qIncremental _),
     "dedup_incremental_neardup" -> (qIncrementalNearDup _))
 
-  /** Band rows (doc_id, band, bh) over a signature CTE `src`. */
-  private def bandsSqlFrom(src: String): String =
-    (0 until Dedup.BANDS).map(b =>
-      s"SELECT doc_id, $b AS band, md5(concat(mh_${2 * b}, mh_${2 * b + 1})) AS bh FROM $src")
-      .mkString(" UNION ALL ")
-
   private val sigCols = (0 until Dedup.H).map(Dedup.mhSql).mkString(", ")
 
   val oracleSql: Map[String, String] = Map(
@@ -112,8 +106,8 @@ object Incremental extends graft.Registry {
          |  FROM documents),
          |sigb AS (SELECT doc_id, $sigCols FROM (SELECT doc_id, text FROM d WHERE b) documents),
          |sigs AS (SELECT doc_id, $sigCols FROM (SELECT doc_id, text FROM d WHERE NOT b) documents),
-         |bb AS (${bandsSqlFrom("sigb")}),
-         |bs AS (${bandsSqlFrom("sigs")}),
+         |bb AS (${Dedup.bandsSqlFrom("sigb")}),
+         |bs AS (${Dedup.bandsSqlFrom("sigs")}),
          |idx AS (SELECT band, bh, min(doc_id) AS corpus_id FROM bs GROUP BY band, bh),
          |cand AS (SELECT DISTINCT bb.doc_id AS batch_id, idx.corpus_id
          |  FROM bb JOIN idx ON bb.band = idx.band AND bb.bh = idx.bh),

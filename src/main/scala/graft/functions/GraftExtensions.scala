@@ -77,6 +77,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 1, "normalize_text(s) takes exactly 1 argument")
         NormalizeText(children.head)
       }))
+    ext.injectFunction((
+      new FunctionIdentifier("minhash_sig"),
+      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2 && children(1).foldable,
+          "minhash_sig(s, h) takes a string and a constant member count")
+        MinHashSig(children.head, children(1).eval().asInstanceOf[Int])
+      }))
     // declarative row_number-top-k rewrites to the bounded-heap
     // operator; the strategy makes the node plannable in this session
     ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
@@ -132,6 +140,11 @@ object GraftFunctions {
 
   def normalizeText(s: Column): Column =
     GraftBridge.column(NormalizeText(GraftBridge.expression(s)))
+
+  /** The h-member MinHash signature (array<string> of md5 hex minima)
+    * of an already-normalized text column. */
+  def minhashSig(s: Column, h: Int): Column =
+    GraftBridge.column(MinHashSig(GraftBridge.expression(s), h))
 
   /** Content-defined chunks of a text column (window w, divisor div). */
   def cdcChunks(s: Column, w: Int, div: Int): Column =

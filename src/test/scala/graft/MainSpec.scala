@@ -143,13 +143,15 @@ class MainSpec extends AnyFunSuite {
       graft.Tables.t(spark, "/root/testdata/sf0.001", "documents")
         .select("doc_id", "text"),
       s"$tmp/in")
-    Main.cleanRun(spark, s"$tmp/in", s"$tmp/out")
+    val line = cleanLine(s"$tmp/in", s"$tmp/out")
     val out = graft.sources.JsonDocsSource.readCommitted(spark, s"$tmp/out")
     assert(out.columns.sorted.toSeq == Seq("doc_id", "text"))
     val nOut = out.count()
     val expected = graft.pipeline.CleanCorpus
       .qClean(spark, "/root/testdata/sf0.001").count()
     assert(nOut == expected, "CLI output matches the registered pipeline")
+    val nIn = graft.Tables.t(spark, "/root/testdata/sf0.001", "documents").count()
+    assert(line.startsWith(s"[clean] kept $nOut of $nIn documents -> $tmp/out (version "), line)
     assert(out.select("doc_id").distinct().count() == nOut)
   }
 
@@ -186,6 +188,29 @@ class MainSpec extends AnyFunSuite {
     val recleaned = graft.sources.JsonDocsSource.readCommitted(spark, s"$tmp/out")
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(recleaned == v0, "idempotent re-clean commits the same corpus")
+  }
+
+  /** The `[clean]` line a cleanRun prints. */
+  private def cleanLine(in: String, out: String): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(buf)(Main.cleanRun(spark, in, out))
+    buf.toString("UTF-8").linesIterator.filter(_.startsWith("[clean]")).toSeq.last
+  }
+
+  test("clean CLI counts a corrupt-only corpus as kept 0 of 0") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_corrupt").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$tmp/in.jsonl"),
+      "{not json\n{\"doc_id\": \"x\", \"text\": \"typed wrong\"}\n")
+    assert(cleanLine(s"$tmp/in.jsonl", s"$tmp/out").startsWith("[clean] kept 0 of 0 documents"))
+  }
+
+  test("clean CLI counts a corpus that fails the gate as kept 0 of N") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_gated").toString
+    // every doc is shorter than the 20-word gate
+    graft.sources.JsonDocsSource.write(
+      (1L to 5L).map(i => (i, s"short doc $i")).toDF("doc_id", "text"), s"$tmp/in")
+    assert(cleanLine(s"$tmp/in", s"$tmp/out").startsWith("[clean] kept 0 of 5 documents"))
   }
 
   test("unknown algorithm fails loudly") {

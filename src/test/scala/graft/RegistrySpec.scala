@@ -77,6 +77,13 @@ class RegistrySpec extends AnyFunSuite {
       s"files spelling the binade bucket: ${files.mkString(", ")}")
   }
 
+  test("MinHash signatures come only from the native kernel: no Spark-SQL HOF idiom") {
+    // the DuckDB mirror (Dedup.mhSql) spells list_transform(string_split(…;
+    // the kernel's own doc names the formulation it replaced
+    val hofs = strays("""(?<![a-z_])transform\(split\([^\n]*->\s*md5\(""".r, "MinHashSig.scala")
+    assert(hofs.isEmpty, s"a Spark-SQL MinHash HOF outside MinHashSig: ${hofs.mkString(", ")}")
+  }
+
   test("each oracle trains the IVF coarse quantizer at most once") {
     val twice = SparkEntry.oracleSql.collect {
       case (k, sql) if "acell AS MATERIALIZED".r.findAllMatchIn(sql).size > 1 => k
