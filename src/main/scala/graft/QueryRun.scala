@@ -2,9 +2,9 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd, StageInfo}
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The jobs and stages one piece of driver code ran; see [[QueryRun.record]]. */
 final case class QueryRun(jobs: Seq[QueryRun.Job], stages: Seq[QueryRun.Stage]) {
@@ -17,8 +17,8 @@ final case class QueryRun(jobs: Seq[QueryRun.Job], stages: Seq[QueryRun.Stage]) 
 object QueryRun {
 
   /** One job. `end` is 0 if the job had not ended; `callSite` is the
-    * innermost graft frame outside the tools and this recorder, else the
-    * name of the job's last stage. */
+    * innermost graft frame outside the tools and this recorder (else the
+    * short call site) of the SQL action the job ran for, else of its last stage. */
   final case class Job(id: Int, group: Option[String], start: Long, end: Long,
                        stageIds: Seq[Int], callSite: String) {
     def durationMs: Long = if (end > 0) end - start else -1L
@@ -46,10 +46,9 @@ object QueryRun {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  private def callSite(infos: Seq[StageInfo]): String = infos.lastOption.fold("") { s =>
-    s.details.linesIterator.find(l => l.contains("graft.") &&
-      !l.contains("graft.tools.") && !l.contains("graft.QueryRun")).getOrElse(s.name)
-  }
+  private def graftFrame(details: String): Option[String] =
+    details.linesIterator.find(l => l.contains("graft.") &&
+      !l.contains("graft.tools.") && !l.contains("graft.QueryRun"))
 
   private final class StageAcc {
     var info: Option[StageInfo] = None
@@ -59,12 +58,22 @@ object QueryRun {
   private final class Recorder extends SparkListener {
     private val jobs = mutable.LinkedHashMap.empty[Int, Job]
     private val stages = mutable.LinkedHashMap.empty[Int, StageAcc]
+    // by SQL execution id: an action's stages may run on a pool thread
+    private val actions = mutable.Map.empty[Long, String]
 
     private def stage(id: Int): StageAcc = stages.getOrElseUpdate(id, new StageAcc)
 
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart =>
+        synchronized(actions(x.executionId) = graftFrame(x.details).getOrElse(x.description))
+      case _ =>
+    }
+
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
-      val group = Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      jobs(j.jobId) = Job(j.jobId, group, j.time, 0L, j.stageIds, callSite(j.stageInfos))
+      val prop = (k: String) => Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+      val site = prop("spark.sql.execution.id").flatMap(id => actions.get(id.toLong))
+        .getOrElse(j.stageInfos.lastOption.fold("")(s => graftFrame(s.details).getOrElse(s.name)))
+      jobs(j.jobId) = Job(j.jobId, prop("spark.jobGroup.id"), j.time, 0L, j.stageIds, site)
     }
 
     override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {

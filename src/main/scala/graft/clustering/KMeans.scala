@@ -681,8 +681,8 @@ object KMeans extends graft.Registry {
     * fresh md5 per round. d2 is maintained INCREMENTALLY — each round
     * folds only the distances to the round's NEW candidates into the
     * materialized running min (the standard k-means|| optimization),
-    * with per-round localCheckpoint lineage truncation exactly like
-    * the label-propagation loop, so every pass is a short scan of
+    * with per-round localCheckpoint lineage truncation (the rationale
+    * is [[graft.Fixpoint]]'s), so every pass is a short scan of
     * (pid, dims, hash, d2) rather than a re-derivation against the
     * whole candidate history. */
   def qScalableInit(spark: SparkSession, dir: String): DataFrame = {

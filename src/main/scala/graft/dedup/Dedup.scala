@@ -469,11 +469,11 @@ object Dedup extends graft.Registry {
   /** Label-propagation connected components over an (ia, ib) pair
     * frame: each node takes the min label among itself and its
     * neighbors for `sweeps` FIXED sweeps (one join + one min-groupBy
-    * per sweep, no driver-side graph). Fully lazy and unrollable as
-    * oracle SQL, but only correct on graphs whose diameter the sweep
-    * count covers — the registered operators use
-    * [[labelPropagateConverged]]; this shape is kept as the oracle
-    * mirror and for the spec's fixed-vs-converged comparison. */
+    * per sweep, no driver-side graph). Fully lazy, but only correct on
+    * graphs whose diameter the sweep count covers — the registered
+    * operators use [[labelPropagateConverged]]; this shape is the
+    * spec's fixed-sweep reference, which the converged operator must
+    * agree with on graphs of small diameter and beat on long chains. */
   private[graft] def labelPropagate(e: DataFrame, sweeps: Int): DataFrame = {
     val edges = e.select(col("ia").as("s"), col("ib").as("d"))
       .union(e.select(col("ib").as("s"), col("ia").as("d")))
@@ -494,23 +494,12 @@ object Dedup extends graft.Registry {
     * bucket keepers produce. Each sweep is a neighbor-min step plus a
     * path-halving step (lbl ← lbl(lbl), one extra co-partitioned
     * self-join), so a chain component of diameter d converges in
-    * O(log d) sweeps rather than d.
-    *
-    * Lineage discipline is the whole game for an iterative DataFrame
-    * loop: a sweep's plan references the previous sweep's frame twice
-    * (the halving self-join), so an un-truncated plan DOUBLES per
-    * sweep and Catalyst re-analyzes the exponential tree on every
-    * action even when all the data is cached (measured 11 s for a
-    * 13k-edge sweep before truncation). The edge frame and each
-    * sweep's labels are therefore materialized with localCheckpoint —
-    * executor-block storage, the local-mode stand-in for the reliable
-    * DFS checkpoint an iterative graph job uses on a cluster — which
-    * cuts every sweep's plan to a constant-size LogicalRDD scan. The
-    * per-node previous label rides along in the sweep frame (tagged
-    * min-agg), so the changed-count is a filter over the checkpointed
-    * result, not a third join. Checkpoint blocks are |nodes| label
-    * rows, freed when the frames are GC'd; nothing registers in the
-    * cache manager. A non-converged exit throws rather than silently
+    * O(log d) sweeps rather than d. The sweeps run in [[graft.Fixpoint]]
+    * (see there for the lineage truncation); the edge frame, read by
+    * every sweep, is materialized once here. The per-node previous
+    * label rides along in the sweep frame (tagged min-agg), so the
+    * changed-count is an aggregate over the checkpointed result, not a
+    * third join. A non-converged exit throws rather than silently
     * mislabeling. */
   private[graft] def labelPropagateConverged(e: DataFrame,
                                              maxSweeps: Int = 50): DataFrame = {
@@ -518,13 +507,11 @@ object Dedup extends graft.Registry {
       .union(e.select(col("ib").as("s"), col("ia").as("d")))
       .localCheckpoint(eager = true)
     // Both directions are present, so `s` alone covers every node.
-    val nodes = edges.select(col("s").as("doc_id")).distinct()
-    var labels = nodes.withColumn("lbl", col("doc_id"))
-      .localCheckpoint(eager = true)
-    var sweep = 0
-    var changed = 1L
-    while (changed > 0 && sweep < maxSweeps) {
-      sweep += 1
+    val init = edges.select(col("s").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("lbl"), col("doc_id").as("prev"))
+    // Labels only decrease, so the fixed point is the sweep that lowers none.
+    graft.Fixpoint.converge("label propagation", init, maxSweeps,
+        count_if(col("lbl") < col("prev")))((_, changed) => changed == 0) { labels =>
       // Neighbor-min with the node's own previous label tagged along:
       // the self branch (is_self = 1) appears exactly once per node,
       // so max(self lbl) recovers prev without a join against labels.
@@ -536,24 +523,12 @@ object Dedup extends graft.Registry {
              max(when(col("is_self") === 1, col("lbl"))).as("prev"))
       // Path halving: every label value is itself a node id (labels
       // start as ids and only propagate), so the lookup join is total.
-      val next = stepped.as("a")
+      stepped.as("a")
         .join(stepped.as("b"), col("a.lbl") === col("b.doc_id"))
         .select(col("a.doc_id").as("doc_id"), col("b.lbl").as("lbl"),
                 col("a.prev").as("prev"))
-        .localCheckpoint(eager = true)
-      // Labels only decrease; the fixed point is one tiny filter-count
-      // over the just-checkpointed sweep result.
-      changed = next.filter(col("lbl") < col("prev")).count()
-      labels = next.select("doc_id", "lbl")
-    }
-    require(changed == 0,
-      s"label propagation did not converge in $maxSweeps sweeps")
-    labels.select(col("doc_id"), col("lbl").as("cluster_id"))
+    }.select(col("doc_id"), col("lbl").as("cluster_id"))
   }
-
-  def dedupClusters(spark: SparkSession, dir: String,
-                    maxSweeps: Int = 50): DataFrame =
-    labelPropagateConverged(candidates(spark, dir), maxSweeps)
 
   // ---- staged materializations (once per JVM+dir) ----------------------
 
@@ -634,14 +609,9 @@ object Dedup extends graft.Registry {
     * linear in corpus size; iterated to convergence so components of
     * any diameter label correctly (the unrolled oracle stays valid:
     * the testdata graph converges within its sweep count). */
-  def embedClusters(spark: SparkSession, dir: String,
-                    maxSweeps: Int = 50): DataFrame =
-    labelPropagateConverged(
-      embedPairs(spark, dir).select(col("ia"), col("ib")), maxSweeps)
+  def embedClusters(spark: SparkSession, dir: String): DataFrame =
+    labelPropagateConverged(embedPairs(spark, dir).select(col("ia"), col("ib")))
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
-
-  def qEmbedClusters(spark: SparkSession, dir: String): DataFrame =
-    embedClusters(spark, dir)
 
   def qDedupClusters(spark: SparkSession, dir: String): DataFrame =
     stagedClusters(spark, dir)
@@ -1189,7 +1159,7 @@ object Dedup extends graft.Registry {
     "dedup_embed" -> (qEmbed _),
     "dedup_embed_threshold_curve" -> (qEmbedThresholdCurve _),
     "dedup_decontaminate_embed" -> ((s: SparkSession, d: String) => qDecontaminateEmbed(s, d)),
-    "dedup_embed_clusters" -> (qEmbedClusters _))
+    "dedup_embed_clusters" -> (embedClusters _))
 
   val oracleSql: Map[String, String] = Map(
     "dedup_sorted_neighborhood" ->

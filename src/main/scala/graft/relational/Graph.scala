@@ -136,11 +136,11 @@ object Graph extends graft.Registry {
     * attached by one chance collision. Distributed shape per peel
     * round: one semi-join of edges against surviving nodes + one
     * partial-aggregated degree count — no driver-side graph; the loop
-    * runs to CONVERGENCE with a localCheckpoint per round (the label
-    * propagation discipline), and the changed-count is a tiny count
-    * over the just-checkpointed frame. Output: one row per k with
-    * core node and edge counts. */
-  def qKCore(spark: SparkSession, dir: String, ks: Seq[Int] = Seq(2, 3)): DataFrame =
+    * runs to CONVERGENCE in [[graft.Fixpoint]], and the fixed point is
+    * the round whose surviving-edge count (observed by that round's
+    * checkpoint) equals the previous round's. Output: one row per k
+    * with core node and edge counts. */
+  def qKCore(spark: SparkSession, dir: String, ks: Seq[Int] = Seq(2, 3)): DataFrame = {
     // maxRounds = the oracle's 8-round unroll PLUS the confirming
     // no-op round the convergence check spends (the loop counts it,
     // so 8 would wrongly reject a corpus whose peel depth is exactly
@@ -149,46 +149,24 @@ object Graph extends graft.Registry {
     // exactly, and a degree cascade DEEPER than the unroll (a long
     // pendant chain) fails loudly here rather than letting the
     // operator silently out-converge its own gate (round-8 advice)
-    {
-      // one shared checkpoint of the edge list: each k's peel loop
-      // re-checkpoints from it (a narrow copy of materialized
-      // partitions, not a re-derivation), so the staged-candidate
-      // parquet is scanned once for the whole census instead of once
-      // per k
-      val e0 = stagedCandidates(spark, dir).select("ia", "ib")
-        .localCheckpoint(eager = true)
-      ks.map(k => kCoreOf(e0, k, maxRounds = 9))
-        .reduce(_ unionByName _)
-    }
+    val e = stagedCandidates(spark, dir) // one staged read (a schema job) for every k
+    ks.map(k => kCoreOf(e, k, maxRounds = 9)).reduce(_ unionByName _)
+  }
 
   /** The k-core census over any canonical (ia < ib, distinct) edge
     * frame. */
   def kCoreOf(e: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
-    val spark = e.sparkSession
-    var edges = e.select("ia", "ib").localCheckpoint(true)
-    // edge count carried across rounds: the previous shape re-counted
-    // the OLD frame every round (`next.count() != edges.count()` — two
-    // count jobs per peel for one comparison)
-    var edgeCount = edges.count()
-    var rounds = 0
-    var changed = true
-    while (changed && rounds < maxRounds) {
-      rounds += 1
-      val deg = edges
+    val edges = graft.Fixpoint.converge(s"$k-core peeling", e.select("ia", "ib"), maxRounds,
+        count(lit(1)))(_ == _) { live =>
+      val keep = live
         .select(explode(array(col("ia"), col("ib"))).as("s"))
         .groupBy("s").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select(col("s"))
-      val next = edges
+        .filter(col("deg") >= k).select(col("s"))
+      live
         .join(keep.select(col("s").as("ia")), "ia")
         .join(keep.select(col("s").as("ib")), "ib")
         .select("ia", "ib")
-        .localCheckpoint(true)
-      val nextCount = next.count()
-      changed = nextCount != edgeCount
-      edges = next
-      edgeCount = nextCount
     }
-    require(!changed, s"$k-core peeling did not converge in $maxRounds rounds")
     val nodes = edges.select(explode(array(col("ia"), col("ib"))).as("s")).distinct()
     edges.agg(count(lit(1)).as("n_core_edges"))
       .crossJoin(broadcast(nodes.agg(count(lit(1)).as("n_core_nodes"))))
@@ -218,8 +196,8 @@ object Graph extends graft.Registry {
   /** The mutual hub-capped undirected edge frame + its degree table —
     * shared by the common-neighbor and resource-allocation link
     * predictors (see [[commonNeighborsOf]]'s scaladoc for why the cap
-    * must be MUTUAL). Materialized once (localCheckpoint, the
-    * label-propagation discipline): it feeds both wedge arms AND the
+    * must be MUTUAL). Materialized once (localCheckpoint; see
+    * [[graft.Fixpoint]] on lineage): it feeds both wedge arms AND the
     * degree frame, and each self-join branch otherwise re-derives the
     * whole explode+TopKPerKey chain — the plan showed the exec
     * running 4x and the edge explode 6x per query. */
@@ -390,8 +368,8 @@ object Graph extends graft.Registry {
     * frontier against the partitioned edge list + an anti-join against
     * the visited set — frontier and visited stay seed-bounded, the
     * corpus-sized edge list is never re-derived (staged candidates),
-    * and the loop localCheckpoints per round (the label-propagation
-    * discipline) so the plan never compounds. Counts INT-EXACT. */
+    * and the rounds run in [[graft.Fixpoint]] over one state frame
+    * (visited; its level k-1 is round k's frontier). Counts INT-EXACT. */
   def qBfsDistances(spark: SparkSession, dir: String, depth: Int = 4): DataFrame =
     bfsDistancesOf(undirected(spark, dir), depth)
 
@@ -399,20 +377,14 @@ object Graph extends graft.Registry {
   private[relational] def bfsDistancesOf(und: DataFrame, depth: Int): DataFrame = {
     val seeds = und.select("s").distinct().orderBy("s").limit(8)
       .select(col("s").as("seed"), col("s").as("node"), lit(0).as("dist"))
-      .localCheckpoint(true)
-    var visited = seeds
-    var frontier = seeds
-    for (k <- 1 to depth) {
-      val nxt = frontier
+    graft.Fixpoint.sweeps(seeds, depth) { (visited, k) =>
+      val frontier = visited.filter(col("dist") === k - 1)
+      visited.unionByName(frontier
         .join(und, frontier("node") === und("s"))
         .select(col("seed"), col("d").as("node")).distinct()
         .join(visited, Seq("seed", "node"), "left_anti")
-        .withColumn("dist", lit(k))
-        .localCheckpoint(true)
-      visited = visited.unionByName(nxt).localCheckpoint(true)
-      frontier = nxt
-    }
-    visited.groupBy("seed", "dist").agg(count(lit(1)).as("n_nodes"))
+        .withColumn("dist", lit(k)))
+    }.groupBy("seed", "dist").agg(count(lit(1)).as("n_nodes"))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007), 3 sweeps:
@@ -427,19 +399,18 @@ object Graph extends graft.Registry {
     * Scale shape per sweep: one edge-label join shuffling on node id +
     * one bounded-fanout groupBy — PageRank's exact envelope; the mode
     * is a per-node argmax via row_number over the (node, label) vote
-    * counts, partition size bounded by degree. Lineage cut per sweep
-    * with localCheckpoint (the kcore discipline). */
+    * counts, partition size bounded by degree. The sweeps run in
+    * [[graft.Fixpoint]] with convergence off. */
   def qLabelPropagation(spark: SparkSession, dir: String, sweeps: Int = 3): DataFrame =
     labelPropagationOf(undirected(spark, dir), sweeps)
 
-  /** Per-node converged labels of [[qLabelPropagation]]'s synchronous
+  /** Per-node labels after [[qLabelPropagation]]'s synchronous
     * sweeps — exposed so community-QUALITY consumers (LP modularity)
     * share the exact partition the census reports. */
   private[relational] def lpLabelsOf(und: DataFrame, sweeps: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nodes = und.select(col("s").as("node")).distinct().localCheckpoint(true)
-    var lbl = nodes.withColumn("lbl", col("node"))
-    for (_ <- 1 to sweeps) {
+    val init = und.select(col("s").as("node")).distinct().withColumn("lbl", col("node"))
+    graft.Fixpoint.sweeps(init, sweeps) { (lbl, _) =>
       val votes = und
         .join(lbl, und("d") === lbl("node"))
         .select(und("s").as("v"), col("lbl"))
@@ -449,11 +420,10 @@ object Graph extends graft.Registry {
           Window.partitionBy("v").orderBy(col("n").desc, col("lbl").asc)))
         .filter(col("rk") === 1)
         .select(col("v"), col("lbl").as("new_lbl"))
-      lbl = nodes.join(mode, col("node") === col("v"), "left")
+      // the state holds one row per node, so it is also the node list
+      lbl.select("node").join(mode, col("node") === col("v"), "left")
         .select(col("node"), coalesce(col("new_lbl"), col("node")).as("lbl"))
-        .localCheckpoint(true)
     }
-    lbl
   }
 
   /** [[qLabelPropagation]] over any (s, d) undirected edge frame. */

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and a SURVEY §2 row for every key (the regex tools/roundclose.sh
   * uses). Likewise a per-dataset cache hand-rolled beside graft.Memo,
   * a Lloyd step spelled beside KMeans.train / ClusterSql, an oracle
-  * that trains the IVF coarse quantizer twice, and a second exact-
-  * quantile engine beside graft.relational.Quantiles. */
+  * that trains the IVF coarse quantizer twice, a second exact-
+  * quantile engine beside graft.relational.Quantiles, and a sweep loop
+  * checkpointing beside graft.Fixpoint. */
 class RegistrySpec extends AnyFunSuite {
 
   private def owners(part: Registry => Iterable[String]): Map[String, Seq[String]] =
@@ -89,6 +90,51 @@ class RegistrySpec extends AnyFunSuite {
       case (k, sql) if "acell AS MATERIALIZED".r.findAllMatchIn(sql).size > 1 => k
     }
     assert(twice.isEmpty, s"oracles training the coarse quantizer twice: ${twice.toSeq.sorted.mkString(", ")}")
+  }
+
+  /** Eager materializations per src/main file: the sweep loop lives in
+    * graft.Fixpoint, and every other call site is a one-shot frame with
+    * its reason. A count must equal its allowance, so a removed site
+    * lowers the allowance rather than leaving room for a new loop. */
+  private val checkpointAllowance = Map(
+    "Fixpoint.scala" -> 1, // the sweep loop: one checkpoint per sweep
+    "Cdc.scala" -> 1, // chunks before the explode, or InferFiltersFromGenerate clones the chunker
+    "Graph.scala" -> 1, // cappedMutual: both wedge arms and the degree frame read it
+    "Dedup.scala" -> 1, // the label-propagation edge frame every sweep reads
+    "KMeans.scala" -> 2, // qScalableInit's rounds: phi is order-dependent, not yet an exact measure
+    "Bpe.scala" -> 2) // train's rounds: each is a driver argmax, not an aggregate measure
+  private val checkpointCall = """\.localCheckpoint\(""".r
+
+  test("localCheckpoint call sites match their allowance: sweep loops live in Fixpoint") {
+    val counts = strays(checkpointCall, owner = "")
+      .map(m => java.nio.file.Paths.get(m.takeWhile(_ != ':')).getFileName.toString)
+      .groupBy(identity).map { case (f, ms) => f -> ms.size }
+    assert(counts == checkpointAllowance,
+      s"localCheckpoint call sites per file: ${counts.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("the checkpoint census sees a hand-rolled sweep loop") {
+    // the label-propagation and k-core loop shapes Fixpoint replaced
+    val lp = """val edges = e.select(col("ia").as("s"), col("ib").as("d"))
+      |  .union(e.select(col("ib").as("s"), col("ia").as("d")))
+      |  .localCheckpoint(eager = true)
+      |var labels = nodes.withColumn("lbl", col("doc_id"))
+      |  .localCheckpoint(eager = true)
+      |while (changed > 0 && sweep < maxSweeps) {
+      |  val next = stepped.as("a")
+      |    .join(stepped.as("b"), col("a.lbl") === col("b.doc_id"))
+      |    .localCheckpoint(eager = true)
+      |  changed = next.filter(col("lbl") < col("prev")).count()
+      |}""".stripMargin
+    val kcore = """var edges = e.select("ia", "ib").localCheckpoint(true)
+      |while (changed && rounds < maxRounds) {
+      |  val next = edges.join(keep.select(col("s").as("ia")), "ia")
+      |    .select("ia", "ib")
+      |    .localCheckpoint(true)
+      |  val nextCount = next.count()
+      |}""".stripMargin
+    assert(checkpointCall.findAllMatchIn(lp).size == 3)
+    assert(checkpointCall.findAllMatchIn(kcore).size == 2)
   }
 
   test("select trims names and rejects unknown ones") {

@@ -146,7 +146,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("dedup clusters reach a fixpoint and label by their minimum member") {
-    val conv = Dedup.dedupClusters(spark, sf).collect()
+    val conv = Dedup.qDedupClusters(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val fixed = Dedup.labelPropagate(Dedup.candidates(spark, sf), 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -187,7 +187,7 @@ class DedupSpec extends AnyFunSuite {
       .selectExpr("doc_id",
         "round(cast(size(array_distinct(split(text, ' '))) as double) / size(split(text, ' ')), 6) as ttr")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val clusters = Dedup.dedupClusters(spark, sf).collect()
+    val clusters = Dedup.qDedupClusters(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     val members = clusters.groupBy(_._2).map { case (c, ds) => c -> ds.map(_._1).toSet }
     val keepers = Dedup.qClusterKeepers(spark, sf).collect()
