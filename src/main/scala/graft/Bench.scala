@@ -1,21 +1,116 @@
 package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The registry's one per-query measuring loop. Each query is timed
+  * as the min over reps of building its DataFrame and `count()`ing it
+  * (the headline `queries` seconds), and its `ledger` row says where a
+  * rep's time went: see [[Bench.measure]]. */
 object Bench {
+
+  /** One query's measurement: `sec` is the min-of-reps build + count
+    * wall, `bytes` the last rep's run (shuffle/spill bytes), `staged`
+    * whether the first rep paid a one-time `Memo` build, `ledger` the
+    * per-query layer fields, `error` the first failure of any rep. */
+  final case class Measured(sec: Double, bytes: QueryRun, staged: Boolean,
+                            ledger: Seq[(String, Any)], error: Option[Throwable])
+
+  /** One rep: the built DataFrame (or the build's failure), the build's
+    * and the count's wall and runs, and the codegen compiles of both. */
+  private final case class Rep(df: Either[Throwable, DataFrame], buildS: Double,
+                               build: QueryRun, countS: Double, count: QueryRun,
+                               compiles: Long, error: Option[Throwable]) {
+    def wall: Double = buildS + countS
+    def run: QueryRun = QueryRun(build.jobs ++ count.jobs, build.stages ++ count.stages)
+  }
+
+  /** `body`'s outcome and wall seconds. Every throwable is caught: a
+    * crashing query must be visible as an error, not end the sweep. */
+  private def timed[T](body: => T): (Either[Throwable, T], Double) = {
+    val t0 = System.nanoTime()
+    val v = try Right(body) catch { case e: Throwable => Left(e) }
+    (v, (System.nanoTime() - t0) / 1e9)
+  }
+
+  private def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def rep(spark: SparkSession, sfDir: String,
+                  fn: (SparkSession, String) => DataFrame): Rep = {
+    val c0 = compileCount
+    val ((df, buildS), build) = QueryRun.record(spark)(timed(fn(spark, sfDir)))
+    val ((n, countS), count) =
+      QueryRun.record(spark)(timed(df.fold(e => throw e, _.count())))
+    Rep(df, buildS, build, countS, count, compileCount - c0, n.left.toOption)
+  }
+
+  /** Measure one registry query over `reps` steady reps.
+    *
+    * Every derived index and trained state builds through [[Memo]], so
+    * a `Memo.misses` delta across the first rep means that rep paid a
+    * one-time build: it is then excluded from the timing and `reps`
+    * clean reps follow (`staged`). Each rep's build (`fn(spark,
+    * sfDir)`) and action (`count()`) are recorded apart by
+    * [[QueryRun]]. The ledger, from the last rep unless named:
+    *   - `build_s`, `build_jobs`: the DataFrame build's wall and jobs;
+    *   - `jobs`, `stages`, `tasks`, `single_task_stages`: build + count;
+    *   - `job_s`: summed job durations, so `wall_s` − `job_s` is the
+    *     driver gap; `wall_s` is the rep's build + count wall;
+    *   - `compiles`: whole-stage codegen compiles during build + count;
+    *   - `unattributed_jobs`: jobs whose call site has no graft frame;
+    *   - `first_s`: the first rep's wall, any `Memo` build included;
+    *   - `out_s`: min over the timed reps' DataFrames of a full-output
+    *     `noop` write (`count()` lets Catalyst prune every projection
+    *     the output needs), run after the count reps; null if none
+    *     succeeded.
+    * Cached frames are cleared after the query, never between its reps:
+    * a frame left cached would tax every later query's GC. */
+  def measure(spark: SparkSession, sfDir: String, reps: Int, name: String,
+              fn: (SparkSession, String) => DataFrame): Measured = {
+    require(reps >= 1, s"reps must be >= 1, got $reps")
+    val memoBefore = Memo.misses
+    val first = rep(spark, sfDir, fn)
+    val staged = Memo.misses > memoBefore
+    val runs = first +: (1 until (if (staged) reps + 1 else reps)).map(_ => rep(spark, sfDir, fn))
+    val steady = if (staged) runs.tail else runs
+    val error = runs.flatMap(_.error).headOption
+    error.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+    val outs = if (error.isDefined) Nil else steady.flatMap(_.df.toOption).flatMap { df =>
+      val (done, s) = timed(df.write.format("noop").mode("overwrite").save())
+      done.left.foreach(e => System.err.println(s"[bench] $name full-output write failed: ${e.getMessage}"))
+      done.toOption.map(_ => s)
+    }
+    spark.catalog.clearCache()
+    val last = runs.last
+    val run = last.run
+    val ledger = Seq(
+      "build_s" -> last.buildS, "build_jobs" -> last.build.jobs.size,
+      "jobs" -> run.jobs.size, "stages" -> run.stages.size,
+      "tasks" -> run.stages.map(_.tasks).sum,
+      "single_task_stages" -> run.stages.count(_.tasks == 1),
+      "job_s" -> run.jobs.filter(_.end > 0).map(_.durationMs).sum / 1e3,
+      "wall_s" -> last.wall, "compiles" -> last.compiles,
+      "unattributed_jobs" -> run.jobs.count(!_.attributed),
+      "first_s" -> first.wall,
+      "out_s" -> outs.minOption.getOrElse(Double.NaN))
+    Measured(steady.map(_.wall).min, run, staged, ledger, error)
+  }
+
+  private def json(fields: Seq[(String, Any)]): String = fields.map {
+    case (k, d: Double) if d.isNaN => s"\"$k\":null"
+    case (k, v)                    => s"\"$k\":$v"
+  }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session()
-    // Shuffle/spill accounting: wall-clock on a shared host is noisy
-    // (round-7 cost a full forensics pass on one 16.88s outlier that
-    // was pure cache pollution); bytes moved are noise-immune and the
-    // metric that actually predicts 100 TB behavior. Each run is
-    // recorded by QueryRun, which drains the listener bus around it so
-    // attribution windows don't leak.
     Tables.warm(spark, sfDir)
-    val errors = scala.collection.mutable.ListBuffer.empty[String]
-    // two timed repetitions per query, report the MIN: a single-shot
-    // timing is hostage to GC pauses / host noise (observed 10x swings
-    // on identical plans); the min over reps estimates intrinsic cost.
-    // SPARK_GRAFT_REPS raises it for targeted re-measures of noisy
-    // queries (round-13 regression adjudication) without code churn.
+    // min over two reps by default: a single-shot timing is hostage to
+    // GC pauses and host noise (observed 10x swings on identical plans);
+    // SPARK_GRAFT_REPS raises it for targeted re-measures, and =1 is the
+    // single-shot scaling sweep (tools/sf1_sweep.py reads `first_s`)
     val REPS = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(2)
     // iteration aid: SPARK_GRAFT_ONLY=q1,q2 times just those queries
     // (same convention as Verify); unset = the full registry
@@ -24,62 +119,24 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None        => SparkEntry.queries
     }
-    val metrics = scala.collection.mutable.LinkedHashMap.empty[String, QueryRun]
-    val stagedIn = scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
-    val results = selected.map { case (name, fn) =>
-      // Cold/warm attribution (round-9 ask): every derived index and
-      // every trained state builds through graft.Memo, so a Memo.misses
-      // delta across a query's first rep means THAT rep paid a one-time
-      // build — the flag that lets a future 5x rep-1 outlier in a
-      // single-shot artifact be dismissed from the JSON alone
-      // (min-of-reps timings are already steady-state).
-      val memoBefore = Memo.misses
-      def runOnce(): (Double, QueryRun) = QueryRun.record(spark) {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case e: Throwable =>
-          // a crashing query must be VISIBLE, not timed as a fast success
-          if (!errors.contains(name)) errors += name
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-      // Pre-staging (round-14, acting on the staged_rep1 flag): if the
-      // first run built a one-time staged index (detected by a Memo
-      // delta), it was the BUILD run — exclude it from timing and
-      // take the min over REPS clean steady-state reps instead, so a
-      // staged query's artifact row never carries build cost (the
-      // round-13 dedup_prefix_join oscillation attribution).
-      val first = runOnce()
-      val staged = Memo.misses > memoBefore
-      val steadyReps = if (staged) REPS else REPS - 1
-      val runs = first +: (1 to steadyReps).map(_ => runOnce())
-      val times = runs.map(_._1)
-      val timed = if (staged && times.size > 1) times.tail else times
-      // leftover cached frames from a query that errored mid-flight (or
-      // a future query that forgets to release) would tax every LATER
-      // query's GC in the sweep — the recorded cross-query drift pattern
-      // (a query 2-8x slower in the full sweep than solo). Clearing
-      // between queries keeps timings independent; within a query's own
-      // reps nothing is cleared, and the disk-staged index tables are
-      // untouched (they are parquet reads, not cache entries).
-      spark.catalog.clearCache()
-      // the LAST rep's bytes are the steady-state bytes the artifact carries
-      metrics(name) = runs.last._2
-      stagedIn(name) = staged
-      name -> timed.min
+    val measured = selected.map { case (name, fn) =>
+      name -> measure(spark, sfDir, REPS, name, fn)
     }
+    val results = measured.map { case (k, m) => k -> m.sec }
+    val errors = measured.collect { case (k, m) if m.error.isDefined => k }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val ms = metrics.map { case (k, r) =>
+    val ms = measured.map { case (k, m) =>
+      val r = m.bytes
       s"\"$k\":{\"shuffle_read\":${r.shuffleRead},\"shuffle_write\":${r.shuffleWrite}," +
         s"\"spill_disk\":${r.spillDisk},\"spill_mem\":${r.spillMem}," +
-        s"\"staged_rep1\":${stagedIn.getOrElse(k, false)}}"
+        s"\"staged_rep1\":${m.staged}}"
     }.mkString("{", ",", "}")
+    val ledger = measured.map { case (k, m) => s"\"$k\":" + json(m.ledger) }.mkString("{", ",", "}")
     val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"bytes":$ms,"errors":$errs,"reps":$REPS,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"bytes":$ms,"ledger":$ledger,"errors":$errs,"reps":$REPS,"sf":"$sfDir"}"""
     // The full line exceeds harnesses that keep only the tail of stdout
     // (~130 queries ≈ 4 KB), losing most per-query timings. Persist the
     // complete JSON to a file too, so every timing stays auditable.
@@ -87,15 +144,15 @@ object Bench {
     // record — divert it to a scratch file unless explicitly routed
     val defaultOut = if (only.isDefined) "/tmp/BENCH_ONLY.json" else "BENCH_FULL.json"
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), full + "\n")
+    try Files.writeString(Paths.get(outFile), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $outFile: $e") }
     // stdout: a compact line that survives tail-truncation — headline
     // total, errors, the 10 slowest queries, and the full-file pointer.
     val top = results.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
-    val topShuffle = metrics.toSeq.sortBy(r => -(r._2.shuffleRead + r._2.shuffleWrite)).take(5)
-      .map { case (k, r) =>
-        s"\"$k\":\"${(r.shuffleRead + r.shuffleWrite) / 1024}KB\"" }.mkString("{", ",", "}")
+    val topShuffle = measured.toSeq.sortBy(r => -(r._2.bytes.shuffleRead + r._2.bytes.shuffleWrite)).take(5)
+      .map { case (k, m) =>
+        s"\"$k\":\"${(m.bytes.shuffleRead + m.bytes.shuffleWrite) / 1024}KB\"" }.mkString("{", ",", "}")
     val summary =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"slowest":$top,"top_shufflers":$topShuffle,"errors":$errs,"reps":$REPS,"sf":"$sfDir","full":"$outFile"}"""
     // The compact summary must survive ANY harness capture policy:
@@ -103,10 +160,11 @@ object Bench {
     // suppresses sbt's own epilogue + [info] prefix for forked runs),
     // bounded-tail parse (printed both before and after the full dump
     // so a ~2KB tail window always contains one complete line), and
-    // file pickup (BENCH_SUMMARY.json beside BENCH_FULL.json).
+    // file pickup (BENCH_SUMMARY.json beside the full JSON).
     val summaryFile =
-      if (only.isDefined) "/tmp/BENCH_SUMMARY_ONLY.json" else "BENCH_SUMMARY.json"
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(summaryFile), summary + "\n")
+      if (only.isDefined) Paths.get("/tmp/BENCH_SUMMARY_ONLY.json")
+      else Paths.get(outFile).resolveSibling("BENCH_SUMMARY.json")
+    try Files.writeString(summaryFile, summary + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $summaryFile: $e") }
     println(summary)
     println(full)

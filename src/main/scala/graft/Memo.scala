@@ -64,15 +64,18 @@ object Memo {
 
   /** The staged frame `name` derived from dataset `dir`: built and
     * written once per (JVM, dir, dir-fingerprint), read as parquet on
-    * every call. */
+    * every call. The written schema is read back once, at build time,
+    * so a later read runs no schema-inference job. */
   def frame(spark: SparkSession, dir: String, name: String)
-           (build: => DataFrame): DataFrame =
-    spark.read.parquet(value(dir, name) {
+           (build: => DataFrame): DataFrame = {
+    val (path, schema) = value(dir, name) {
       val p = Files.createTempDirectory("graft-staged")
       staged.add(p)
       build.write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
+      (p.toString, spark.read.parquet(p.toString).schema)
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Every staged dir this JVM created, removed by one shutdown hook
     * (`deleteOnExit` cannot remove a non-empty parquet dir). */

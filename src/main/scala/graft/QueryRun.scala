@@ -17,11 +17,14 @@ final case class QueryRun(jobs: Seq[QueryRun.Job], stages: Seq[QueryRun.Stage]) 
 object QueryRun {
 
   /** One job. `end` is 0 if the job had not ended; `callSite` is the
-    * innermost graft frame outside the tools and this recorder (else the
-    * short call site) of the SQL action the job ran for, else of its last stage. */
+    * innermost graft frame outside this recorder (else the short call
+    * site) of the SQL action the job ran for, else of its last stage,
+    * else of the action that created its newest RDD; `attributed` says
+    * it is a graft frame. */
   final case class Job(id: Int, group: Option[String], start: Long, end: Long,
                        stageIds: Seq[Int], callSite: String) {
     def durationMs: Long = if (end > 0) end - start else -1L
+    def attributed: Boolean = isGraftFrame(callSite)
   }
 
   /** One stage, in submission order. `durationMs` runs from submission
@@ -46,9 +49,11 @@ object QueryRun {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  private def isGraftFrame(l: String): Boolean =
+    l.contains("graft.") && !l.contains("graft.QueryRun")
+
   private def graftFrame(details: String): Option[String] =
-    details.linesIterator.find(l => l.contains("graft.") &&
-      !l.contains("graft.tools.") && !l.contains("graft.QueryRun"))
+    details.linesIterator.find(isGraftFrame)
 
   private final class StageAcc {
     var info: Option[StageInfo] = None
@@ -60,19 +65,29 @@ object QueryRun {
     private val stages = mutable.LinkedHashMap.empty[Int, StageAcc]
     // by SQL execution id: an action's stages may run on a pool thread
     private val actions = mutable.Map.empty[Long, String]
+    // by an action's short call site, which is also the creation site of
+    // the RDDs its plan made: a job over such an RDD that runs with no
+    // execution id (MLlib computing a `Dataset.rdd` fills a cached table
+    // from a pool thread) is that action's
+    private val created = mutable.Map.empty[String, String]
 
     private def stage(id: Int): StageAcc = stages.getOrElseUpdate(id, new StageAcc)
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case x: SparkListenerSQLExecutionStart =>
-        synchronized(actions(x.executionId) = graftFrame(x.details).getOrElse(x.description))
+      case x: SparkListenerSQLExecutionStart => synchronized {
+        val site = graftFrame(x.details)
+        actions(x.executionId) = site.getOrElse(x.description)
+        site.foreach(created(x.description) = _)
+      }
       case _ =>
     }
 
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
       val prop = (k: String) => Option(j.properties).flatMap(p => Option(p.getProperty(k)))
       val site = prop("spark.sql.execution.id").flatMap(id => actions.get(id.toLong))
-        .getOrElse(j.stageInfos.lastOption.fold("")(s => graftFrame(s.details).getOrElse(s.name)))
+        .orElse(j.stageInfos.lastOption.flatMap(s => graftFrame(s.details)))
+        .orElse(j.stageInfos.flatMap(_.rddInfos).sortBy(-_.id).map(_.callSite).collectFirst(created))
+        .getOrElse(j.stageInfos.lastOption.fold("")(_.name))
       jobs(j.jobId) = Job(j.jobId, prop("spark.jobGroup.id"), j.time, 0L, j.stageIds, site)
     }
 

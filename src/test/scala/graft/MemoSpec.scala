@@ -104,6 +104,18 @@ class MemoSpec extends AnyFunSuite {
     assert(Memo.frame(spark, dir, "spec-retry-frame")(spark.range(2).toDF("v")).count() == 2L)
   }
 
+  test("a staged frame is read back with its build-time schema, without a job") {
+    val dir = Files.createTempDirectory("memo-spec").toString
+    def staged() = Memo.frame(spark, dir, "spec-known-schema")(spark.range(5).selectExpr("id * 2 AS v"))
+    val (_, first) = QueryRun.record(spark)(staged())
+    assert(first.jobs.nonEmpty, "the build writes the frame: at least one job")
+    val (second, again) = QueryRun.record(spark)(staged())
+    assert(again.jobs.isEmpty,
+      s"a second read ran jobs: ${again.jobs.map(_.callSite).mkString(", ")}")
+    assert(second.schema == spark.read.parquet(second.inputFiles.head).schema)
+    assert(second.as[Long].collect().sorted.toSeq == Seq(0L, 2L, 4L, 6L, 8L))
+  }
+
   test("misses rises once per (name, fingerprint)") {
     val dir = Files.createTempDirectory("memo-spec")
     rewrite(dir, "t")(Seq(1L).toDF("v"))

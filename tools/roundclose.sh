@@ -169,7 +169,8 @@ missing_sweep = set(status) - swept
 if missing_sweep:
     sys.exit(f"roundclose: {len(missing_sweep)} registered queries have "
              f"no sf1 sweep row: {sorted(missing_sweep)[:10]} — rerun "
-             f"tools/gen_sf1.py + TimeQ ALL + tools/sf1_sweep.py")
+             f"tools/gen_sf1.py + graft.Bench at SPARK_GRAFT_REPS=1 + "
+             f"tools/sf1_sweep.py")
 unnoted = [q for q in sweep.get("outliers_over_bound", [])
            if q not in sweep.get("outlier_notes", {})]
 if unnoted:

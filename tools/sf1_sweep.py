@@ -1,31 +1,40 @@
 #!/usr/bin/env python3
-"""Reduce two full-registry TimeQ sweeps (sf0.1 and bench_sf1) into
-BENCH_SF1.json: per-query seconds at both SFs and the growth factor at
-10x documents. Driver-side tooling only; usage:
+"""Reduce full-registry graft.Bench runs at two scales (sf0.1 and
+bench_sf1) into BENCH_SF1.json: per-query seconds at both SFs and the
+growth factor at 10x documents. Each side's seconds are the ledger's
+`first_s` (one cold build + count per query, any Memo build included),
+the min across that side's runs. Driver-side tooling only; usage:
 
-  TIMEQ_OUT=/tmp/timeq_sf01.txt  sbt "runMain graft.tools.TimeQ /root/testdata/sf0.1 ALL"
-  TIMEQ_OUT=/tmp/timeq_sf1.txt   sbt "runMain graft.tools.TimeQ <repo>/bench_sf1 ALL"
-  python3 tools/sf1_sweep.py /tmp/timeq_sf01.txt /tmp/timeq_sf1.txt
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_REPS=1 \
+    SPARK_GRAFT_BENCH_OUT=/tmp/sweep_sf01.json sbt "runMain graft.Bench"
+  SPARK_GRAFT_SF_DIR=<repo>/bench_sf1 SPARK_GRAFT_REPS=1 \
+    SPARK_GRAFT_BENCH_OUT=/tmp/sweep_sf1.json sbt "runMain graft.Bench"
+  python3 tools/sf1_sweep.py /tmp/sweep_sf01.json /tmp/sweep_sf1.json
 
-TimeQ runs on SPARK_GRAFT_CPUS cores (every core when unset); set
-SPARK_GRAFT_CPUS=32 to reproduce BENCH_SF1.json's local[32] sweeps.
+Either argument may be a comma-separated list of Bench JSONs (several
+runs per side). Bench runs on SPARK_GRAFT_CPUS cores (every core when
+unset); set SPARK_GRAFT_CPUS=32 to reproduce BENCH_SF1.json's local[32]
+sweeps. Self-test: python3 tools/test_sf1_sweep.py
 """
-import json, re, sys, datetime, os
+import json, sys, datetime, os
 
 def parse(paths):
-    """Comma-separated TimeQ logs; per-query MIN across runs. One run
-    is hostage to a noisy-host window spanning its single shot (the
-    same discipline as Bench's min-of-2 — observed: unchanged-table
-    queries at 10x 'growth' in a run timed during a noise window,
-    back to ~1x under min-of-runs)."""
+    """Comma-separated Bench JSONs -> {query: seconds}, the per-query
+    MIN of `ledger.<q>.first_s` across runs. One run is hostage to a
+    noisy-host window spanning its single shot (the same discipline as
+    Bench's min of reps -- observed: unchanged-table queries at 10x
+    'growth' in a run timed during a noise window, back to ~1x under
+    min-of-runs). A query a run lists in `errors` is not timed by it."""
     out = {}
     for path in paths.split(","):
-        for line in open(path):
-            m = re.match(r"TIMEQ (\S+) rows=(\d+) sec=([0-9.]+)", line)
-            if m:
-                k = m.group(1)
-                cur = (int(m.group(2)), float(m.group(3)))
-                out[k] = cur if k not in out or cur[1] < out[k][1] else out[k]
+        with open(path) as f:
+            doc = json.load(f)
+        failed = set(doc.get("errors", []))
+        for k, row in doc.get("ledger", {}).items():
+            s = row.get("first_s")
+            if k in failed or s is None:
+                continue
+            out[k] = min(s, out.get(k, s))
     return out
 
 BOUND = 12.0  # linear-plus-overhead at 10x documents
@@ -70,19 +79,20 @@ OUTLIER_NOTES = {
         "regressed or the corpus shape changed."),
 }
 
-def main():
-    a, b = parse(sys.argv[1]), parse(sys.argv[2])
+def sweep(a, b):
+    """The BENCH_SF1.json document for seconds maps `a` (sf0.1) and `b`
+    (bench_sf1); a query timed at only one scale is skipped."""
     qs, outliers = {}, []
     for name in sorted(a):
         if name not in b:
             continue
-        s01, s1 = a[name][1], b[name][1]
+        s01, s1 = a[name], b[name]
         growth = round(s1 / s01, 2) if s01 > 0 else None
         qs[name] = {"sf0.1_sec": round(s01, 3), "sf1_sec": round(s1, 3),
                     "growth_x": growth}
         if growth and growth > BOUND:
             outliers.append(name)
-    doc = {
+    return {
         "metric": "sf1_scaling_checkpoint",
         "what": ("measured wall-clock growth of EVERY registered query when "
                  "the documents table grows 10x (sf0.1 -> bench_sf1, 5k -> 50k "
@@ -90,8 +100,9 @@ def main():
                  "adversarial case for candidate generation; non-document "
                  "tables unchanged, so relational queries measure harness "
                  "noise around 1x). Generated by tools/gen_sf1.py; timed by "
-                 "graft.tools.TimeQ ALL, per-query MIN across runs (comma-"
-                 "separated logs per side), single JVM per run, local[32]; "
+                 "graft.Bench at SPARK_GRAFT_REPS=1 (ledger first_s: one cold "
+                 "build + count), per-query MIN across runs (comma-separated "
+                 "Bench JSONs per side), single JVM per run, local[32]; "
                  "reduced by tools/sf1_sweep.py."),
         "bound": f"document-reading queries must grow <= {BOUND}x "
                  "(linear-plus-overhead); outliers listed explicitly",
@@ -101,6 +112,10 @@ def main():
         "queries": qs,
         "date": datetime.date.today().isoformat(),
     }
+
+def main():
+    doc = sweep(parse(sys.argv[1]), parse(sys.argv[2]))
+    qs, outliers = doc["queries"], doc["outliers_over_bound"]
     dst = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                        "BENCH_SF1.json")
     with open(dst, "w") as f:
