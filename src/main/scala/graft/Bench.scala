@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
 
   /** One query's measurement: `sec` is the min-of-reps build + count
-    * wall, `bytes` the last rep's run (shuffle/spill bytes), `staged`
+    * wall, `bytes` the last rep's run (its shuffle/spill bytes, which
+    * host noise does not move as it moves wall-clock), `staged`
     * whether the first rep paid a one-time `Memo` build, `ledger` the
     * per-query layer fields, `error` the first failure of any rep. */
   final case class Measured(sec: Double, bytes: QueryRun, staged: Boolean,
